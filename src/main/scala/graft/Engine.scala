@@ -893,10 +893,25 @@ object Engine {
     * broadcast either way). Past the gate the probe falls back loudly
     * to the shuffled history attach — see the probe body's rationale.
     * Overridable via `-Dgraft.probeBroadcastMaxCands` (the
-    * [[verifyBroadcastMaxDocs]] test/ops discipline). */
-  def probeBroadcastMaxCands: Long =
-    sys.props.get("graft.probeBroadcastMaxCands").map(_.toLong)
-      .getOrElse(1000000L)
+    * [[verifyBroadcastMaxDocs]] test/ops discipline; 0 forces the
+    * shuffled attach). */
+  def probeBroadcastMaxCands: Long = ProbeBroadcastMaxCands.value
+  private[graft] val ProbeBroadcastMaxCands = Knob("probeBroadcastMaxCands",
+    default = 1000000L, min = 0L, max = Long.MaxValue)
+
+  /** An integral `-Dgraft.<name>` override, validated where it is read:
+    * unset is `default`, anything outside [min, max] fails naming the
+    * knob — a silently accepted 0 slice count would turn q92f into a
+    * no-op. */
+  private[graft] final case class Knob(name: String, default: Long,
+      min: Long, max: Long = Int.MaxValue) {
+    def parse(raw: Option[String]): Long = raw.fold(default) { v =>
+      v.trim.toLongOption.filter(n => n >= min && n <= max).getOrElse(
+        throw new IllegalArgumentException(
+          s"-Dgraft.$name=$v: expected an integer in [$min, $max]"))
+    }
+    def value: Long = parse(sys.props.get(s"graft.$name"))
+  }
 
   /** PRODUCT-QUANTIZATION encode: split each embedding into `blocks`
     * contiguous sub-vectors and assign every block the id of its nearest
@@ -2003,163 +2018,237 @@ object Engine {
     .filter(size(col("__sv")) >= 1)
     .select(col(id).as("__id"), col("__sv"))
 
-  /** PERSISTED banded-MinHash dedup index — the incremental-maintenance
-    * contract [[minHashJoinAcross]]'s Scaladoc promises, made a real
-    * artifact (the q99g/q99h IVF-index discipline applied to dedup):
-    * the standing corpus's banded signature table and its shingle
-    * arrays land once as parquet under `path` (`bands/` for the
-    * (band, bandhash, doc) probe table, `docs/` for exact-verify
-    * arrays), [[appendMinHashIndex]] adds each day's accepted docs
-    * WITHOUT touching existing rows, and [[searchMinHashIndex]] probes
-    * with a new batch and returns exactly what a fresh
-    * [[minHashJoinAcross]] over (batch, full history) would — same hash
-    * family, same verification kernel.
+  /** Storage form of a PERSISTED banded-MinHash dedup index — the
+    * incremental-maintenance contract [[minHashJoinAcross]]'s Scaladoc
+    * promises, made a real artifact: the standing corpus's banded
+    * signature table `bands` (doc_id, __band, __bh — the probe table)
+    * and its shingle arrays `docs` (doc_id, grams — the exact-verify
+    * side) are written once, appended per ingest slot WITHOUT touching
+    * existing rows, probed with a new batch and compacted in place.
+    * Build, append, probe, compaction and the ingest loop are written
+    * ONCE over this type; a case decides only storage:
     *
-    * Scale notes: the bands table is `bands` 16-byte rows per doc —
-    * ~1 KB/doc at 64×16 — so a 10-billion-doc history is a ~10 TB
-    * probe table read ONCE per batch via an equi-join on
-    * (band, bandhash); sorting within files by that key (done here)
-    * gives parquet min/max row-group skipping on the probe join's
-    * build side, and a production deployment would bucket the table on
-    * the join key (saveAsTable + bucketBy) to make the history side
-    * shuffle-free — path-based parquet cannot carry bucket metadata,
-    * which is a catalog property, not an engine limit. Appends are new
-    * files only (A15/A16 layout discipline: never rewrite history). */
-  def buildMinHashIndex(corpus: DataFrame, id: String, text: String,
-      path: String, numHashes: Int = 64, bands: Int = 16,
-      ngramWords: Int = 2): Unit =
-    writeMinHashIndex(corpus, id, text, path, numHashes, bands,
-      ngramWords, overwrite = true)
-
-  /** Append a delta corpus to an existing [[buildMinHashIndex]] index:
-    * new parquet files under the same layout, existing rows untouched —
-    * appending 0.1% of the history must not rewrite the other 99.9%.
-    * Caller contract: delta ids are NEW (an id already indexed would
-    * produce duplicate candidate rows; dedup upstream, or route
-    * re-crawls through the exact [[exactDedup]] pass first). */
-  def appendMinHashIndex(delta: DataFrame, id: String, text: String,
-      path: String, numHashes: Int = 64, bands: Int = 16,
-      ngramWords: Int = 2): Unit =
-    writeMinHashIndex(delta, id, text, path, numHashes, bands,
-      ngramWords, overwrite = false)
-
-  private def writeMinHashIndex(df: DataFrame, id: String, text: String,
-      path: String, numHashes: Int, bands: Int, ngramWords: Int,
-      overwrite: Boolean): Unit =
-    writeMinHashIndexDocs(
-      minHashDocTable(df, id, text, ngramWords).persistOnce(),
-      path, numHashes, bands, overwrite)
-
-  /** Index write over an already-built (__id, __sv) doc table — the
-    * other half of the [[probeMinHashIndexDocs]] hash-once seam. */
-  private def writeMinHashIndexDocs(docs: DataFrame, path: String,
-      numHashes: Int, bands: Int, overwrite: Boolean): Unit = {
-    val mode = if (overwrite) "overwrite" else "append"
-    inParallel(
-    minHashBandTable(docs, "doc_id", numHashes, bands)
-      // file-local sort on the probe key: row-group min/max skipping
-      .sortWithinPartitions("__band", "__bh")
-      .write.mode(mode).parquet(s"$path/bands"),
-    docs.select(col("__id").as("doc_id"), col("__sv").as("grams"))
-      .write.mode(mode).parquet(s"$path/docs"))
+    *  - [[PathIndex]] — path parquet under `path/bands`, `path/docs`,
+    *    appends sorted within files on the probe key (row-group min/max
+    *    skipping), no maintenance after an append.
+    *  - [[BucketedIndex]] — catalog tables `<table>_bands` /
+    *    `<table>_docs` written by an aligned `bucketBy`, so a probe's
+    *    history side is exchange-free by PLAN, with the
+    *    [[bucketCompactMaxFiles]] compaction cadence after each append.
+    *
+    * Compaction temps are named by `at(sub, "compact")` /
+    * `at(sub, "trash")` — `__compact_<sub>` / `__trash_<sub>` beside
+    * the live table. */
+  private sealed trait DedupIndex {
+    /** live name of table `sub`, or of its compaction `stage` temp */
+    def at(sub: String, stage: String = ""): String
+    def read(sub: String): DataFrame
+    /** whether the probe pins its ids-only candidate broadcast (see
+      * [[probeIndex]]) */
+    def pinsProbe: Boolean
+    /** build (`overwrite`) or append both tables */
+    def write(bandRows: => DataFrame, docRows: => DataFrame,
+        overwrite: Boolean): Unit
+    /** maintenance the ingest loop runs after each append */
+    def afterAppend(): Unit
+    // compaction-swap primitives over a named table
+    def exists(name: String): Boolean
+    def rewrite(from: String, to: String, keys: Seq[String]): Unit
+    def rename(from: String, to: String): Unit
+    def remove(name: String): Unit
+    def refresh(name: String): Unit
   }
 
-  /** COMPACT a [[buildMinHashIndex]] index in place: each append lands
-    * as new files, so a long-lived index accumulates one small-file
-    * wave per ingest slot and loses the in-file probe-key clustering
-    * that makes row-group skipping work; compaction rewrites each
-    * table RANGE-CLUSTERED on its key (bands on (__band, __bh), docs
-    * on doc_id) into `files` sorted files — strictly better layout
-    * than the original build (globally range-partitioned, not just
-    * sorted within arbitrary partitions). Rows are untouched: a
-    * post-compaction probe is bit-identical (spec'd). Swap discipline:
-    * the rewrite lands in a sibling temp dir, the live dir moves to a
-    * trash name, temp renames in, trash deletes — a crash leaves
-    * either the old or the new table readable, never neither (the A16
-    * atomic-rename idea; directory rename is the atom on HDFS-like
-    * stores). Size `files` to table volume / healthy-scan-partition at
-    * deployment. */
-  def compactMinHashIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, files: Int = 8): Unit = {
-    require(files >= 1)
-    val conf = spark.sparkContext.hadoopConfiguration
-    def swap(sub: String, keys: Seq[String]): Unit = {
-      val src = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/__compact_$sub")
-      val trash = new org.apache.hadoop.fs.Path(s"$path/__trash_$sub")
-      val fs = src.getFileSystem(conf)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      if (fs.exists(trash)) fs.delete(trash, true)
-      spark.read.parquet(src.toString)
-        .repartitionByRange(files, keys.map(col): _*)
-        .sortWithinPartitions(keys.map(col): _*)
-        .write.mode("overwrite").parquet(tmp.toString)
-      require(fs.rename(src, trash) && fs.rename(tmp, src),
-        s"compactMinHashIndex: swap failed for $src")
-      fs.delete(trash, true): Unit
-      // The rename swap changes the directory's files WITHOUT going
-      // through a DataFrameWriter, so nothing invalidates the session's
-      // cached plans/file listings for this path — a persisted plan
-      // built over the pre-compaction read (sameResult matches on the
-      // path) can later recompute against files the swap deleted:
-      // FAILED_READ_FILE.FILE_NOT_EXIST, seen once in the r16 baseline
-      // bench on q90t's second pass. Writers do this invalidation
-      // implicitly (InsertIntoHadoopFsRelationCommand refreshes the
-      // output path); a rename must do it explicitly.
-      spark.catalog.refreshByPath(src.toString)
+  /** clustering key of each index table — the key it is probed,
+    * bucketed and compacted on */
+  private val BandKeys = Seq("__band", "__bh")
+  private val DocKeys = Seq("doc_id")
+
+  /** Path-parquet dedup index. Path-based parquet cannot carry bucket
+    * metadata (a catalog property, not an engine limit), so the probe
+    * table is only sorted within files; compaction rewrites each table
+    * range-clustered on its key into `compactFiles` files. */
+  private final case class PathIndex(spark: org.apache.spark.sql.SparkSession,
+      path: String, compactFiles: Int = 8) extends DedupIndex {
+    require(compactFiles >= 1)
+    private def fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def at(sub: String, stage: String = ""): String =
+      if (stage.isEmpty) s"$path/$sub" else s"$path/__${stage}_$sub"
+    def read(sub: String): DataFrame = spark.read.parquet(at(sub))
+    def pinsProbe: Boolean = true
+    def write(bandRows: => DataFrame, docRows: => DataFrame,
+        overwrite: Boolean): Unit = {
+      val mode = if (overwrite) "overwrite" else "append"
+      inParallel(
+        // file-local sort on the probe key: row-group min/max skipping
+        bandRows.sortWithinPartitions(BandKeys.map(col): _*)
+          .write.mode(mode).parquet(at("bands")),
+        docRows.write.mode(mode).parquet(at("docs")))
     }
-    // the two tables' rewrites touch disjoint dirs — overlap them
-    // (guide §2.6); each swap's internal order is unchanged
-    inParallel(
-      swap("bands", Seq("__band", "__bh")),
-      swap("docs", Seq("doc_id")))
+    def afterAppend(): Unit = ()
+    def exists(name: String): Boolean =
+      fs.exists(new org.apache.hadoop.fs.Path(name))
+    def rewrite(from: String, to: String, keys: Seq[String]): Unit =
+      spark.read.parquet(from)
+        .repartitionByRange(compactFiles, keys.map(col): _*)
+        .sortWithinPartitions(keys.map(col): _*)
+        .write.mode("overwrite").parquet(to)
+    def rename(from: String, to: String): Unit =
+      require(fs.rename(new org.apache.hadoop.fs.Path(from),
+        new org.apache.hadoop.fs.Path(to)), s"rename $from -> $to failed")
+    def remove(name: String): Unit =
+      if (exists(name))
+        fs.delete(new org.apache.hadoop.fs.Path(name), true): Unit
+    // a rename is not a writer, so nothing else invalidates the
+    // session's cached listings for this path — a persisted plan over
+    // the pre-swap read can later recompute against files the swap
+    // deleted (FAILED_READ_FILE.FILE_NOT_EXIST, seen once in the r16
+    // baseline bench on q90t's second pass)
+    def refresh(name: String): Unit = spark.catalog.refreshByPath(name)
   }
 
-  /** Probe a persisted [[buildMinHashIndex]] index with a new batch:
-    * (left_id = batch doc, right_id = indexed doc, jaccard ≥ pct/100) —
-    * result-identical to [[minHashJoinAcross]](batch, history) by
-    * construction (same seeded-xxhash64 family, same banding, same
-    * exact sorted-merge verification), with history-side hashing
-    * amortized to ZERO: only the batch is shingled and hashed here. */
-  def searchMinHashIndex(batch: DataFrame, id: String, text: String,
-      path: String, thresholdPct: Int = 60, numHashes: Int = 64,
-      bands: Int = 16, ngramWords: Int = 2): DataFrame = {
-    val spark = batch.sparkSession
-    probeMinHashIndex(batch, id, text,
-      spark.read.parquet(s"$path/bands"),
-      spark.read.parquet(s"$path/docs"),
-      thresholdPct, numHashes, bands, ngramWords,
-      pinCandidateBroadcast = true)
+  /** Bucketed-catalog dedup index: both tables land via
+    * `bucketBy(...).saveAsTable`, `<table>_bands` bucketed+sorted on
+    * the probe key and `<table>_docs` on doc_id, so a probe exchanges
+    * NOTHING on the history side (PlanSpec q90q/q90y). `numBuckets` is
+    * the standing parallelism of the history side — size it to history
+    * volume / healthy-scan-partition at deployment, not to the batch. */
+  private final case class BucketedIndex(
+      spark: org.apache.spark.sql.SparkSession, table: String,
+      numBuckets: Int = 8) extends DedupIndex {
+    require(numBuckets >= 1)
+    def at(sub: String, stage: String = ""): String =
+      if (stage.isEmpty) s"${table}_$sub" else s"${table}__${stage}_$sub"
+    def read(sub: String): DataFrame = spark.table(at(sub))
+    // an explicit broadcast hint would mask the structural SMJ
+    def pinsProbe: Boolean = false
+    /** Each side is REPARTITIONED onto its bucket key into exactly
+      * `numBuckets` partitions before the write: `repartition(n, keys)`
+      * is the same Murmur3 `pmod(hash, n)` placement the bucket spec
+      * uses, so every write task holds one bucket and emits ONE file.
+      * Without it a 32-partition append landed up to 32 files in EVERY
+      * bucket (INGEST_PROFILE.json's 1.3→4.3 s probe curve was mostly
+      * this). A build drops the tables AND their managed locations
+      * first — an in-memory catalog forgets a table between JVMs but
+      * its location survives, and CREATE then fails with
+      * LOCATION_ALREADY_EXISTS. */
+    def write(bandRows: => DataFrame, docRows: => DataFrame,
+        overwrite: Boolean): Unit = {
+      val mode = if (overwrite) "overwrite" else "append"
+      if (overwrite) Seq("bands", "docs").foreach(t => remove(at(t)))
+      inParallel(save(bandRows, at("bands"), BandKeys, mode),
+        save(docRows, at("docs"), DocKeys, mode))
+    }
+    private def save(df: DataFrame, name: String, keys: Seq[String],
+        mode: String): Unit =
+      df.repartition(numBuckets, keys.map(col): _*)
+        .write.mode(mode)
+        .bucketBy(numBuckets, keys.head, keys.tail: _*)
+        .sortBy(keys.head, keys.tail: _*)
+        .format("parquet").saveAsTable(name)
+    // each append adds one file per bucket, and the probe's listing +
+    // file-open cost grows with that count; folding each bucket back to
+    // one sorted file every [[bucketCompactMaxFiles]] appends holds the
+    // probe flat (INGEST_PROFILE.json: ~0.95 s/slot over 31 appends)
+    def afterAppend(): Unit =
+      maybeCompactBucketedIndex(spark, table, numBuckets): Unit
+    def exists(name: String): Boolean = spark.catalog.tableExists(name)
+    // read the table's FILES as plain parquet, not spark.table: the
+    // bucketed scan advertises HashPartitioning(keys, numBuckets), so
+    // the planner ELIDES the aligning repartition while the scan runs
+    // one partition per FILE — the rewrite would then compact nothing
+    def rewrite(from: String, to: String, keys: Seq[String]): Unit =
+      save(spark.read.parquet(spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(from)).location
+        .toString), to, keys, "errorifexists")
+    def rename(from: String, to: String): Unit =
+      spark.sql(s"ALTER TABLE `$from` RENAME TO `$to`"): Unit
+    def remove(name: String): Unit = dropManagedTable(spark, name)
+    def refresh(name: String): Unit = spark.catalog.refreshTable(name)
   }
 
-  /** Shared probe body of [[searchMinHashIndex]] /
-    * [[searchMinHashIndexBucketed]] — the two differ ONLY in where the
-    * history tables come from (path parquet vs bucketed catalog), so
-    * the probe semantics cannot drift between them. */
-  private def probeMinHashIndex(batch: DataFrame, id: String,
-      text: String, bandsTbl: DataFrame, docsTbl: DataFrame,
-      thresholdPct: Int, numHashes: Int, bands: Int,
-      ngramWords: Int, pinCandidateBroadcast: Boolean): DataFrame =
-    probeMinHashIndexDocs(
-      minHashDocTable(batch, id, text, ngramWords).persistOnce(),
-      bandsTbl, docsTbl, thresholdPct, numHashes, bands,
-      pinCandidateBroadcast)
+  private def dropManagedTable(
+      spark: org.apache.spark.sql.SparkSession, t: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS `$t`")
+    val loc = new org.apache.hadoop.fs.Path(
+      spark.sessionState.catalog.defaultTablePath(
+        org.apache.spark.sql.catalyst.TableIdentifier(t)))
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(loc)) fs.delete(loc, true): Unit
+  }
 
-  /** Probe body over an ALREADY-BUILT (and persisted) batch doc table —
-    * the seam the ingest loops use to hash each batch exactly ONCE per
-    * slot: the same (__id, __sv) table feeds the probe here and the
-    * accepted-survivor index append ([[writeMinHashIndexDocs]]), where
-    * before r16 the append re-shingled and re-hashed the survivors from
-    * the frozen text file (~40% of every slot's CPU, per
-    * INGEST_PROFILE.json's append walls). Hash values are deterministic
-    * in the text, so reuse is value-identical. */
-  private def probeMinHashIndexDocs(dl: DataFrame,
-      bandsTbl: DataFrame, docsTbl: DataFrame,
-      thresholdPct: Int, numHashes: Int, bands: Int,
-      pinCandidateBroadcast: Boolean): DataFrame = {
+  /** Build or append an index from a raw (id, text) frame. Appends are
+    * new files only (A15/A16 layout discipline: never rewrite history),
+    * and the caller contract is that appended ids are NEW (an id
+    * already indexed would produce duplicate candidate rows; dedup
+    * upstream, or route re-crawls through [[exactDedup]] first). */
+  private def writeIndex(ix: DedupIndex, df: DataFrame, id: String,
+      text: String, numHashes: Int, bands: Int, ngramWords: Int,
+      overwrite: Boolean): Unit = {
+    val docs = minHashDocTable(df, id, text, ngramWords).persistOnce()
+    ix.write(minHashBandTable(docs, "doc_id", numHashes, bands),
+      docs.select(col("__id").as("doc_id"), col("__sv").as("grams")),
+      overwrite)
+  }
+
+  /** The one compaction swap. Each append lands as new files, so a
+    * long-lived index accumulates one small-file wave per ingest slot
+    * and pays probe listing + per-file open cost for it; compaction
+    * rewrites each table clustered on its key. Rows are untouched: a
+    * post-compaction probe is bit-identical (spec'd).
+    *
+    * Per table: rewrite `live` into `__compact`, rename live →
+    * `__trash`, rename `__compact` → live, drop trash, refresh. A
+    * directory or catalog rename is the atom, so a crash leaves one of
+    * three states, and entry recovers each before doing anything else:
+    *  - live present — at most stale temps (a crash during the rewrite,
+    *    or after rename 2): they are dropped;
+    *  - live missing, `__compact` present — a crash between the two
+    *    renames; `__compact` is complete because rename 1 only runs
+    *    after the rewrite finished, so roll FORWARD by renaming it in;
+    *  - live missing, no `__compact` — roll BACK by renaming `__trash`
+    *    in.
+    * Readers racing the swap can still miss the live table inside the
+    * rename window; the index is a single-writer structure. */
+  private def compactIndex(ix: DedupIndex): Unit = {
+    def swap(sub: String, keys: Seq[String]): Unit = {
+      val (live, tmp, trash) =
+        (ix.at(sub), ix.at(sub, "compact"), ix.at(sub, "trash"))
+      if (!ix.exists(live)) {
+        val from = if (ix.exists(tmp)) tmp else trash
+        require(ix.exists(from),
+          s"compaction: $live is missing and there is no $tmp or $trash " +
+            "to recover it from")
+        ix.rename(from, live)
+        ix.refresh(live)
+      }
+      Seq(tmp, trash).foreach(ix.remove)
+      ix.rewrite(live, tmp, keys)
+      ix.rename(live, trash)
+      ix.rename(tmp, live)
+      ix.remove(trash)
+      ix.refresh(live)
+    }
+    // the two tables touch disjoint names — overlap the rewrites (guide
+    // §2.6); each swap's internal order is unchanged
+    inParallel(swap("bands", BandKeys), swap("docs", DocKeys))
+  }
+
+  /** Probe an index with a new batch: (left_id = batch doc, right_id =
+    * indexed doc, jaccard ≥ pct/100) — result-identical to
+    * [[minHashJoinAcross]](batch, history) by construction (same
+    * seeded-xxhash64 family, same banding, same exact sorted-merge
+    * verification), with history-side hashing amortized to ZERO: only
+    * the batch is shingled and hashed here. Both storage forms share
+    * this body, so their probe semantics cannot drift. */
+  private def probeIndex(ix: DedupIndex, batch: DataFrame, id: String,
+      text: String, thresholdPct: Int, numHashes: Int, bands: Int,
+      ngramWords: Int): DataFrame = {
     require(thresholdPct >= 1 && thresholdPct <= 100)
-    val spark = dl.sparkSession
-    graft.plans.SortedIntersectCount.register(spark)
+    val (bandsTbl, docsTbl) = (ix.read("bands"), ix.read("docs"))
+    val dl = minHashDocTable(batch, id, text, ngramWords).persistOnce()
+    graft.plans.SortedIntersectCount.register(batch.sparkSession)
     // the batch-side band table is bands × |batch| rows — the bounded
     // side by the incremental contract, so pin the broadcast (the q90d
     // rationale: AQE size estimates flap on freshly-derived tables)
@@ -2180,16 +2269,15 @@ object Engine {
     // to index size), but it is an ADAPTIVE outcome: a dup-burst
     // batch whose candidates overflow the size estimate re-plans
     // into a shuffle of the FULL history docs table. So the path
-    // caller PINS the ids-only candidate broadcast behind an explicit
+    // index PINS the ids-only candidate broadcast behind an explicit
     // count gate (the verifyBroadcastMaxDocs discipline): under the
     // gate, history grams stream through a broadcast hash join and
     // never ride an exchange; past it, fall back LOUDLY to the
     // shuffled attach — at deployment scale that regime belongs on
     // the BUCKETED index, whose clustering makes the exchange-free
     // history side a plan property no re-plan can undo (q90q/q90y
-    // pins — which is also why the bucketed caller does NOT pin:
-    // an explicit broadcast hint would mask the structural SMJ).
-    val pinned = pinCandidateBroadcast && {
+    // pins — which is also why the bucketed index does NOT pin).
+    val pinned = ix.pinsProbe && {
       val nCands = cands.persistOnce().count()
       val ok = nCands <= probeBroadcastMaxCands
       if (!ok) Console.err.println(
@@ -2218,115 +2306,70 @@ object Engine {
       .select("left_id", "right_id", "jaccard")
   }
 
-  /** BUCKETED-CATALOG form of the persisted dedup index — the
-    * zero-exchange-history promise of [[buildMinHashIndex]]'s Scaladoc
-    * made a PLAN property instead of prose (the q99g promotion, applied
-    * here): both history tables land via `bucketBy(...).saveAsTable`
-    * (bucket metadata is a CATALOG property — path parquet cannot carry
-    * it, which is why [[buildMinHashIndex]] can only sort within
-    * files), `<table>_bands` bucketed+sorted on the probe key
-    * (__band, __bh) and `<table>_docs` bucketed+sorted on doc_id. A
-    * [[searchMinHashIndexBucketed]] probe then exchanges NOTHING on the
-    * history side: the bands probe streams history through the
-    * broadcast-batch join, and the verify attach reads doc buckets
-    * already clustered on the join key — only the (bounded) candidate
-    * set shuffles, sized to match the bucket count. At a 10-billion-doc
-    * history that is the difference between re-shuffling ~10 TB of
-    * signatures per daily batch and reading them in place
-    * (PlanSpec-asserted: no ShuffleExchange anywhere above a history
-    * scan). `numBuckets` is the standing parallelism of the history
-    * side — size it to history volume / healthy-scan-partition at
-    * deployment, not to the batch. */
+  /** Build a [[PathIndex]] under `path` (overwriting). Scale notes: the
+    * bands table is `bands` 16-byte rows per doc — ~1 KB/doc at 64×16 —
+    * so a 10-billion-doc history is a ~10 TB probe table read ONCE per
+    * batch via an equi-join on (band, bandhash). */
+  def buildMinHashIndex(corpus: DataFrame, id: String, text: String,
+      path: String, numHashes: Int = 64, bands: Int = 16,
+      ngramWords: Int = 2): Unit =
+    writeIndex(PathIndex(corpus.sparkSession, path), corpus, id, text,
+      numHashes, bands, ngramWords, overwrite = true)
+
+  /** Append a delta corpus to a [[buildMinHashIndex]] index: new parquet
+    * files under the same layout, existing rows untouched — appending
+    * 0.1% of the history must not rewrite the other 99.9%. */
+  def appendMinHashIndex(delta: DataFrame, id: String, text: String,
+      path: String, numHashes: Int = 64, bands: Int = 16,
+      ngramWords: Int = 2): Unit =
+    writeIndex(PathIndex(delta.sparkSession, path), delta, id, text,
+      numHashes, bands, ngramWords, overwrite = false)
+
+  /** COMPACT a [[buildMinHashIndex]] index in place through the shared
+    * crash-recoverable swap ([[compactIndex]]): each table is rewritten
+    * RANGE-CLUSTERED on its key (bands on (__band, __bh), docs on
+    * doc_id) into `files` sorted files — strictly better layout than
+    * the original build. Size `files` to table volume /
+    * healthy-scan-partition at deployment. */
+  def compactMinHashIndex(spark: org.apache.spark.sql.SparkSession,
+      path: String, files: Int = 8): Unit =
+    compactIndex(PathIndex(spark, path, files))
+
+  /** Probe a [[buildMinHashIndex]] index (see [[probeIndex]]). */
+  def searchMinHashIndex(batch: DataFrame, id: String, text: String,
+      path: String, thresholdPct: Int = 60, numHashes: Int = 64,
+      bands: Int = 16, ngramWords: Int = 2): DataFrame =
+    probeIndex(PathIndex(batch.sparkSession, path), batch, id, text,
+      thresholdPct, numHashes, bands, ngramWords)
+
+  /** Build a [[BucketedIndex]] as catalog tables `<table>_bands` /
+    * `<table>_docs` (dropping any previous ones): the
+    * zero-exchange-history promise made a PLAN property (the q99g
+    * promotion) — at a 10-billion-doc history that is the difference
+    * between re-shuffling ~10 TB of signatures per daily batch and
+    * reading them in place. */
   def buildMinHashIndexBucketed(corpus: DataFrame, id: String,
       text: String, table: String, numBuckets: Int = 8,
-      numHashes: Int = 64, bands: Int = 16, ngramWords: Int = 2): Unit = {
-    require(numBuckets >= 1)
-    dropBucketedIndexTables(corpus.sparkSession, table)
-    writeMinHashIndexBucketedDocs(
-      minHashDocTable(corpus, id, text, ngramWords).persistOnce(),
-      table, numBuckets, numHashes, bands, overwrite = true)
-  }
+      numHashes: Int = 64, bands: Int = 16, ngramWords: Int = 2): Unit =
+    writeIndex(BucketedIndex(corpus.sparkSession, table, numBuckets),
+      corpus, id, text, numHashes, bands, ngramWords, overwrite = true)
 
-  /** Drop a bucketed index's tables AND their managed locations —
-    * rebuild must be a true overwrite even across JVMs: an in-memory
-    * catalog forgets the table between runs but its managed LOCATION
-    * survives in the warehouse dir, and CREATE then fails with
-    * LOCATION_ALREADY_EXISTS. */
-  private def dropBucketedIndexTables(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit =
-    Seq(s"${table}_bands", s"${table}_docs")
-      .foreach(dropManagedTable(spark, _))
-
-  private def dropManagedTable(
-      spark: org.apache.spark.sql.SparkSession, t: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$t`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(t)))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true): Unit
-  }
-
-  /** COMPACT a [[buildMinHashIndexBucketed]] index in place: fold each
-    * bucket's accumulated append files back to ONE sorted file per
-    * bucket — [[compactMinHashIndex]]'s discipline (q90t) for the
-    * catalog form. Each append lands one new file per bucket (the
-    * aligned write above), so a long-lived bucketed index pays probe
-    * file-listing + per-file open cost that grows linearly with append
-    * count until compacted (INGEST_PROFILE's bucketed arm measured the
-    * probe wall 3×ing across 31 appends from exactly this). Rows and
-    * bucket spec are untouched: a post-compaction probe is
-    * result-identical and keeps the exchange-free history plan (the
-    * bucket clustering is re-asserted by the bucketed saveAsTable).
-    * Swap discipline: rewrite into a sibling `__compact` table, rename
-    * live → `__trash`, rename compact in, drop trash — the same
-    * either-old-or-new crash window as the path swap, with the catalog
-    * rename as the atom; `refreshTable` afterwards because a rename is
-    * not a writer and invalidates nothing by itself (the q90t
-    * FILE_NOT_EXIST lesson). */
+  /** COMPACT a [[buildMinHashIndexBucketed]] index in place through the
+    * shared swap ([[compactIndex]]), with the catalog rename as the
+    * atom: each bucket's accumulated append files fold back to ONE
+    * sorted file. Rows and bucket spec are untouched, so a
+    * post-compaction probe is result-identical and keeps the
+    * exchange-free history plan. */
   def compactBucketedIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, numBuckets: Int = 8): Unit = {
-    require(numBuckets >= 1)
-    def swapRewrite(sub: String, keys: Seq[String]): Unit = {
-      val t = s"${table}_$sub"
-      val tmp = s"${table}__compact_$sub"
-      val trash = s"${table}__trash_$sub"
-      // a crashed prior compaction can leave either behind
-      Seq(tmp, trash).foreach(dropManagedTable(spark, _))
-      // read the table's FILES as plain parquet, not spark.table(t): the
-      // bucketed scan advertises HashPartitioning(keys, numBuckets), so
-      // the planner ELIDES the aligning repartition below while the scan
-      // actually runs one partition per FILE — the rewrite then emits
-      // one file per (input file), compacting nothing (measured: a
-      // 2-file-per-bucket table "compacted" to 2 files per bucket). A
-      // path read carries no partitioning claim, so the exchange really
-      // runs and each write task holds exactly one whole bucket.
-      val loc = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(t)).location
-      spark.read.parquet(loc.toString)
-        .repartition(numBuckets, keys.map(col): _*)
-        .write.bucketBy(numBuckets, keys.head, keys.tail: _*)
-        .sortBy(keys.head, keys.tail: _*)
-        .format("parquet").saveAsTable(tmp)
-      spark.sql(s"ALTER TABLE `$t` RENAME TO `$trash`")
-      spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$t`")
-      dropManagedTable(spark, trash)
-      spark.catalog.refreshTable(t)
-    }
-    // disjoint tables — overlap the rewrites (guide §2.6); the catalog
-    // mutations (create/rename/drop) are on distinct identifiers and
-    // the session catalog serializes them internally
-    inParallel(
-      swapRewrite("bands", Seq("__band", "__bh")),
-      swapRewrite("docs", Seq("doc_id")))
-  }
+      table: String, numBuckets: Int = 8): Unit =
+    compactIndex(BucketedIndex(spark, table, numBuckets))
 
   /** Compaction CADENCE gate for the bucketed-index ingest loop: count
     * the bands table's data files on the filesystem (cheap — one
     * listStatus of ≤ buckets × appends entries, and the file count IS
     * the cost being bounded) and compact when the average per-bucket
     * file count exceeds `maxFilesPerBucket`. Returns whether it
-    * compacted, so a profiler can mark the sawtooth teeth. */
+    * compacted, so a caller can mark the sawtooth teeth. */
   def maybeCompactBucketedIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, numBuckets: Int = 8,
       maxFilesPerBucket: Int = bucketCompactMaxFiles): Boolean = {
@@ -2346,74 +2389,34 @@ object Engine {
 
   /** Default files-per-bucket compaction threshold for
     * [[maybeCompactBucketedIndex]] (`-Dgraft.bucketCompactMaxFiles`
-    * overrides). Deployment sizing: each append adds one file per
+    * overrides, ≥ 1). Deployment sizing: each append adds one file per
     * bucket, so the threshold is the append count between compactions —
     * pay one in-bucket rewrite every K appends to keep probe listing +
     * file-open cost bounded at K files/bucket instead of unbounded. */
-  def bucketCompactMaxFiles: Int =
-    sys.props.get("graft.bucketCompactMaxFiles").map(_.toInt).getOrElse(8)
-
-  /** Bucketed-index write over an already-built (__id, __sv) doc table
-    * — the [[writeMinHashIndexDocs]] seam for the catalog form.
-    *
-    * Each side is REPARTITIONED onto its bucket key into exactly
-    * `numBuckets` partitions before the write (r17, guide §6 small
-    * files / §2.2 fewer map tasks): `repartition(n, keys)` is the same
-    * Murmur3 `pmod(hash, n)` placement the bucket spec uses, so every
-    * write task holds exactly one bucket and emits ONE file. Without
-    * it the bucketed writer fans out one file per (input partition ×
-    * bucket) — a 32-partition append landed up to 32 files in EVERY
-    * bucket, and the probe's file-listing + per-file open cost grew
-    * with that product (the INGEST_PROFILE 1.3→4.3 s probe curve was
-    * mostly this, not genuine data growth). One aligned exchange of
-    * O(batch) rows buys a file count that grows one file per bucket
-    * per append — the layout the in-bucket compaction cadence
-    * ([[compactBucketedIndex]]) then folds back to one. */
-  private def writeMinHashIndexBucketedDocs(docs: DataFrame,
-      table: String, numBuckets: Int, numHashes: Int, bands: Int,
-      overwrite: Boolean): Unit = {
-    require(numBuckets >= 1)
-    val mode = if (overwrite) "overwrite" else "append"
-    inParallel(
-    minHashBandTable(docs, "doc_id", numHashes, bands)
-      .repartition(numBuckets, col("__band"), col("__bh"))
-      .write.mode(mode)
-      .bucketBy(numBuckets, "__band", "__bh").sortBy("__band", "__bh")
-      .format("parquet").saveAsTable(s"${table}_bands"),
-    docs.select(col("__id").as("doc_id"), col("__sv").as("grams"))
-      .repartition(numBuckets, col("doc_id"))
-      .write.mode(mode)
-      .bucketBy(numBuckets, "doc_id").sortBy("doc_id")
-      .format("parquet").saveAsTable(s"${table}_docs"))
-  }
+  def bucketCompactMaxFiles: Int = BucketCompactMaxFiles.value.toInt
+  private[graft] val BucketCompactMaxFiles =
+    Knob("bucketCompactMaxFiles", 8, min = 1)
 
   /** Append a delta corpus into a [[buildMinHashIndexBucketed]] index:
     * new files only, placed into their buckets (Spark routes appended
     * rows by the table's bucket spec, so the clustering contract — and
-    * the exchange-free probe — survives the append; buckets simply gain
-    * one file per append, which a periodic in-bucket compaction folds
-    * back to one sorted file). Same caller contract as
-    * [[appendMinHashIndex]]: delta ids are NEW. */
+    * the exchange-free probe — survives the append). Same caller
+    * contract as [[appendMinHashIndex]]: delta ids are NEW. */
   def appendMinHashIndexBucketed(delta: DataFrame, id: String,
       text: String, table: String, numBuckets: Int = 8,
       numHashes: Int = 64, bands: Int = 16, ngramWords: Int = 2): Unit =
-    writeMinHashIndexBucketedDocs(
-      minHashDocTable(delta, id, text, ngramWords).persistOnce(),
-      table, numBuckets, numHashes, bands, overwrite = false)
+    writeIndex(BucketedIndex(delta.sparkSession, table, numBuckets),
+      delta, id, text, numHashes, bands, ngramWords, overwrite = false)
 
   /** Probe a [[buildMinHashIndexBucketed]] index: result-identical to
-    * [[searchMinHashIndex]] over the same corpus (same shared probe
-    * body), with the history side exchange-free by bucket clustering. */
+    * [[searchMinHashIndex]] over the same corpus (same probe body), with
+    * the history side exchange-free by bucket clustering. */
   def searchMinHashIndexBucketed(batch: DataFrame, id: String,
       text: String, table: String, thresholdPct: Int = 60,
       numHashes: Int = 64, bands: Int = 16,
-      ngramWords: Int = 2): DataFrame = {
-    val spark = batch.sparkSession
-    probeMinHashIndex(batch, id, text,
-      spark.table(s"${table}_bands"), spark.table(s"${table}_docs"),
-      thresholdPct, numHashes, bands, ngramWords,
-      pinCandidateBroadcast = false)
-  }
+      ngramWords: Int = 2): DataFrame =
+    probeIndex(BucketedIndex(batch.sparkSession, table), batch, id, text,
+      thresholdPct, numHashes, bands, ngramWords)
 
   /** ONLINE corpus construction with an ACCUMULATING dedup index — the
     * production ingest loop the persisted index exists for: batches
@@ -2439,11 +2442,34 @@ object Engine {
     * only probes earlier survivors): route same-slot dedup through
     * [[minHashNearDups]]/[[exactDedup]] first. `batchOf` must be a
     * deterministic integral expression; batches run in ascending order.
-    * Returns the surviving (id, batch) pairs. */
+    * Returns the surviving (id, batch) pairs; `indexPath/accepted`
+    * holds them Hive-partitioned by batch. */
   def dedupIngest(docs: DataFrame, id: String, text: String,
       batchOf: Column, indexPath: String, thresholdPct: Int = 60,
       numHashes: Int = 64, bands: Int = 16,
-      ngramWords: Int = 2): DataFrame = {
+      ngramWords: Int = 2): DataFrame =
+    ingest(PathIndex(docs.sparkSession, indexPath), docs, id, text,
+      batchOf, indexPath, thresholdPct, numHashes, bands, ngramWords)
+
+  /** [[dedupIngest]] over the BUCKETED index `table`: the same loop,
+    * whose exchange-free history side is a PLAN guarantee (PlanSpec
+    * q90y) rather than the path index's gated broadcast, at the
+    * maintenance cost of one file per bucket per append that the
+    * in-bucket compaction cadence folds back. The two forms return
+    * identical survivor sets. `numBuckets` is the standing parallelism
+    * of the history side (see [[buildMinHashIndexBucketed]]). */
+  def dedupIngestBucketed(docs: DataFrame, id: String, text: String,
+      batchOf: Column, indexPath: String, table: String,
+      numBuckets: Int = 8, thresholdPct: Int = 60,
+      numHashes: Int = 64, bands: Int = 16,
+      ngramWords: Int = 2): DataFrame =
+    ingest(BucketedIndex(docs.sparkSession, table, numBuckets), docs, id,
+      text, batchOf, indexPath, thresholdPct, numHashes, bands, ngramWords)
+
+  /** The one ingest loop behind [[dedupIngest]] / [[dedupIngestBucketed]]. */
+  private def ingest(ix: DedupIndex, docs: DataFrame, id: String,
+      text: String, batchOf: Column, indexPath: String, thresholdPct: Int,
+      numHashes: Int, bands: Int, ngramWords: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     // bounded by the ingest-slot count — the one driver-side list the
@@ -2477,8 +2503,8 @@ object Engine {
       val kept0 =
         if (i == 0) batch
         else {
-          val dups = searchMinHashIndex(batch, id, text, indexPath,
-              thresholdPct, numHashes, bands, ngramWords)
+          val dups = probeIndex(ix, batch, id, text, thresholdPct,
+              numHashes, bands, ngramWords)
             .select(col("left_id").as(id)).distinct()
           batch.join(dups, Seq(id), "left_anti")
         }
@@ -2494,103 +2520,11 @@ object Engine {
       kept0.select(col(id), col(text))
         .write.mode("overwrite").parquet(s"$indexPath/accepted/batch=$b")
       val kept = spark.read.parquet(s"$indexPath/accepted/batch=$b")
-      if (i == 0)
-        buildMinHashIndex(kept, id, text, indexPath, numHashes, bands,
-          ngramWords)
-      else
-        appendMinHashIndex(kept, id, text, indexPath, numHashes, bands,
-          ngramWords)
+      writeIndex(ix, kept, id, text, numHashes, bands, ngramWords,
+        overwrite = i == 0)
+      if (i > 0) ix.afterAppend()
     }
     // partition discovery rehydrates the batch column from the layout
-    spark.read.parquet(s"$indexPath/accepted")
-      .select(col(id), col("batch").cast("long").as("batch"))
-  }
-
-  /** [[dedupIngest]] over the BUCKETED index — the ingest loop whose
-    * exchange-free history side is a PLAN guarantee (PlanSpec q90y)
-    * rather than an optimizer outcome. What INGEST_PROFILE.json
-    * actually measured (32 slots, fixed batch, 10× fixture) sharpened
-    * the story in both directions:
-    *
-    *  - the PATH-based loop's per-slot probe shuffle is flat
-    *    (~1.4 MB/slot, invariant to index size): the probe PINS an
-    *    ids-only candidate broadcast behind the
-    *    [[probeBroadcastMaxCands]] count gate (r16 — the flatness was
-    *    previously an ADAPTIVE outcome of AQE's size estimate, which
-    *    a dup-burst batch could silently re-plan into a full history
-    *    shuffle), so the history docs table streams without an
-    *    exchange up to the gate and the overflow regime announces
-    *    itself on stderr instead of regressing silently.
-    *  - THIS form makes the same property STRUCTURAL (bucket
-    *    clustering feeds the SMJ — no replan can shuffle history), at
-    *    a measured maintenance cost: each append adds one file per
-    *    bucket, and the profile's bucketed arm shows probe wall
-    *    growing 1.3 → 4.3 s across 31 appends from file-count
-    *    overhead alone — the in-bucket COMPACTION cadence
-    *    ([[compactMinHashIndex]]'s discipline, q90t) is what holds
-    *    the curve flat in deployment.
-    *
-    * Both arms' probe INPUT scan grows with the index (the documented
-    * read-once-per-batch columnar term); nothing is ever re-hashed.
-    * Same greedy earliest-wins semantics, same accepted/batch=<b>
-    * provenance layout, same point-in-time materialization discipline
-    * as [[dedupIngest]] — the two loops return identical survivor
-    * sets ([[searchMinHashIndexBucketed]] is result-identical to
-    * [[searchMinHashIndex]] by the shared probe body). `numBuckets`
-    * is the standing parallelism of the history side (see
-    * [[buildMinHashIndexBucketed]]). */
-  def dedupIngestBucketed(docs: DataFrame, id: String, text: String,
-      batchOf: Column, indexPath: String, table: String,
-      numBuckets: Int = 8, thresholdPct: Int = 60,
-      numHashes: Int = 64, bands: Int = 16,
-      ngramWords: Int = 2): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val batchIds = docs.select(batchOf.cast("long").as("__b"))
-      .distinct().orderBy(col("__b")).as[Long].collect()
-    // same rerun discipline as dedupIngest: clear the accepted tree so
-    // a prior run's partitions cannot surface as phantom survivors
-    // (the bucketed build below drops/overwrites its own tables)
-    locally {
-      val acc = new org.apache.hadoop.fs.Path(indexPath, "accepted")
-      val fs = acc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(acc)) fs.delete(acc, true)
-    }
-    batchIds.zipWithIndex.foreach { case (b, i) =>
-      val batch = docs.filter(batchOf.cast("long") === b)
-      // "hash once per slot" measured slower here too — see the
-      // dedupIngest note; the re-shingle of O(batch) survivors beats
-      // the semi-join + extra-cache machinery at benched scales
-      val kept0 =
-        if (i == 0) batch
-        else {
-          val dups = searchMinHashIndexBucketed(batch, id, text, table,
-              thresholdPct, numHashes, bands, ngramWords)
-            .select(col("left_id").as(id)).distinct()
-          batch.join(dups, Seq(id), "left_anti")
-        }
-      // point-in-time freeze before the index grows (see dedupIngest)
-      kept0.select(col(id), col(text))
-        .write.mode("overwrite").parquet(s"$indexPath/accepted/batch=$b")
-      val kept = spark.read.parquet(s"$indexPath/accepted/batch=$b")
-      if (i == 0)
-        buildMinHashIndexBucketed(kept, id, text, table, numBuckets,
-          numHashes, bands, ngramWords)
-      else {
-        appendMinHashIndexBucketed(kept, id, text, table, numBuckets,
-          numHashes, bands, ngramWords)
-        // AUTO-COMPACTION (r17, VERDICT item 1 / guide §6): each append
-        // adds one file per bucket, and the probe's listing + file-open
-        // cost grows with that count (INGEST_PROFILE measured the
-        // bucketed probe wall 3×ing across 31 appends). Folding each
-        // bucket back to one sorted file every [[bucketCompactMaxFiles]]
-        // appends holds the curve flat (sawtooth); rows, bucket spec
-        // and therefore the probe result and its exchange-free plan are
-        // untouched (PlanSpec q90y pins the latter, the shared oracle
-        // pins the former).
-        maybeCompactBucketedIndex(spark, table, numBuckets): Unit
-      }
-    }
     spark.read.parquet(s"$indexPath/accepted")
       .select(col(id), col("batch").cast("long").as("batch"))
   }
@@ -3299,13 +3233,13 @@ object Engine {
   }
 
   /** Slice count for [[semanticDedup]]'s grid-decomposed pair join
-    * (`-Dgraft.semDedupSlices` overrides). Sizing: the hot cell's
+    * (`-Dgraft.semDedupSlices` overrides, ≥ 1). Sizing: the hot cell's
     * quadratic splits into S(S+1)/2 blocks while each side's shuffle
     * grows ~(S+1)/2× — S=8 turns one 8-cell join into 288 schedulable
     * blocks for a ~4.5× wider (but embedding-sized, not pair-sized)
     * exchange. */
-  def semDedupSlices: Int =
-    sys.props.get("graft.semDedupSlices").map(_.toInt).getOrElse(8)
+  def semDedupSlices: Int = SemDedupSlices.value.toInt
+  private[graft] val SemDedupSlices = Knob("semDedupSlices", 8, min = 1)
 
   /** SEMANTIC decontamination: flag every corpus vector whose rounded
     * cosine to ANY benchmark vector reaches `tau` — the embedding-space

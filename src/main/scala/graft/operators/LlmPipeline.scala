@@ -1247,8 +1247,8 @@ object LlmPipeline {
     // the q90m lifecycle — every append lands a small-file wave, so a
     // long-lived index accumulates files and loses in-file probe-key
     // clustering; compaction rewrites both tables RANGE-CLUSTERED on
-    // their keys behind an atomic-rename swap (the A16 discipline:
-    // a crash leaves old or new readable, never neither). Rows are
+    // their keys behind a two-rename swap that the next compaction
+    // rolls forward or back after a crash (the A16 discipline). Rows are
     // untouched, so the oracle is q90m's probe VERBATIM — the hash
     // match proves compaction is invisible to results while the spec
     // proves the file count actually shrank.
@@ -1494,11 +1494,13 @@ object LlmPipeline {
     // searchMinHashIndexBucketed, so the history side's exchange-free
     // probe is a PLAN GUARANTEE (PlanSpec pins it surviving per-slot
     // appends) instead of an optimizer outcome — INGEST_PROFILE.json
-    // measured the path-based loop's probe shuffle already FLAT at
-    // this scale because AQE broadcasts the bounded candidate set,
-    // which holds exactly until a dup-burst batch overflows the
-    // broadcast threshold and the replan shuffles a 10-billion-doc
-    // history's grams instead. The profile also prices this form's
+    // (the per-slot ledger; the traced `dedup_ingest` benchmark
+    // reports the same per-backend costs) measured the path-based
+    // loop's probe shuffle already FLAT at this scale because the
+    // bounded candidate set is broadcast, which holds exactly until a
+    // dup-burst batch overflows the broadcast gate and the fallback
+    // shuffles a 10-billion-doc history's grams instead. The profile
+    // also prices this form's
     // maintenance honestly: one file per bucket per append grows probe
     // wall ~3x across 31 appends (file-count overhead), which the q90t
     // compaction cadence resets. Result-identical to q90n by the

@@ -377,6 +377,25 @@ class EngineSpec extends AnyFunSuite {
     assert(survivorsAt("5") == unsalted) // non-divisor of the id space
   }
 
+  test("graft.* knobs: a bad value fails naming the knob, a good one " +
+      "parses, unset falls back to the default") {
+    import Engine.{BucketCompactMaxFiles, ProbeBroadcastMaxCands,
+      SemDedupSlices}
+    for ((knob, bad) <- Seq(SemDedupSlices -> "0",
+        BucketCompactMaxFiles -> "0", ProbeBroadcastMaxCands -> "-1",
+        SemDedupSlices -> "eight", BucketCompactMaxFiles -> "2147483648",
+        ProbeBroadcastMaxCands -> "")) {
+      val e = intercept[IllegalArgumentException](knob.parse(Some(bad)))
+      assert(e.getMessage.contains(s"graft.${knob.name}="), e.getMessage)
+    }
+    assert(SemDedupSlices.parse(None) == 8)
+    assert(SemDedupSlices.parse(Some(" 5 ")) == 5)
+    assert(BucketCompactMaxFiles.parse(None) == 8)
+    // 0 is the documented way to force the probe's shuffled attach
+    assert(ProbeBroadcastMaxCands.parse(Some("0")) == 0L)
+    assert(ProbeBroadcastMaxCands.parse(None) == 1000000L)
+  }
+
   test("q99/q99b ANN recall@3 against the exact top-k is a bound, not prose") {
     // The q92→q99 cutover's quantified cost: run both approximate ANN
     // operators exactly as registered and measure recall@3 against
@@ -518,16 +537,36 @@ class EngineSpec extends AnyFunSuite {
         thresholdPct = 60, ngramWords = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L), (2L, 3L)))
-    val path = java.nio.file.Files
-      .createTempDirectory("ingest_chain").toString
-    try {
-      val got = Engine.dedupIngest(docs, "doc_id", "text", col("slot"),
-          path, thresholdPct = 60, numHashes = 64, bands = 32)
+    for (backend <- ingestBackends) withIngest(backend) { ingest =>
+      val got = ingest(docs, 32)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == Set((1L, 0L), (3L, 2L)),
-        s"greedy chain broken: $got")
+        s"$backend: greedy chain broken: $got")
+    }
+  }
+
+  private val ingestBackends = Seq("path", "bucketed")
+
+  /** Run `body` with the ingest loop over one index backend at a fresh
+    * index path — batches by `slot`, tau=0.6, 64 hashes in the given
+    * number of bands — then clean up. */
+  private def withIngest(backend: String)(
+      body: ((org.apache.spark.sql.DataFrame, Int) =>
+        org.apache.spark.sql.DataFrame) => Unit): Unit = {
+    val path = java.nio.file.Files
+      .createTempDirectory(s"ingest_$backend").toString
+    val table = "engspec_ingest_idx"
+    try body { (docs, bands) =>
+      if (backend == "path")
+        Engine.dedupIngest(docs, "doc_id", "text", col("slot"), path,
+          thresholdPct = 60, bands = bands)
+      else
+        Engine.dedupIngestBucketed(docs, "doc_id", "text", col("slot"),
+          path, table, thresholdPct = 60, bands = bands)
     } finally {
       graft.sources.IO.deleteRec(new java.io.File(path))
+      Seq("bands", "docs").foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS ${table}_$t"))
     }
   }
 
@@ -656,6 +695,25 @@ class EngineSpec extends AnyFunSuite {
           s"docs=${files("docs")} (was $fb/$fd)")
       assert(fb > 1 && fd > 1, s"fixture too small to prove compaction")
       assert(probe() == before && before.nonEmpty)
+      // crash windows: stop a swap after rename 1 (live gone, the
+      // finished rewrite in __compact) and after rename 2 (old files
+      // still in __trash); the next compaction must recover both
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def at(n: String) = new org.apache.hadoop.fs.Path(s"$path/$n")
+      for (renames <- Seq(1, 2)) {
+        Seq("bands", "docs").foreach { sub =>
+          spark.read.parquet(s"$path/$sub")
+            .write.parquet(s"$path/__compact_$sub")
+          assert(fs.rename(at(sub), at(s"__trash_$sub")))
+          if (renames == 2) assert(fs.rename(at(s"__compact_$sub"), at(sub)))
+        }
+        Engine.compactMinHashIndex(spark, path, files = 1)
+        assert(probe() == before, s"crash after rename $renames")
+        assert(new java.io.File(path).list().sorted.toSeq ==
+          Seq("bands", "docs"), s"leftovers after rename $renames")
+        assert(files("bands") == 1 && files("docs") == 1)
+      }
     } finally {
       graft.sources.IO.deleteRec(new java.io.File(path))
     }
@@ -705,6 +763,32 @@ class EngineSpec extends AnyFunSuite {
       s"expected $buckets files, got bands=${files("bands")} " +
         s"docs=${files("docs")}")
     assert(probe() == before && before.nonEmpty)
+    // crash windows, as in the path test, with the catalog rename as the
+    // atom: after rename 1 and after rename 2 (trash not yet dropped)
+    for (renames <- Seq(1, 2)) {
+      Seq("bands" -> Seq("__band", "__bh"), "docs" -> Seq("doc_id"))
+        .foreach { case (sub, keys) =>
+          val (live, tmp, trash) = (s"${table}_$sub",
+            s"${table}__compact_$sub", s"${table}__trash_$sub")
+          spark.table(live).write
+            .bucketBy(buckets, keys.head, keys.tail: _*)
+            .sortBy(keys.head, keys.tail: _*)
+            .format("parquet").saveAsTable(tmp)
+          spark.sql(s"ALTER TABLE $live RENAME TO $trash")
+          if (renames == 2) spark.sql(s"ALTER TABLE $tmp RENAME TO $live")
+        }
+      Engine.compactBucketedIndex(spark, table, buckets)
+      assert(probe() == before, s"crash after rename $renames")
+      val left = for {
+        sub <- Seq("bands", "docs"); stage <- Seq("compact", "trash")
+        t = s"${table}__${stage}_$sub"
+        if spark.catalog.tableExists(t) || new java.io.File(
+          spark.sessionState.catalog.defaultTablePath(
+            org.apache.spark.sql.catalyst.TableIdentifier(t))).exists()
+      } yield t
+      assert(left.isEmpty, s"leftovers after rename $renames: $left")
+      assert(files("bands") == buckets && files("docs") == buckets)
+    }
   }
 
   test("dedupIngest: a rerun at the same indexPath with a CHANGED batch " +
@@ -714,22 +798,17 @@ class EngineSpec extends AnyFunSuite {
       (2L, "epsilon zeta eta theta", 1L),
       (3L, "iota kappa lambda mu", 2L))
       .toDF("doc_id", "text", "slot")
-    val path = java.nio.file.Files
-      .createTempDirectory("ingest_rerun").toString
-    try {
+    for (backend <- ingestBackends) withIngest(backend) { ingest =>
       // first run ingests slots {0, 1, 2}; all distinct texts survive
-      val first = Engine.dedupIngest(docs, "doc_id", "text", col("slot"),
-        path).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(first == Set((1L, 0L), (2L, 1L), (3L, 2L)))
+      val first = ingest(docs, 16)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(first == Set((1L, 0L), (2L, 1L), (3L, 2L)), backend)
       // rerun with only slots {0, 1}: slot 2's accepted/batch=2 dir from
       // the first run must NOT resurface via partition discovery
-      val second = Engine.dedupIngest(docs.filter(col("slot") < 2),
-          "doc_id", "text", col("slot"), path)
+      val second = ingest(docs.filter(col("slot") < 2), 16)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(second == Set((1L, 0L), (2L, 1L)),
-        s"stale accepted partitions leaked into: $second")
-    } finally {
-      graft.sources.IO.deleteRec(new java.io.File(path))
+        s"$backend: stale accepted partitions leaked into: $second")
     }
   }
 

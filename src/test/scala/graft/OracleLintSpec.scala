@@ -86,4 +86,22 @@ class OracleLintSpec extends AnyFunSuite {
     // no ORDER BY at all
     assert(unNulledSortKeys("SELECT 1").isEmpty)
   }
+
+  test("README: the generated query map lists every registered query") {
+    // tools/gen_readme_map.py writes the map from a Verify dump; this
+    // pins it so a new registration cannot leave it silently stale
+    val readme = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get("README.md")), "UTF-8")
+      .split("<!-- (BEGIN|END) GENERATED QUERY MAP -->")(1)
+    val count = "All (\\d+) registered".r.findFirstMatchIn(readme)
+      .map(_.group(1).toInt)
+    val listed = "(?m)^\\| `(q\\w+)` \\|".r.findAllMatchIn(readme)
+      .map(_.group(1)).toSet
+    val registered = SparkEntry.oracleSql.keySet
+    assert(count.contains(registered.size),
+      s"README says $count registered, the registry has ${registered.size}" +
+        " — rerun tools/gen_readme_map.py")
+    assert(listed == registered, s"missing: ${registered -- listed}, " +
+      s"stale: ${listed -- registered}")
+  }
 }

@@ -549,7 +549,8 @@ class PlanSpec extends AnyFunSuite {
     // adds one file per bucket), and bucket clustering must survive
     // those appends or the per-slot probe would re-shuffle history.
     // This is the STRUCTURAL guarantee the path-based loop lacks: its
-    // measured flatness (INGEST_PROFILE.json) rides AQE broadcasting
+    // measured flatness (INGEST_PROFILE.json, and the `dedup_ingest`
+    // benchmark's per-backend rows) rides a count-gated broadcast of
     // the candidate set, which a dup-burst batch can overflow. Run a
     // 3-slot ingest, then examine the NEXT slot's probe plan against
     // the appended tables, broadcasts disabled.
