@@ -415,6 +415,17 @@ object Engine {
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(words), n))
   }
 
+  /** Banded MinHash signature of a shingle array (ARRAY<BIGINT> of
+    * `bands` band hashes; empty for an empty or NULL array) — the
+    * row-local [[graft.plans.MinHashBands]] kernel behind every band
+    * table, built directly like [[positionalNgrams]]. */
+  private[graft] def minHashBands(grams: Column, numHashes: Int,
+      bands: Int): Column =
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      graft.plans.MinHashBands(
+        org.apache.spark.sql.graftbridge.ColumnBridge.expression(grams),
+        numHashes, bands))
+
   /** Duplicated-substring SPANS (the exact substring-dedup pass of Lee
     * et al., "Deduplicating Training Data Makes Language Models
     * Better"): every maximal token span whose n-gram windows all occur
@@ -551,27 +562,13 @@ object Engine {
   def minHashNearDups(df: DataFrame, id: String, text: String,
       threshold: Double = 0.8, numHashes: Int = 64,
       bands: Int = 16, shingleWords: Int = 3): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rowsPerBand = numHashes / bands
     val docs = spreadInput(df)
       .withColumn("__words", split(col(text), " "))
       .withColumn("__sv", wordNgrams(col("__words"), shingleWords))
       .select(col(id).as("__id"), col("__sv"))
-    val hashed = docs
-      .select(col("__id"), explode(col("__sv")).as("__sh"))
-      .select(col("__id"), xxhash64(col("__sh")).as("__h"))
-    val sig = hashed.groupBy("__id").agg(
-      min(xxhash64(lit(0), col("__h"))).as("m0"),
-      (1 until numHashes).map(j =>
-        min(xxhash64(lit(j), col("__h"))).as(s"m$j")): _*)
-    val bandCols = (0 until bands).map { j =>
-      xxhash64((0 until rowsPerBand)
-        .map(r => col(s"m${rowsPerBand * j + r}")): _*)
-    }
-    val banded = sig.select(col("__id"),
-      posexplode(array(bandCols: _*)).as(Seq("__band", "__bh")))
+    val banded = minHashBandTable(docs, "__id", numHashes, bands)
       // Cache policy (uniform across Engine's straight-line pipelines):
-      // persist, NOT localCheckpoint — the 64-hash signature pipeline
+      // persist, NOT localCheckpoint — the row-local signature kernel
       // still runs ONCE (both sides of the candidate self-join read the
       // cache), but lineage is kept, so a lost executor recomputes the
       // missing blocks instead of failing the job (localCheckpoint blocks
@@ -1950,12 +1947,12 @@ object Engine {
     * (band, band-hash). `broadcastBounded` opt-in pins the batch-side
     * BAND table broadcast (bands × batch rows — KNOWN bounded, unlike
     * the candidate list, which stays unpinned for the same reason as
-    * the exact form). Hash family and banding are bit-identical to
-    * [[minHashNearDups]] (seeded xxhash64 min-aggregates), so a
-    * self-join dedup and this incremental form never disagree on a
-    * pair's signature. Returns (left_id, right_id, jaccard ≥ pct/100),
-    * jaccard EXACT (same merge kernel + integer arithmetic as the
-    * prefix-filter joins). */
+    * the exact form). Hash family and banding are the ones
+    * [[minHashNearDups]] uses (the seeded-xxhash64 [[minHashBands]]
+    * kernel), so a self-join dedup and this incremental form never
+    * disagree on a pair's signature. Returns (left_id, right_id,
+    * jaccard ≥ pct/100), jaccard EXACT (same merge kernel + integer
+    * arithmetic as the prefix-filter joins). */
   def minHashJoinAcross(left: DataFrame, right: DataFrame, id: String,
       text: String, thresholdPct: Int = 60, numHashes: Int = 64,
       bands: Int = 16, ngramWords: Int = 2,
@@ -1998,9 +1995,8 @@ object Engine {
   private[graft] def minHashCandidatesAcross(dl: DataFrame, dr: DataFrame,
       numHashes: Int, bands: Int, broadcastBounded: Boolean): DataFrame = {
     def bounded(df: DataFrame) = if (broadcastBounded) broadcast(df) else df
-    // one hash-aggregate per side computes all numHashes min-hashes in a
-    // single pass over the shingle rows (map-side partials bound the
-    // shuffle at numHashes longs per doc)
+    // each side's band table is row-local (the minHashBands kernel): the
+    // only exchange is the (band, band-hash) equi-join itself
     bounded(minHashBandTable(dl, "left_id", numHashes, bands))
       .join(minHashBandTable(dr, "right_id", numHashes, bands),
         Seq("__band", "__bh"))
@@ -2012,11 +2008,20 @@ object Engine {
     * [[minHashJoinAcross]] and the persisted-index builders so an index
     * probe and an in-memory join never disagree on shingling. */
   private def minHashDocTable(df: DataFrame, id: String, text: String,
+      ngramWords: Int): DataFrame =
+    withShingles(shingleFrame(df, id, text, ngramWords))
+
+  /** Internal: (__id, __text, __sv) — EVERY row of `df`, spread, with its
+    * sorted distinct word n-gram set (empty below `ngramWords` words). */
+  private def shingleFrame(df: DataFrame, id: String, text: String,
       ngramWords: Int): DataFrame = spreadInput(df)
-    .withColumn("__words", split(col(text), " "))
-    .withColumn("__sv", sort_array(wordNgrams(col("__words"), ngramWords)))
-    .filter(size(col("__sv")) >= 1)
-    .select(col(id).as("__id"), col("__sv"))
+    .select(col(id).as("__id"), col(text).as("__text"), sort_array(
+      wordNgrams(split(col(text), " "), ngramWords)).as("__sv"))
+
+  /** Internal: the (__id, __sv) doc table of a [[shingleFrame]] — docs
+    * with no shingles have no signature and are dropped. */
+  private def withShingles(sh: DataFrame): DataFrame =
+    sh.filter(size(col("__sv")) >= 1).select(col("__id"), col("__sv"))
 
   /** Storage form of a PERSISTED banded-MinHash dedup index — the
     * incremental-maintenance contract [[minHashJoinAcross]]'s Scaladoc
@@ -2069,13 +2074,23 @@ object Engine {
     * table is only sorted within files; compaction rewrites each table
     * range-clustered on its key into `compactFiles` files. */
   private final case class PathIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, compactFiles: Int = 8) extends DedupIndex {
+      path: String, compactFiles: Int = 8,
+      idType: Option[org.apache.spark.sql.types.DataType] = None)
+      extends DedupIndex {
     require(compactFiles >= 1)
     private def fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def at(sub: String, stage: String = ""): String =
       if (stage.isEmpty) s"$path/$sub" else s"$path/__${stage}_$sub"
-    def read(sub: String): DataFrame = spark.read.parquet(at(sub))
+    // with the doc id type known (the ingest loop wrote every row) the
+    // read skips parquet schema inference, which is a job per read
+    def read(sub: String): DataFrame = idType.fold(spark.read) { t =>
+      import org.apache.spark.sql.types._
+      spark.read.schema(StructType(StructField("doc_id", t) +: (
+        if (sub == "bands") Seq(StructField("__band", IntegerType),
+          StructField("__bh", LongType))
+        else Seq(StructField("grams", ArrayType(StringType))))))
+    }.parquet(at(sub))
     def pinsProbe: Boolean = true
     def write(bandRows: => DataFrame, docRows: => DataFrame,
         overwrite: Boolean): Unit = {
@@ -2185,12 +2200,16 @@ object Engine {
     * upstream, or route re-crawls through [[exactDedup]] first). */
   private def writeIndex(ix: DedupIndex, df: DataFrame, id: String,
       text: String, numHashes: Int, bands: Int, ngramWords: Int,
-      overwrite: Boolean): Unit = {
-    val docs = minHashDocTable(df, id, text, ngramWords).persistOnce()
+      overwrite: Boolean): Unit =
+    writeDocTable(ix, minHashDocTable(df, id, text, ngramWords)
+      .persistOnce(), numHashes, bands, overwrite)
+
+  /** Write both index tables from a (__id, __sv) doc table. */
+  private def writeDocTable(ix: DedupIndex, docs: DataFrame,
+      numHashes: Int, bands: Int, overwrite: Boolean): Unit =
     ix.write(minHashBandTable(docs, "doc_id", numHashes, bands),
       docs.select(col("__id").as("doc_id"), col("__sv").as("grams")),
       overwrite)
-  }
 
   /** The one compaction swap. Each append lands as new files, so a
     * long-lived index accumulates one small-file wave per ingest slot
@@ -2240,15 +2259,14 @@ object Engine {
     * [[minHashJoinAcross]](batch, history) by construction (same
     * seeded-xxhash64 family, same banding, same exact sorted-merge
     * verification), with history-side hashing amortized to ZERO: only
-    * the batch is shingled and hashed here. Both storage forms share
-    * this body, so their probe semantics cannot drift. */
-  private def probeIndex(ix: DedupIndex, batch: DataFrame, id: String,
-      text: String, thresholdPct: Int, numHashes: Int, bands: Int,
-      ngramWords: Int): DataFrame = {
+    * the batch's (__id, __sv) doc table `dl` is hashed here. Both
+    * storage forms share this body, so their probe semantics cannot
+    * drift. */
+  private def probeIndex(ix: DedupIndex, dl: DataFrame, thresholdPct: Int,
+      numHashes: Int, bands: Int): Probe = {
     require(thresholdPct >= 1 && thresholdPct <= 100)
     val (bandsTbl, docsTbl) = (ix.read("bands"), ix.read("docs"))
-    val dl = minHashDocTable(batch, id, text, ngramWords).persistOnce()
-    graft.plans.SortedIntersectCount.register(batch.sparkSession)
+    graft.plans.SortedIntersectCount.register(dl.sparkSession)
     // the batch-side band table is bands × |batch| rows — the bounded
     // side by the incremental contract, so pin the broadcast (the q90d
     // rationale: AQE size estimates flap on freshly-derived tables)
@@ -2300,11 +2318,25 @@ object Engine {
       s"(CAST($thresholdPct AS BIGINT) * (size(__sa) + size(__sb)) + " +
       s"${100 + thresholdPct - 1}) div ${100 + thresholdPct})")
     val uni = size(col("__sa")) + size(col("__sb")) - inter
-    verified
+    Probe(verified
       .withColumn("jaccard", round(inter.cast(DoubleType) / uni, 6))
       .filter(inter.cast("long") * 100 >= uni.cast("long") * thresholdPct)
-      .select("left_id", "right_id", "jaccard")
+      .select("left_id", "right_id", "jaccard"),
+      if (ix.pinsProbe) Seq(cands) else Nil)
   }
+
+  /** A probe's (left_id, right_id, jaccard) pairs and the frames it
+    * cached to plan them, which a caller that is done with the pairs
+    * releases. */
+  private final case class Probe(pairs: DataFrame, cached: Seq[DataFrame])
+
+  /** [[probeIndex]] with `batch` shingled here (the doc table stays
+    * cached for the returned pairs' lifetime). */
+  private def searchIndex(ix: DedupIndex, batch: DataFrame, id: String,
+      text: String, thresholdPct: Int, numHashes: Int, bands: Int,
+      ngramWords: Int): DataFrame =
+    probeIndex(ix, minHashDocTable(batch, id, text, ngramWords)
+      .persistOnce(), thresholdPct, numHashes, bands).pairs
 
   /** Build a [[PathIndex]] under `path` (overwriting). Scale notes: the
     * bands table is `bands` 16-byte rows per doc — ~1 KB/doc at 64×16 —
@@ -2339,7 +2371,7 @@ object Engine {
   def searchMinHashIndex(batch: DataFrame, id: String, text: String,
       path: String, thresholdPct: Int = 60, numHashes: Int = 64,
       bands: Int = 16, ngramWords: Int = 2): DataFrame =
-    probeIndex(PathIndex(batch.sparkSession, path), batch, id, text,
+    searchIndex(PathIndex(batch.sparkSession, path), batch, id, text,
       thresholdPct, numHashes, bands, ngramWords)
 
   /** Build a [[BucketedIndex]] as catalog tables `<table>_bands` /
@@ -2415,8 +2447,8 @@ object Engine {
       text: String, table: String, thresholdPct: Int = 60,
       numHashes: Int = 64, bands: Int = 16,
       ngramWords: Int = 2): DataFrame =
-    probeIndex(BucketedIndex(batch.sparkSession, table), batch, id, text,
-      thresholdPct, numHashes, bands, ngramWords)
+    searchIndex(BucketedIndex(batch.sparkSession, table), batch, id,
+      text, thresholdPct, numHashes, bands, ngramWords)
 
   /** ONLINE corpus construction with an ACCUMULATING dedup index — the
     * production ingest loop the persisted index exists for: batches
@@ -2448,7 +2480,8 @@ object Engine {
       batchOf: Column, indexPath: String, thresholdPct: Int = 60,
       numHashes: Int = 64, bands: Int = 16,
       ngramWords: Int = 2): DataFrame =
-    ingest(PathIndex(docs.sparkSession, indexPath), docs, id, text,
+    ingest(PathIndex(docs.sparkSession, indexPath,
+        idType = Some(docs.schema(id).dataType)), docs, id, text,
       batchOf, indexPath, thresholdPct, numHashes, bands, ngramWords)
 
   /** [[dedupIngest]] over the BUCKETED index `table`: the same loop,
@@ -2487,27 +2520,39 @@ object Engine {
       val fs = acc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(acc)) fs.delete(acc, true)
     }
+    // the frozen survivor files' schema: reads skip schema inference
+    val frozen = org.apache.spark.sql.types.StructType(
+      Seq(docs.schema(id), docs.schema(text)))
     batchIds.zipWithIndex.foreach { case (b, i) =>
+      // the batch is read, spread and shingled ONCE: the probe, the
+      // freeze and the append all read this frame
       val batch = docs.filter(batchOf.cast("long") === b)
-      // NOTE (r16 optimization round): a "hash once per slot" variant —
-      // share the batch's (__id, __sv) doc table between the probe and
-      // the index append via a semi-join against the frozen survivor
-      // file — was built and A/B-measured here (alternating warm runs,
-      // direct JVM): 9.0–9.3 s OLD vs 10.4–11.3 s SHARED at sf0.1.
-      // Re-shingling the ~|batch| survivors is cheaper at any benched
-      // scale than the machinery the sharing needs (a broadcast
-      // semi-join build plus an extra cached copy of the shingle
-      // arrays per slot), and it is not the scale term either — the
-      // append is O(batch) each way, history is never re-hashed
-      // (INGEST_PROFILE.json). Kept the measured-faster form.
-      val kept0 =
-        if (i == 0) batch
-        else {
-          val dups = probeIndex(ix, batch, id, text, thresholdPct,
-              numHashes, bands, ngramWords)
-            .select(col("left_id").as(id)).distinct()
-          batch.join(dups, Seq(id), "left_anti")
-        }
+      val sh = shingleFrame(batch, id, text, ngramWords).persistOnce()
+      // the writes undo the spread: the batch's own scan partitioning is
+      // sized to its bytes, so a small batch lands one file per table
+      // instead of one per spread partition
+      val width = batch.rdd.getNumPartitions
+      val dl = withShingles(sh)
+      // NOTE (A/B, `dedup_ingest` benchmark: 20-doc batches at local[3]
+      // on a 4-core host, 10 seed pairs alternating with the previous
+      // loop): this shared frame measured 8.1 → 11.2 docs/s median,
+      // faster in 10/10 pairs, and 21.9 → 14.4 jobs per path batch. The
+      // r16 version of the sharing lost (9.0–9.3 s before vs 10.4–11.3 s
+      // shared at sf0.1) because it paid a broadcast semi-join build and
+      // a second cached copy of the shingles on top of the explode →
+      // 64×`min` groupBy signature. With the row-local minHashBands
+      // kernel the band table needs neither a cache nor a shuffle, and
+      // the one cached frame replaces re-reading and re-shingling the
+      // survivors.
+      val probe =
+        if (i == 0) None
+        else Some(probeIndex(ix, dl, thresholdPct, numHashes, bands))
+      // the dup ids are a subset of the batch, the bounded side, so the
+      // anti-join pins their broadcast (no exchange of the batch), and
+      // an anti-join needs no distinct on its build side
+      val kept0 = probe.fold(sh)(p => sh.join(
+        broadcast(p.pairs.select(col("left_id").as("__id"))), Seq("__id"),
+        "left_anti"))
       // MATERIALIZE the accepted set BEFORE the index grows: the probe
       // above reads the index lazily, so a lineage recompute after the
       // append (cache eviction, lost partition) would re-probe an index
@@ -2515,39 +2560,42 @@ object Engine {
       // and silently change the answer. Writing the survivors under the
       // index layout (Hive-partitioned by batch — also the provenance
       // record an ingest pipeline wants) freezes each probe at its
-      // point-in-time index state; the index append then reads the
-      // frozen file, never the live lineage.
-      kept0.select(col(id), col(text))
-        .write.mode("overwrite").parquet(s"$indexPath/accepted/batch=$b")
-      val kept = spark.read.parquet(s"$indexPath/accepted/batch=$b")
-      writeIndex(ix, kept, id, text, numHashes, bands, ngramWords,
+      // point-in-time index state; the index append then selects its
+      // rows by the frozen ids, never through the live lineage. The
+      // freeze is written from the unfiltered frame: a doc with no
+      // shingles cannot be a near-duplicate and is accepted, though it
+      // never enters the index.
+      val at = s"$indexPath/accepted/batch=$b"
+      kept0.coalesce(width)
+        .select(col("__id").as(id), col("__text").as(text))
+        .write.mode("overwrite").parquet(at)
+      // with no probe (the first batch) every row survives
+      val survivors = probe.fold(dl)(_ => dl.join(
+        spark.read.schema(frozen).parquet(at).select(col(id).as("__id")),
+        Seq("__id"), "left_semi"))
+      writeDocTable(ix, survivors.coalesce(width), numHashes, bands,
         overwrite = i == 0)
       if (i > 0) ix.afterAppend()
+      // release this batch's caches: a long-running loop must not pin
+      // one set of blocks per batch for the session's life
+      // (dependents first, or uncaching `sh` would re-plan them)
+      (probe.toSeq.flatMap(_.cached) :+ sh).foreach(_.unpersist())
     }
     // partition discovery rehydrates the batch column from the layout
-    spark.read.parquet(s"$indexPath/accepted")
-      .select(col(id), col("batch").cast("long").as("batch"))
+    spark.read.schema(frozen.add("batch", LongType))
+      .parquet(s"$indexPath/accepted").select(col(id), col("batch"))
   }
 
   /** Internal: banded signature table (outId, __band, __bh) of a
     * (__id, __sv) doc table — the hash family shared verbatim by the
-    * in-memory join and the persisted index. */
+    * in-memory join and the persisted index. Row-local: one
+    * `posexplode` of the [[minHashBands]] kernel, no exchange. A doc
+    * with no shingles gets no band rows. */
   private def minHashBandTable(d: DataFrame, outId: String,
       numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rowsPerBand = numHashes / bands
-    val hashed = d.select(col("__id"), explode(col("__sv")).as("__sh"))
-      .select(col("__id"), xxhash64(col("__sh")).as("__h"))
-    val sig = hashed.groupBy("__id").agg(
-      min(xxhash64(lit(0), col("__h"))).as("m0"),
-      (1 until numHashes).map(j =>
-        min(xxhash64(lit(j), col("__h"))).as(s"m$j")): _*)
-    val bandCols = (0 until bands).map { j =>
-      xxhash64((0 until rowsPerBand)
-        .map(r => col(s"m${rowsPerBand * j + r}")): _*)
-    }
-    sig.select(col("__id").as(outId),
-      posexplode(array(bandCols: _*)).as(Seq("__band", "__bh")))
+    d.select(col("__id").as(outId), posexplode(
+      minHashBands(col("__sv"), numHashes, bands)).as(Seq("__band", "__bh")))
   }
 
   /** Edge-count gate for [[nearDupClusters]]' driver fast path: pair
@@ -3178,7 +3226,8 @@ object Engine {
     * signature table is tiny relative to its recompute cost. */
   def semanticDedup(vecs: DataFrame, id: String, vec: String,
       centroids: DataFrame, cid: String, cvec: String,
-      tau: Double): DataFrame = {
+      tau: Double, slices: Int = semDedupSlices): DataFrame = {
+    require(slices >= 1, s"semanticDedup: slices must be >= 1, got $slices")
     graft.plans.CosineSimilarity.register(vecs.sparkSession)
     val cent = broadcast(
       centroids.select(col(cid).as("__cid"), col(cvec).as("__ce")))
@@ -3208,16 +3257,16 @@ object Engine {
     // independently-scheduled blocks at the cost of re-shuffling each
     // side ~(S+1)/2×. RESULT-IDENTICAL by construction: every
     // unordered within-cell pair {u, w} lands in at least one block
-    // (the (min, max) of its two slices; same-slice pairs land twice,
-    // once per arrangement), qualification (rounded cosine ≥ tau) is
-    // symmetric, the emitted id is greatest(va, vb) — exactly the
-    // `__vb` of the previous `__va < __vb` form — and the DISTINCT
-    // collapses multiplicity. S=1 degenerates to the unsalted join.
-    val nSlices = semDedupSlices
+    // (the (min, max) of its two slices; a diagonal block p = q sees a
+    // same-slice pair in both arrangements and keeps only __va < __vb),
+    // qualification (rounded cosine ≥ tau) is symmetric, the emitted id
+    // is greatest(va, vb) — exactly the `__vb` of the previous
+    // `__va < __vb` form — and the DISTINCT collapses multiplicity.
+    // S=1 degenerates to the unsalted join.
     val sliced = cells.withColumn("__s",
-      pmod(xxhash64(col("__vid")), lit(nSlices)).cast("int"))
+      pmod(xxhash64(col("__vid")), lit(slices)).cast("int"))
     val lhs = sliced
-      .withColumn("__q", explode(expr(s"sequence(__s, ${nSlices - 1})")))
+      .withColumn("__q", explode(expr(s"sequence(__s, ${slices - 1})")))
       .select(col("cell"), col("__s").as("__p"), col("__q"),
         col("__vid").as("__va"), col("__e").as("__ea"))
     val rhs = sliced
@@ -3226,6 +3275,7 @@ object Engine {
         col("__vid").as("__vb"), col("__e").as("__eb"))
     val dropped = lhs.join(rhs, Seq("cell", "__p", "__q"))
       .filter(col("__va") =!= col("__vb") &&
+        ((col("__p") =!= col("__q")) || (col("__va") < col("__vb"))) &&
         round(expr("cosine_sim(__ea, __eb)"), 6) >= lit(tau))
       .select(greatest(col("__va"), col("__vb")).as("__vid")).distinct()
     cells.join(dropped, Seq("__vid"), "left_anti")

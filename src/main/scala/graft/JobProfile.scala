@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-query JOB/STAGE attribution (dev main, beside Bench/KernelProfile):
+/** Per-query JOB/STAGE attribution (dev main, beside Bench/RecallProbe):
   * the guide §1.1 empirical loop for queries whose wall is large but whose
   * shuffle bytes are tiny (q35/q46/q34c/q39 class) — is the time task
   * compute, scheduling overhead across many small jobs, or driver-side

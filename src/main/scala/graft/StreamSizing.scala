@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** TRIGGER-SIZING sweep (dev main, beside Bench/RecallProbe/
-  * KernelProfile): wall-seconds and trigger counts for the streaming
+  * JobProfile): wall-seconds and trigger counts for the streaming
   * replay families as a CURVE over maxFilesPerTrigger — the r13 ledger
   * showed their sf1 cost is per-TRIGGER fixed overhead, invariant to
   * the state-store backend (STREAMING_PROFILE.json's hdfs≈rocksdb

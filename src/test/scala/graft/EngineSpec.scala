@@ -360,21 +360,14 @@ class EngineSpec extends AnyFunSuite {
     val e = Tables.t(spark, TestSpark.sfDir, "embeddings")
     val cents = e.filter(col("vec_id").isin(
       Seq(3L, 67L, 131L, 195L, 259L, 323L, 387L, 451L): _*))
-    def survivorsAt(slices: String): Set[(Long, Long)] = {
-      val prev = sys.props.get("graft.semDedupSlices")
-      sys.props("graft.semDedupSlices") = slices
-      try Engine.semanticDedup(e, "vec_id", "embedding",
-          cents, "vec_id", "embedding", tau = 0.35)
+    def survivorsAt(slices: Int): Set[(Long, Long)] =
+      Engine.semanticDedup(e, "vec_id", "embedding",
+          cents, "vec_id", "embedding", tau = 0.35, slices = slices)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-      finally prev match {
-        case Some(v) => sys.props("graft.semDedupSlices") = v
-        case None => sys.props.remove("graft.semDedupSlices"): Unit
-      }
-    }
-    val unsalted = survivorsAt("1")
+    val unsalted = survivorsAt(1)
     assert(unsalted.nonEmpty)
-    assert(survivorsAt("8") == unsalted)
-    assert(survivorsAt("5") == unsalted) // non-divisor of the id space
+    assert(survivorsAt(8) == unsalted)
+    assert(survivorsAt(5) == unsalted) // non-divisor of the id space
   }
 
   test("graft.* knobs: a bad value fails naming the knob, a good one " +
@@ -547,23 +540,33 @@ class EngineSpec extends AnyFunSuite {
 
   private val ingestBackends = Seq("path", "bucketed")
 
-  /** Run `body` with the ingest loop over one index backend at a fresh
-    * index path — batches by `slot`, tau=0.6, 64 hashes in the given
-    * number of bands — then clean up. */
-  private def withIngest(backend: String)(
-      body: ((org.apache.spark.sql.DataFrame, Int) =>
-        org.apache.spark.sql.DataFrame) => Unit): Unit = {
-    val path = java.nio.file.Files
-      .createTempDirectory(s"ingest_$backend").toString
-    val table = "engspec_ingest_idx"
-    try body { (docs, bands) =>
+  /** The ingest loop over one index backend at a fixed index path —
+    * batches by `slot`, tau=0.6, 64 hashes in the given number of
+    * bands — plus a reader of the index tables it wrote. */
+  private final class IngestRun(backend: String, path: String,
+      table: String) {
+    def apply(docs: org.apache.spark.sql.DataFrame,
+        bands: Int): org.apache.spark.sql.DataFrame =
       if (backend == "path")
         Engine.dedupIngest(docs, "doc_id", "text", col("slot"), path,
           thresholdPct = 60, bands = bands)
       else
         Engine.dedupIngestBucketed(docs, "doc_id", "text", col("slot"),
           path, table, thresholdPct = 60, bands = bands)
-    } finally {
+    /** index table `sub` ("bands" or "docs") */
+    def index(sub: String): org.apache.spark.sql.DataFrame =
+      if (backend == "path") spark.read.parquet(s"$path/$sub")
+      else spark.table(s"${table}_$sub")
+  }
+
+  /** Run `body` with an [[IngestRun]] at a fresh index path, then clean
+    * up. */
+  private def withIngest(backend: String)(body: IngestRun => Unit): Unit = {
+    val path = java.nio.file.Files
+      .createTempDirectory(s"ingest_$backend").toString
+    val table = "engspec_ingest_idx"
+    try body(new IngestRun(backend, path, table))
+    finally {
       graft.sources.IO.deleteRec(new java.io.File(path))
       Seq("bands", "docs").foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS ${table}_$t"))
@@ -788,6 +791,34 @@ class EngineSpec extends AnyFunSuite {
       } yield t
       assert(left.isEmpty, s"leftovers after rename $renames: $left")
       assert(files("bands") == buckets && files("docs") == buckets)
+    }
+  }
+
+  test("dedupIngest: a doc too short to shingle in a later batch is " +
+      "accepted but never enters the index (both backends)") {
+    import spark.implicits._
+    // doc 3 has one word: no bigram, so no signature to probe or index
+    val docs = Seq((1L, "alpha beta gamma delta", 0L),
+      (2L, "epsilon zeta eta theta", 1L), (3L, "solo", 1L))
+      .toDF("doc_id", "text", "slot")
+    for (backend <- ingestBackends) withIngest(backend) { ingest =>
+      val got = ingest(docs, 16)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == Set((1L, 0L), (2L, 1L), (3L, 1L)), backend)
+      for (sub <- Seq("bands", "docs"))
+        assert(ingest.index(sub).select("doc_id").as[Long].collect()
+          .toSet == Set(1L, 2L), s"$backend $sub")
+    }
+  }
+
+  test("dedupIngest: every batch releases the frames it cached " +
+      "(both backends)") {
+    val docs = Tables.t(spark, TestSpark.sfDir, "documents")
+      .withColumn("slot", col("doc_id") % 3)
+    for (backend <- ingestBackends) withIngest(backend) { ingest =>
+      val before = spark.sparkContext.getPersistentRDDs.size
+      assert(ingest(docs, 16).count() > 0)
+      assert(spark.sparkContext.getPersistentRDDs.size == before, backend)
     }
   }
 

@@ -565,4 +565,89 @@ class ExpressionSpec extends AnyFunSuite {
     try df.write.format("noop").mode("overwrite").save()
     finally spark.conf.unset("spark.sql.codegen.fallback")
   }
+
+  /** The explode → xxhash64 → per-j `min` groupBy → band-hash pipeline
+    * `minhash_bands` replaced, verbatim: the reference the kernel must
+    * reproduce bit for bit. Input (__id, __sv); output (__id, __band,
+    * __bh). */
+  private def aggregateBands(d: org.apache.spark.sql.DataFrame,
+      numHashes: Int, bands: Int): org.apache.spark.sql.DataFrame = {
+    val rowsPerBand = numHashes / bands
+    val sig = d.select(col("__id"), explode(col("__sv")).as("__sh"))
+      .select(col("__id"), xxhash64(col("__sh")).as("__h"))
+      .groupBy("__id").agg(
+        min(xxhash64(lit(0), col("__h"))).as("m0"),
+        (1 until numHashes).map(j =>
+          min(xxhash64(lit(j), col("__h"))).as(s"m$j")): _*)
+    val bandCols = (0 until bands).map { j =>
+      xxhash64((0 until rowsPerBand)
+        .map(r => col(s"m${rowsPerBand * j + r}")): _*)
+    }
+    sig.select(col("__id"),
+      posexplode(array(bandCols: _*)).as(Seq("__band", "__bh")))
+  }
+
+  private def kernelBands(d: org.apache.spark.sql.DataFrame,
+      numHashes: Int, bands: Int): org.apache.spark.sql.DataFrame =
+    d.select(col("__id"), posexplode(graft.Engine.minHashBands(
+      col("__sv"), numHashes, bands)).as(Seq("__band", "__bh")))
+
+  private def bandRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+
+  test("minhash_bands equals the explode/min-aggregate form bit for bit " +
+      "over the fixture corpus (2- and 3-grams, 16x4 and 32x2 banding)") {
+    val docs = Tables.t(spark, TestSpark.sfDir, "documents")
+    for (n <- Seq(2, 3); (numHashes, bands) <- Seq((64, 16), (64, 32))) {
+      val d = docs.select(col("doc_id").as("__id"), sort_array(
+        graft.Engine.wordNgrams(split(col("text"), " "), n)).as("__sv"))
+      val want = bandRows(aggregateBands(d, numHashes, bands))
+      assert(want.nonEmpty)
+      assert(bandRows(kernelBands(d, numHashes, bands)) == want,
+        s"n=$n ${numHashes}x$bands")
+    }
+  }
+
+  test("minhash_bands: repeated and NULL shingles hash as the aggregate " +
+      "form does; empty and NULL arrays yield no band rows") {
+    import spark.implicits._
+    val d = Seq[(Long, Seq[String])](
+      (1L, Seq("a b", "b c", "a b")), (2L, Seq("x y", null, "y z")),
+      (3L, Seq(null)), (4L, Seq.empty), (5L, null)).toDF("__id", "__sv")
+    val want = bandRows(aggregateBands(d, 64, 16))
+    assert(want.map(_._1) == Set(1L, 2L, 3L) && want.size == 3 * 16)
+    assert(bandRows(kernelBands(d, 64, 16)) == want)
+  }
+
+  test("minhash_bands participates in whole-stage codegen") {
+    val df = Tables.t(spark, TestSpark.sfDir, "documents")
+      .select(graft.Engine.minHashBands(
+        graft.Engine.wordNgrams(split(col("text"), " "), 2), 64, 16)
+        .as("b"))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.linesIterator.exists(l =>
+      l.contains("*(") && l.contains("minhash_bands")), plan)
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try df.write.format("noop").mode("overwrite").save()
+    finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
+
+  test("minhash_bands: interpreted eval agrees with codegen") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    val inputs = Seq[Seq[String]](Seq("a b", "b c"), Seq("x", null, "x"),
+      Seq.empty, null)
+    val generated = inputs.toDF("g")
+      .select(graft.Engine.minHashBands(col("g"), 64, 32))
+      .collect().map(_.getSeq[Long](0))
+    val interpreted = inputs.map { g =>
+      graft.plans.MinHashBands(Literal.create(g, ArrayType(StringType)),
+        64, 32).eval(null)
+        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        .toLongArray().toSeq
+    }
+    assert(generated.toSeq == interpreted)
+    assert(interpreted.map(_.size) == Seq(32, 32, 0, 0))
+  }
 }

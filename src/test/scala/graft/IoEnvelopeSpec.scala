@@ -33,11 +33,13 @@ class IoEnvelopeSpec extends AnyFunSuite {
     "q78_stream_stream_join" -> 40948L,
     // r15: q90d's registered path is the banded construction (the
     // absorbed q90l's measured envelope — 608239 under the exact
-    // prefix flood before)
-    "q90d_incremental_dedup" -> 320455L,
+    // prefix flood before); the row-local minhash_bands kernel then
+    // removed the signature aggregate's shuffle (320455 before)
+    "q90d_incremental_dedup" -> 90525L,
     // r14: banded candidates replaced the exact prefix flood (708767
-    // before the containmentJoinBanded default)
-    "q90h_containment_join" -> 331157L,
+    // before the containmentJoinBanded default); minhash_bands as for
+    // q90d (331157 before)
+    "q90h_containment_join" -> 96309L,
     "q91c_jaccard_join" -> 1020185L,
     "q92g_kmeans_refine" -> 315306L,
     "q92n_mmr_rerank" -> 5959L,
