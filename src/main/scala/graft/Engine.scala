@@ -67,22 +67,6 @@ object Engine {
       .foreach(_.get)
   }
 
-  /** Raise a DataFrame to at least the session's default parallelism
-    * before a CPU-heavy per-row stage (shingling, hashing). A small
-    * parquet input arrives as one or two scan partitions, and when every
-    * downstream join broadcasts there is NO exchange anywhere — the
-    * whole pipeline then runs at scan parallelism, i.e. serially (q90d
-    * measured 33 s single-threaded vs 5 s spread; the bimodality was AQE
-    * flapping between all-broadcast and sort-merge plans, the LATTER
-    * accidentally re-parallelizing). At production scale the scan has
-    * thousands of partitions and this is a no-op — the guard exists for
-    * the tiny-file regime where Catalyst has no reason to add the
-    * exchange the CPU profile needs. */
-  private def spreadInput(df: DataFrame): DataFrame = {
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < want) df.repartition(want) else df
-  }
-
   /** Single-scan DATA-QUALITY audit (the Deequ discipline): every
     * row-local constraint is a conditional sum fused into ONE partial
     * aggregate, so auditing N constraints costs one corpus pass — not
@@ -379,8 +363,8 @@ object Engine {
   def globalIds(df: DataFrame, orderCol: String,
       outCol: String = "global_id"): DataFrame = {
     // repartitionByRange IS the spread: it redistributes any input
-    // layout across shuffle-partition count ranges, so a spreadInput
-    // here would only stack a second (round-robin) exchange under it.
+    // layout across shuffle-partition count ranges, so a
+    // Spread.roundRobin here would only stack a second exchange under it.
     val sorted = df.repartitionByRange(col(orderCol))
       .sortWithinPartitions(col(orderCol))
     val schema = sorted.schema.add(outCol, LongType, nullable = false)
@@ -562,7 +546,7 @@ object Engine {
   def minHashNearDups(df: DataFrame, id: String, text: String,
       threshold: Double = 0.8, numHashes: Int = 64,
       bands: Int = 16, shingleWords: Int = 3): DataFrame = {
-    val docs = spreadInput(df)
+    val docs = Spread.roundRobin(df)
       .withColumn("__words", split(col(text), " "))
       .withColumn("__sv", wordNgrams(col("__words"), shingleWords))
       .select(col(id).as("__id"), col("__sv"))
@@ -697,7 +681,7 @@ object Engine {
       maxCandidatePairs: Long = exactJoinDefaultBudget): DataFrame = {
     require(thresholdPct >= 1 && thresholdPct <= 100)
     graft.plans.SortedIntersectCount.register(df.sparkSession)
-    val docs = spreadInput(df)
+    val docs = Spread.roundRobin(df)
       .withColumn("__words", split(col(text), " "))
       .withColumn("__sv", sort_array(wordNgrams(col("__words"), ngramWords)))
       .filter(size(col("__sv")) >= 1)
@@ -880,9 +864,9 @@ object Engine {
     * production scale untested). The property also serves as an ops
     * tuning knob for executors whose memory budget differs from the
     * deployment contract's. */
-  def verifyBroadcastMaxDocs: Long =
-    sys.props.get("graft.verifyBroadcastMaxDocs").map(_.toLong)
-      .getOrElse(250000L)
+  def verifyBroadcastMaxDocs: Long = VerifyBroadcastMaxDocs.value
+  private[graft] val VerifyBroadcastMaxDocs = Knob("verifyBroadcastMaxDocs",
+    default = 250000L, min = 0L, max = Long.MaxValue)
 
   /** Gate for [[searchMinHashIndex]]'s PINNED ids-only candidate
     * broadcast (pairs, not docs — the broadcast ships two longs per
@@ -1531,7 +1515,7 @@ object Engine {
       maxCandidatePairs: Long = exactJoinDefaultBudget): DataFrame = {
     require(thresholdPct >= 1 && thresholdPct <= 100)
     graft.plans.SortedIntersectCount.register(contained.sparkSession)
-    def docsOf(df: DataFrame) = spreadInput(df)
+    def docsOf(df: DataFrame) = Spread.roundRobin(df)
       .withColumn("__words", split(col(text), " "))
       .withColumn("__sv", sort_array(wordNgrams(col("__words"), ngramWords)))
       .filter(size(col("__sv")) >= 1)
@@ -1705,8 +1689,9 @@ object Engine {
     * that fires is not necessarily WRONG — the q90h fixture fires at
     * ρ ≈ 12 and its oracle still measures banded == exact, because no
     * true pair happens to live in the blind region — but its safety is
-    * then a per-round MEASUREMENT (oracle gate + DedupRecall), not a
-    * structural guarantee, and the note says so in the run log. */
+    * then a MEASUREMENT (the oracle gate, and the exact-vs-banded
+    * contrast ledgered in RECALL.json `dedup_recall`), not a structural
+    * guarantee, and the note says so in the run log. */
   private[graft] def containmentBandingRisk(naMin: Long, nbMax: Long,
       thresholdPct: Int, numHashes: Int, bands: Int): Option[String] = {
     if (naMin <= 0 || nbMax <= 0) return None
@@ -1734,8 +1719,9 @@ object Engine {
         f"probability up to $miss%.3f (worst QUALIFYING pair at " +
         f"threshold $thresholdPct%%: J ≥ $jQual%.4f, miss up to " +
         f"${missAt(jQual)}%.3f) — banded recall on this corpus " +
-        "is certified by the per-round oracle/DedupRecall measurement, " +
-        "not by construction; if asymmetric wrappers matter, route " +
+        "is certified by the oracle gate and the RECALL.json " +
+        "dedup_recall measurement, not by construction; if " +
+        "asymmetric wrappers matter, route " +
         "through containmentJoin (the exact prefix path behind the " +
         "priced refusal gate); containmentBandingAudit returns this " +
         "audit as a gateable row")
@@ -1817,7 +1803,7 @@ object Engine {
       maxCandidatePairs: Long = exactJoinDefaultBudget): DataFrame = {
     require(thresholdPct >= 1 && thresholdPct <= 100)
     graft.plans.SortedIntersectCount.register(left.sparkSession)
-    def docsOf(df: DataFrame) = spreadInput(df)
+    def docsOf(df: DataFrame) = Spread.roundRobin(df)
       .withColumn("__words", split(col(text), " "))
       .withColumn("__sv", sort_array(wordNgrams(col("__words"), ngramWords)))
       .filter(size(col("__sv")) >= 1)
@@ -1988,11 +1974,9 @@ object Engine {
   }
 
   /** Candidate stage of [[minHashJoinAcross]] — the banded bipartite
-    * equi-join, exposed at package scope so the DedupRecall probe can
-    * COUNT candidate volume with the production hash family instead of
-    * a drift-prone copy. Inputs are the (__id, __sv) doc tables; output
-    * is the distinct (left_id, right_id) candidate set. */
-  private[graft] def minHashCandidatesAcross(dl: DataFrame, dr: DataFrame,
+    * equi-join. Inputs are the (__id, __sv) doc tables; output is the
+    * distinct (left_id, right_id) candidate set. */
+  private def minHashCandidatesAcross(dl: DataFrame, dr: DataFrame,
       numHashes: Int, bands: Int, broadcastBounded: Boolean): DataFrame = {
     def bounded(df: DataFrame) = if (broadcastBounded) broadcast(df) else df
     // each side's band table is row-local (the minHashBands kernel): the
@@ -2014,7 +1998,7 @@ object Engine {
   /** Internal: (__id, __text, __sv) — EVERY row of `df`, spread, with its
     * sorted distinct word n-gram set (empty below `ngramWords` words). */
   private def shingleFrame(df: DataFrame, id: String, text: String,
-      ngramWords: Int): DataFrame = spreadInput(df)
+      ngramWords: Int): DataFrame = Spread.roundRobin(df)
     .select(col(id).as("__id"), col(text).as("__text"), sort_array(
       wordNgrams(split(col(text), " "), ngramWords)).as("__sv"))
 
@@ -2935,7 +2919,7 @@ object Engine {
     * fixtures' isotropic unit vectors, and a corpus with tighter
     * neighborhoods (real text embeddings cluster) over-provisions
     * tables ~2× if sized against it. This estimates the design point
-    * FROM DATA with one bounded exact pass (the RecallProbe truth
+    * FROM DATA with one bounded exact pass (RECALL.json's truth
     * machinery): exact [[cosineTopK]] over a query sample, each
     * query's k-th-neighbor cosine (its worst retrieved neighbor when
     * fewer than k exist), and the `pct` NEAREST-RANK percentile of
@@ -3013,7 +2997,7 @@ object Engine {
     * past the dimension cap. The coordinate-pair codes of [[lshTopK]]
     * spend 2 embedding dims per bit and give each table a DISJOINT
     * coordinate range, so a 64-dim embedding caps out at 4 tables × 8
-    * bits — and RecallProbe measured that cap as recall decaying to
+    * bits — and RECALL.json records that cap as recall decaying to
     * ~0.55 by 20k vectors (buckets grow, the probed fraction with
     * them). Here each bit is the sign of the vector's dot product with
     * a pseudo-random sparse ±1/0 hyperplane (the [[signProjection]]
@@ -4600,7 +4584,7 @@ object Engine {
     // no codes, no error — distinct from the all-zero vector, which
     // quantizes to zero codes); emitting an all-NULL row instead would
     // just defer the malformed input to the consumer
-    val base = spreadInput(vecs).filter(size(col(vec)) >= 1)
+    val base = Spread.roundRobin(vecs).filter(size(col(vec)) >= 1)
       .select(col(id).as("vec_id"), col(vec).as("__v"))
       .withColumn("__scale",
         expr("array_max(transform(__v, x -> abs(CAST(x AS DOUBLE))))")
@@ -4628,8 +4612,8 @@ object Engine {
     * partitioning. */
   private def dsirBuckets(docs: DataFrame, id: Column, text: Column,
       isTarget: Column, buckets: Int): DataFrame = {
-    val d = spreadInput(docs.select(id.as("__id"), isTarget.as("__tgt"),
-      split(text, " ").as("__w")))
+    val d = Spread.roundRobin(docs.select(id.as("__id"),
+      isTarget.as("__tgt"), split(text, " ").as("__w")))
     d.select(col("__id"), col("__tgt"),
         explode(concat(col("__w"), positionalNgrams(col("__w"), 2)))
           .as("__g"))
@@ -4774,7 +4758,7 @@ object Engine {
       centroids.select(col(cid).as("__cid"), col(cvec).as("__ce")))
     val aw = Window.partitionBy(col("__vid"))
       .orderBy(col("__cos").desc, col("__cid").asc)
-    val cells = spreadInput(vecs)
+    val cells = Spread.roundRobin(vecs)
       .select(col(id).as("__vid"), col(vec).as("__e"))
       .crossJoin(cent)
       .select(col("__vid"), col("__cid"),

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev main (alongside Bench/Verify/RecallProbe): print the formatted
+/** Dev main (alongside Bench/Verify): print the formatted
   * physical plan of named registry queries — the `.explain("formatted")`
   * loop the scale methodology calls for, runnable as
   * `sbt "runMain graft.Explain q93l_dsir_weights [q…]" `. Uses the same

@@ -5,12 +5,6 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // Same guard as graft.Bench: the StreamSizing batching override
-    // must never leak into a correctness dump (q78/q78b's registered
-    // mfpt=1 is a correctness contract).
-    require(!sys.props.contains("graft.stream.mfpt"),
-      "graft.stream.mfpt is set — a profiling override, not a valid " +
-        "verify configuration; unset it")
     val (sfDir, outDir) = (args(0), args(1))
     // Optional trailing args: query names to dump (default = all) — dev
     // loop aid; the driver always runs the full set.

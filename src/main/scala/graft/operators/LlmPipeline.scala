@@ -743,7 +743,7 @@ object LlmPipeline {
     // Q99i (beyond-survey) — ANN RECALL EVALUATION as a registered
     // operator, not a dev script: every production ANN deployment ships
     // the job that measures what its index actually recalls (the
-    // "measure, don't guess" discipline RecallProbe applies in tests,
+    // "measure, don't guess" discipline of the RECALL.json ledger,
     // promoted to the query surface). The approximate side is the q99
     // multi-table LSH plan; ground truth is the q92 exact plan over the
     // SAME bounded query sample; recall@3 is one lean (query_id,
@@ -1134,8 +1134,8 @@ object LlmPipeline {
     // real candidates / 1.1 GB spill on the 10× fixture, the last sf1
     // spill the qio ledger carried through r14), which no registered
     // bench query should pay when the banded path returns the same
-    // verified answer (DedupRecall measures banded == exact 100% on
-    // this fixture, committed in RECALL.json; miss prob (1−J⁴)¹⁶ ≤
+    // verified answer (RECALL.json `dedup_recall` records banded ==
+    // exact 100% on this fixture; miss prob (1−J⁴)¹⁶ ≤
     // 1.5e-7 at the fixture's J ≥ 0.889 dup population). The oracle is
     // deliberately EXACT (the batch×history brute force), so the recall
     // claim stays hash-gated per round, not prose — a mismatch on fresh
@@ -2986,7 +2986,7 @@ object LlmPipeline {
     // ([[graft.Engine.lshTopKHyper]]): q99's growth axis past the
     // dimension cap. q99/q99d spend 2 embedding coordinates per code
     // bit over disjoint per-table ranges, so 64 dims hard-caps the
-    // family at 4 tables × 8 bits — and RecallProbe measured recall
+    // family at 4 tables × 8 bits — and RECALL.json records recall
     // decaying as the corpus outgrows that ceiling (0.74 at 2k
     // vectors for the sized coordinate path vs 0.90 for this one,
     // same probe). Here every bit is the sign of a whole-vector dot
@@ -3019,8 +3019,8 @@ object LlmPipeline {
     // rows — the SignProject kernel runs natively on ARRAY<DOUBLE>, and
     // the 6-dp z grid makes its long fixed-point rounding lossless, so
     // both engines compute identical sign bits. Whitened-vs-raw recall
-    // at the stress fixtures is ledgered in RECALL.json (RecallProbe's
-    // whitened section); this registration hash-gates the construction.
+    // at the stress fixtures is ledgered in RECALL.json (its
+    // `whitened_*` columns); this registration hash-gates the construction.
     // GEOMETRY (r16): tables=8 here is the HASH-GATE geometry — a
     // fixed, oracle-replayable construction over the bounded k=3 query
     // set, kept stable so round-over-round hashes compare. It is NOT
@@ -4907,7 +4907,7 @@ object LlmPipeline {
     * pipeline as CTEs of ONE query, joined into per-query recall@3 —
     * the q99i discipline extended to the hyperplane family (r10 verdict
     * item 5), so the headline hyperplane recall claim is continuously
-    * hash-gated rather than living only in the RecallProbe dev tool. */
+    * hash-gated rather than living only in the RECALL.json ledger. */
   private def hyperRecallOracleSql: String =
     s"""WITH ${hyperRankedCtes()},
        |ap AS (SELECT query_id, vec_id FROM ranked WHERE rnk <= 3),

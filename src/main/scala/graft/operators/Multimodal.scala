@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.{Q, Tables}
+import graft.{Q, Spread, Tables}
 import graft.Canon.orderAll
 import graft.sources.IO
 
@@ -432,23 +432,13 @@ object Multimodal {
     "natural_color" -> Seq(1, 2, 3),
     "ir108" -> Seq(1))
 
-  /** Raise the blob stream to session parallelism when it arrives with
-    * fewer partitions: a decode pipeline has no exchange of its own, so
-    * a one-file scan would otherwise run every codec serially (the
-    * Engine.spreadInput lesson applied to the typed path). No-op at
-    * production scale, where the blob scan carries many splits. */
-  private def spread(blobs: Dataset[MediaBlob]): Dataset[MediaBlob] = {
-    val want = blobs.sparkSession.sparkContext.defaultParallelism
-    if (blobs.rdd.getNumPartitions < want) blobs.repartition(want) else blobs
-  }
-
   /** The mapPartitions feature-extract operator: one decoder per
     * partition, streamed iteration (no per-row codec setup, no
     * collect). */
   def extractFeatures(blobs: Dataset[MediaBlob], decoder: MediaDecoder)(
       implicit s: SparkSession): Dataset[MediaFeatures] = {
     import s.implicits._
-    spread(blobs).mapPartitions { it =>
+    Spread.roundRobin(blobs).mapPartitions { it =>
       decoder.open()
       it.map(decoder.decode)
     }
@@ -497,7 +487,7 @@ object Multimodal {
       implicit s: SparkSession): Dataset[ThumbFeatures] = {
     require(side >= 1)
     import s.implicits._
-    spread(blobs).mapPartitions { it =>
+    Spread.roundRobin(blobs).mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false)
       it.map { b =>
         val img = javax.imageio.ImageIO.read(
@@ -542,7 +532,7 @@ object Multimodal {
     require(side >= 1 && side <= 8, "aHash packs side*side bits into i64")
     import s.implicits._
     val n = side * side
-    spread(blobs).mapPartitions { it =>
+    Spread.roundRobin(blobs).mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false)
       it.map { b =>
         val img = javax.imageio.ImageIO.read(
@@ -583,7 +573,7 @@ object Multimodal {
   def sampleFrames(blobs: Dataset[MediaBlob], stride: Int)(
       implicit s: SparkSession): Dataset[FrameSample] = {
     import s.implicits._
-    spread(blobs).mapPartitions { it =>
+    Spread.roundRobin(blobs).mapPartitions { it =>
       it.flatMap { b =>
         AviDecoder.frameMeans(b, stride).map { case (idx, mean) =>
           FrameSample(b.doc_id, idx, mean)
@@ -604,7 +594,7 @@ object Multimodal {
   def clipShingles(blobs: Dataset[MediaBlob])(
       implicit s: SparkSession): Dataset[ClipShingle] = {
     import s.implicits._
-    spread(blobs).mapPartitions { it =>
+    Spread.roundRobin(blobs).mapPartitions { it =>
       it.flatMap { b =>
         AviDecoder.frameMeans(b, stride = 1).map(_._2)
           .sliding(3).filter(_.size == 3).zipWithIndex.map {
@@ -645,7 +635,7 @@ object Multimodal {
       implicit s: SparkSession): Dataset[AudioSample] = {
     require(factor >= 1)
     import s.implicits._
-    spread(blobs).mapPartitions { it =>
+    Spread.roundRobin(blobs).mapPartitions { it =>
       val reader = WavCodec.open() // one provider walk per partition
       it.map { b =>
         val (pcm, _) = WavCodec.pcm(reader, b)
@@ -680,7 +670,7 @@ object Multimodal {
       threshold: Long)(implicit s: SparkSession): Dataset[VadStats] = {
     require(window >= 1 && threshold >= 0)
     import s.implicits._
-    spread(blobs).mapPartitions { it =>
+    Spread.roundRobin(blobs).mapPartitions { it =>
       val reader = WavCodec.open() // one provider walk per partition
       it.map { b =>
         val (pcm, _) = WavCodec.pcm(reader, b)
@@ -724,7 +714,7 @@ object Multimodal {
       implicit s: SparkSession): Dataset[SceneStats] = {
     require(threshold > 0)
     import s.implicits._
-    spread(blobs).mapPartitions { it =>
+    Spread.roundRobin(blobs).mapPartitions { it =>
       it.map { b =>
         val means = AviDecoder.frameMeans(b, stride = 1).toArray
         var changes = 0
@@ -786,7 +776,7 @@ object Multimodal {
   def extractWavFeatures(blobs: Dataset[MediaBlob])(
       implicit s: SparkSession): Dataset[MediaFeatures] = {
     import s.implicits._
-    spread(blobs).mapPartitions { it =>
+    Spread.roundRobin(blobs).mapPartitions { it =>
       val reader = WavCodec.open()
       it.map(b => WavDecoder.decodeWith(reader, b))
     }
@@ -797,7 +787,7 @@ object Multimodal {
   def extractGeoFeatures(blobs: Dataset[MediaBlob])(
       implicit s: SparkSession): Dataset[GeoRasterFeatures] = {
     import s.implicits._
-    spread(blobs).mapPartitions { it =>
+    Spread.roundRobin(blobs).mapPartitions { it =>
       val reader = GeoTiffDecoder.open()
       withDispose(it.map(b => GeoTiffDecoder.decode(reader, b)), reader)
     }
@@ -931,7 +921,7 @@ object Multimodal {
   def extractGeoTiles(blobs: Dataset[MediaBlob])(
       implicit s: SparkSession): Dataset[GeoRasterTile] = {
     import s.implicits._
-    spread(blobs).mapPartitions { it =>
+    Spread.roundRobin(blobs).mapPartitions { it =>
       val reader = GeoTiffDecoder.open()
       withDispose(it.map(b => GeoTiffTileDecoder.decodeTile(reader, b)),
         reader)

@@ -83,37 +83,13 @@ object Sources {
       out
     })
 
-  /** Trigger-sizing override for the profiling sweep
-    * ([[graft.StreamSizing]]): `-Dgraft.stream.mfpt=N` replaces every
-    * registered stream's maxFilesPerTrigger so per-trigger fixed
-    * overhead can be measured as a CURVE without forking the builders.
-    * Unset (the default, and every bench/verify run) leaves each
-    * query's registered batching untouched. */
-  private def mfptOverride: Option[Int] =
-    sys.props.get("graft.stream.mfpt").map { v =>
-      // Validated parse: a malformed value must fail with the knob's
-      // name, not an anonymous NumberFormatException from deep inside a
-      // stream builder. And honoring the override is LOUD — q78/q78b's
-      // registered mfpt=1 is a correctness contract (watermark
-      // progression across triggers is the tested behavior), so a
-      // leaked property must leave a trace in any run it touches; the
-      // ledger entrypoints (Bench/Verify) refuse to start with it set.
-      val n = v.toIntOption.filter(_ >= 1).getOrElse(sys.error(
-        s"graft.stream.mfpt must be a positive int, got '$v'"))
-      System.err.println(s"[sources] graft.stream.mfpt=$n OVERRIDES every " +
-        "registered stream's maxFilesPerTrigger (profiling knob — not a " +
-        "valid ledger configuration)")
-      n
-    }
-
   /** `events` as a file STREAM over the staged directory. Callers pick the
     * trigger / files-per-batch. Used by Q06 and the Q70–Q77 surface. */
   def eventsStream(s: SparkSession, dir: String, nFiles: Int = 1,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val staged = stageEvents(s, dir, nFiles)
     val r = s.readStream.schema(eventsSchema)
-    mfptOverride.orElse(maxFilesPerTrigger)
-      .foreach(n => r.option("maxFilesPerTrigger", n))
+    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
     r.parquet(staged)
   }
 
@@ -148,8 +124,7 @@ object Sources {
         out
       })
     val r = s.readStream.schema(documentsSchema)
-    mfptOverride.orElse(maxFilesPerTrigger)
-      .foreach(n => r.option("maxFilesPerTrigger", n))
+    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
     r.parquet(staged)
   }
 

@@ -373,11 +373,12 @@ class EngineSpec extends AnyFunSuite {
   test("graft.* knobs: a bad value fails naming the knob, a good one " +
       "parses, unset falls back to the default") {
     import Engine.{BucketCompactMaxFiles, ProbeBroadcastMaxCands,
-      SemDedupSlices}
+      SemDedupSlices, VerifyBroadcastMaxDocs}
     for ((knob, bad) <- Seq(SemDedupSlices -> "0",
         BucketCompactMaxFiles -> "0", ProbeBroadcastMaxCands -> "-1",
         SemDedupSlices -> "eight", BucketCompactMaxFiles -> "2147483648",
-        ProbeBroadcastMaxCands -> "")) {
+        ProbeBroadcastMaxCands -> "", VerifyBroadcastMaxDocs -> "-1",
+        VerifyBroadcastMaxDocs -> "x")) {
       val e = intercept[IllegalArgumentException](knob.parse(Some(bad)))
       assert(e.getMessage.contains(s"graft.${knob.name}="), e.getMessage)
     }
@@ -387,6 +388,9 @@ class EngineSpec extends AnyFunSuite {
     // 0 is the documented way to force the probe's shuffled attach
     assert(ProbeBroadcastMaxCands.parse(Some("0")) == 0L)
     assert(ProbeBroadcastMaxCands.parse(None) == 1000000L)
+    // 0 forces the verify stage's sort-merge attach
+    assert(VerifyBroadcastMaxDocs.parse(Some("0")) == 0L)
+    assert(VerifyBroadcastMaxDocs.parse(None) == 250000L)
   }
 
   test("q99/q99b ANN recall@3 against the exact top-k is a bound, not prose") {

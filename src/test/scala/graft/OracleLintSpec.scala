@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Executable lint for the ORACLE side of the registry (the q47j lesson
   * as a test, like PlanSpec's nested-output lint is the q92t lesson):
@@ -103,5 +104,20 @@ class OracleLintSpec extends AnyFunSuite {
         " — rerun tools/gen_readme_map.py")
     assert(listed == registered, s"missing: ${registered -- listed}, " +
       s"stale: ${listed -- registered}")
+  }
+
+  test("dev mains: only Bench, Verify and Explain define `def main(`") {
+    // each extra main builds its own SparkSession (and usually its own
+    // listener); a new measurement belongs in Bench's listener or a
+    // ledger, not in another one-shot probe
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(
+      "src/main/scala"))
+    val mains = try files.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && new String(
+        java.nio.file.Files.readAllBytes(p), "UTF-8").contains("def main("))
+      .map(_.getFileName.toString).toSet
+    finally files.close()
+    assert(mains == Set("Bench.scala", "Verify.scala", "Explain.scala"),
+      s"files defining a main: ${mains.toSeq.sorted.mkString(", ")}")
   }
 }

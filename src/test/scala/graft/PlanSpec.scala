@@ -336,9 +336,9 @@ class PlanSpec extends AnyFunSuite {
     val p = graft.operators.Multimodal.sceneChanges(blobs, 100.0)
       .queryExecution.executedPlan.toString
     // frame adjacency lives inside the blob: no keyed shuffle anywhere
-    // (the one RoundRobin exchange is spread()'s decode balancer over
-    // BLOB rows; the registered query's orderAll sort is the
-    // driver-compare determinism wrapper — neither moves a frame).
+    // (the one RoundRobin exchange is Spread.roundRobin's decode
+    // balancer over BLOB rows; the registered query's orderAll sort is
+    // the driver-compare determinism wrapper — neither moves a frame).
     assert(!p.contains("hashpartitioning"), p)
     assert(!p.contains("rangepartitioning"), p)
     assert(!p.contains("SinglePartition"), p)

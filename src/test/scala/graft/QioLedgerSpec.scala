@@ -85,8 +85,8 @@ class QioLedgerSpec extends AnyFunSuite {
     *    gram-saturated fixture, SURVEY §8/r11 verdict #2).
     * Both exact forms survive as library operators behind the priced
     * refusal gate (the wrapper-asymmetry / exact-recall fallbacks), and
-    * DedupRecall keeps the exact-vs-banded contrast MEASURED at sf1
-    * (RECALL.json dedup sections) rather than paid per bench sweep.
+    * RECALL.json `dedup_recall` keeps the exact-vs-banded contrast
+    * MEASURED at sf1 rather than paid per bench sweep.
     * q90p's 2.6 GB sf1 flood (r11) was caught only by a MANUAL sweep —
     * this test is that sweep's assertion, in CI (r11 verdict item 3). */
   private val sf1SpillFloors = Map.empty[String, Long]
