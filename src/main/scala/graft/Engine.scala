@@ -4205,18 +4205,6 @@ object Engine {
         col("__v").as("v"))).getField("v").as("value"))
   }
 
-  /** Small-file COMPACTION for a partitioned parquet layout — the
-    * maintenance pass every long-running partitioned sink needs (the
-    * slot pipeline emits one file per task per tick; a year of 15-min
-    * slots at fleet parallelism is millions of small files, and scan
-    * cost at 100 TB is dominated by file-open overhead once files drop
-    * below the HDFS/S3 block size). Rewrites `inPath` to `outPath` with
-    * each partition VALUE coalesced into exactly one task's output: a
-    * hash repartition on the partition columns sends every value to one
-    * task, and the partitioned writer splits per value, so the output is
-    * one file per partition value. Content is untouched — the companion
-    * query's oracle proves the round-trip, SourcesSpec proves the file
-    * counts. */
   /** RETENTION VACUUM over a partitioned layout: delete every
     * `partitionCol=value` directory whose value sorts strictly below
     * `cutoff` (lexicographic — exact for the ISO-date/zero-padded slot
@@ -4261,6 +4249,18 @@ object Engine {
     keep.map(p => valueOf(p.getName)).toSeq.sorted
   }
 
+  /** Small-file COMPACTION for a partitioned parquet layout — the
+    * maintenance pass every long-running partitioned sink needs (the
+    * slot pipeline emits one file per task per tick; a year of 15-min
+    * slots at fleet parallelism is millions of small files, and scan
+    * cost at 100 TB is dominated by file-open overhead once files drop
+    * below the HDFS/S3 block size). Rewrites `inPath` to `outPath` with
+    * each partition VALUE coalesced into exactly one task's output: a
+    * hash repartition on the partition columns sends every value to one
+    * task, and the partitioned writer splits per value, so the output is
+    * one file per partition value. Content is untouched — the companion
+    * query's oracle proves the round-trip, SourcesSpec proves the file
+    * counts. */
   def compact(spark: org.apache.spark.sql.SparkSession, inPath: String,
       outPath: String, partitionCols: Seq[String]): Unit = {
     require(partitionCols.nonEmpty, "compact targets a partitioned layout")

@@ -7,7 +7,7 @@ import java.time.temporal.ChronoUnit
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference pipeline's cursor document and its atomic store —
@@ -31,10 +31,6 @@ object CursorStore {
         .map(m => Instant.from(fmt.parse(m.group(1))))
     }
 
-  /** Local-path convenience overload (tests). */
-  def read(path: java.nio.file.Path): Option[Instant] =
-    read(path.toUri.toString)
-
   /** Atomic commit (fs.py:21-48): same-directory temp file, sync, rename. */
   def commit(path: String, slot: Instant, now: Instant,
       conf: Configuration = new Configuration()): Unit = {
@@ -43,10 +39,6 @@ object CursorStore {
     AtomicFs.write(new HPath(path),
       json.getBytes(StandardCharsets.UTF_8), conf)
   }
-
-  /** Local-path convenience overload (tests). */
-  def commit(path: java.nio.file.Path, slot: Instant, now: Instant): Unit =
-    commit(path.toUri.toString, slot, now)
 }
 
 /** One tick's outcome. */
@@ -115,20 +107,23 @@ final class SlotPipeline(spark: SparkSession, stateFile: String,
         // A10–A15 analog: process the slot's source rows and publish them
         // under a slot-keyed partition (path-encoded layout).
         val slotEnd = java.sql.Timestamp.from(slot.plusSeconds(slotStep))
-        // cache spans the write + count so the slot's source rows are
-        // filtered once, not twice (a slot is 15 min of data — bounded)
-        val out = source
-          .filter(col("ts") >= lit(slotTs) && col("ts") < lit(slotEnd))
-          .withColumn("slot_key",
-            lit(DateTimeFormatter.ISO_INSTANT.format(slot).replace(":", "-")))
-          .cache()
-        val n =
-          try {
-            out.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("slot_key").parquet(outputDir)
-            out.count()
-          } finally out.unpersist()
+        val slotKey =
+          lit(DateTimeFormatter.ISO_INSTANT.format(slot).replace(":", "-"))
+        // The count rides on the write as an Observation, so the publish
+        // is one job per output. Each publish attaches a fresh one to the
+        // very frame it writes: `get` waits with no timeout.
+        def publish(ds: Dataset[_], dir: String): Long = {
+          val written = new Observation()
+          ds.withColumn("slot_key", slotKey)
+            .observe(written, count(lit(1)).as("n"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("slot_key").parquet(dir)
+          written.get("n").asInstanceOf[Long]
+        }
+        val n = publish(
+          source.filter(col("ts") >= lit(slotTs) && col("ts") < lit(slotEnd)),
+          outputDir)
         // A7/A8 analog: when a transport is injected, fetch the matched
         // product's archive and publish its decompressed members under
         // the same slot partition — same dynamic-overwrite idempotency,
@@ -136,17 +131,8 @@ final class SlotPipeline(spark: SparkSession, stateFile: String,
         val nBlobs = fetcher.fold(0L) { f =>
           implicit val s: SparkSession = spark
           import spark.implicits._
-          val entries = Blobs
-            .fetchAndExplode(spark.createDataset(Seq(id)), f)
-            .withColumn("slot_key",
-              lit(DateTimeFormatter.ISO_INSTANT.format(slot).replace(":", "-")))
-            .cache()
-          try {
-            entries.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("slot_key").parquet(s"$outputDir-blobs")
-            entries.count()
-          } finally entries.unpersist()
+          publish(Blobs.fetchAndExplode(spark.createDataset(Seq(id)), f),
+            s"$outputDir-blobs")
         }
         afterWrite() // crash seam: fires between publish and commit
         CursorStore.commit(stateFile, slot, now, hconf) // A16: commit LAST

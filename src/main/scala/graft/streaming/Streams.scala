@@ -62,47 +62,10 @@ object Streams {
     */
   private val statePartitions = 4
 
-  /** Dev knob: run the streaming family against an alternate state-store
-    * provider (`SPARK_GRAFT_STATE_PROVIDER=rocksdb`) to A/B the store
-    * cost. MEASURED at sf0.1, q78+q78b back to back (min-of-2 passes
-    * each): default HDFS-backed store 8.4 s combined, RocksDB 10.7 s —
-    * ~27% slower, so the default store stays. The shape of the result is
-    * the expected one: RocksDB pays a native commit (JNI boundary +
-    * memtable/SST machinery) per store instance per trigger, which
-    * multiplies across 4 state partitions × 4 stores of a two-sided
-    * join, while the replay's live-key count (~150 users) never
-    * approaches the heap pressure RocksDB exists to relieve. At
-    * production state volume (10⁷+ live keys per partition, state ≫
-    * executor heap, changelog checkpointing) the tradeoff inverts and
-    * this knob is the cutover — the provider is a config, not a plan
-    * change, so the choice stays a deployment decision. */
-  private def stateProviderConf: Option[String] =
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER")
-      // the cluster deployment profile (Bench SPARK_GRAFT_PROFILE=
-      // cluster) injects the same choice via a system property — env
-      // vars are immutable in-JVM
-      .orElse(sys.props.get("graft.stateProvider")).collect {
-      case "rocksdb" =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    }
-
   private def withStatePartitions[T](s: SparkSession)(f: => T): T = {
     val old = s.conf.get("spark.sql.shuffle.partitions")
-    val oldProv = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     s.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    stateProviderConf.foreach(
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
-    try f finally {
-      s.conf.set("spark.sql.shuffle.partitions", old)
-      stateProviderConf.foreach { _ =>
-        oldProv match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-      }
-    }
+    try f finally s.conf.set("spark.sql.shuffle.partitions", old)
   }
 
   /** Run `df` to a parquet file sink (exactly-once via _spark_metadata +

@@ -120,4 +120,30 @@ class OracleLintSpec extends AnyFunSuite {
     assert(mains == Set("Bench.scala", "Verify.scala", "Explain.scala"),
       s"files defining a main: ${mains.toSeq.sorted.mkString(", ")}")
   }
+
+  test("system properties: no file under src/main/scala writes one") {
+    // a JVM-global write outlives the session that made it and leaks into
+    // every later query in the JVM; Spark settings belong on the session
+    // builder, program settings in constructor arguments or parameters
+    val write = """sys\.props\s*(\([^)]*\)\s*=[^=]|[+-]=)|System\.setProperty""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(
+      "src/main/scala"))
+    val writes = try files.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if write.findFirstIn(line).isDefined =>
+            s"${p.getFileName}:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    finally files.close()
+    assert(writes.isEmpty, writes.mkString("\n"))
+    // the detector fires on each write form and passes reads
+    Seq("""sys.props("graft.x") = "1"""", "sys.props += k -> v",
+      """sys.props -= "graft.x"""", """System.setProperty("a", "b")""")
+      .foreach(l => assert(write.findFirstIn(l).isDefined, l))
+    Seq("""sys.props.get("graft.x")""", """sys.props("a") == "b"""",
+      """sys.props.getOrElse("graft.io.dir", "x")""")
+      .foreach(l => assert(write.findFirstIn(l).isEmpty, l))
+  }
 }

@@ -60,13 +60,13 @@ class PipelineSpec extends AnyFunSuite {
         Stalled(Instant.parse("2024-01-01T11:45:00Z")))
     }
     // state still points at the last committed slot
-    assert(CursorStore.read(Paths.get(state)) ==
+    assert(CursorStore.read(state) ==
       Some(Instant.parse("2024-01-01T11:30:00Z")))
   }
 
   test("exact match on minute truncation; earliest (ts, id) candidate wins (A6)") {
     val (state, out) = fresh("exact")
-    CursorStore.commit(Paths.get(state),
+    CursorStore.commit(state,
       Instant.parse("2024-01-01T11:00:00Z"), T0) // next = 11:15
     val p = new SlotPipeline(spark, state, out)
     // two candidates inside minute 11:15 (off-by-seconds) + one at 11:14
@@ -74,14 +74,17 @@ class PipelineSpec extends AnyFunSuite {
     val catalog = mkCatalog(Seq("2024-01-01T11:14:59Z",
       "2024-01-01T11:15:30Z", "2024-01-01T11:15:10Z"))
     p.tick(catalog, mkSource(Nil), T0) match {
-      case Processed(_, id, _, _) => assert(id == "MSG4-2024-01-01T11:15:10Z")
+      case Processed(_, id, rows, blobEntries) =>
+        assert(id == "MSG4-2024-01-01T11:15:10Z")
+        // the empty source still publishes, and its write counts nothing
+        assert(rows == 0 && blobEntries == 0)
       case r => fail(s"expected a hit, got $r")
     }
   }
 
   test("crash between publish and commit replays the slot idempotently (A16/A17)") {
     val (state, out) = fresh("crash")
-    CursorStore.commit(Paths.get(state),
+    CursorStore.commit(state,
       Instant.parse("2024-01-01T11:00:00Z"), T0)
     val p = new SlotPipeline(spark, state, out)
     val catalog = mkCatalog(Seq("2024-01-01T11:15:00Z"))
@@ -101,7 +104,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("cursor file is the reference's JSON shape and written atomically (A16)") {
     val (state, _) = fresh("atomic")
-    CursorStore.commit(Paths.get(state),
+    CursorStore.commit(state,
       Instant.parse("2024-01-01T11:30:00Z"), T0)
     val json = new String(Files.readAllBytes(Paths.get(state)))
     assert(json.contains("\"date\": \"2024-01-01T11:30:00Z\""))
@@ -126,7 +129,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("a tick with a transport fetches + unzips the product archive (A7/A8)") {
     val (state, out) = fresh("fetch")
-    CursorStore.commit(Paths.get(state),
+    CursorStore.commit(state,
       Instant.parse("2024-01-01T11:00:00Z"), T0) // next = 11:15
     val stage = graft.sources.IO.scratch("pipeline_fetch_stage", "spec")
     val id = "MSG4-2024-01-01T11:15:00Z"
@@ -224,9 +227,9 @@ class PipelineSpec extends AnyFunSuite {
 
   test("golden trace: a tick fetches over HTTP, publishes, then commits (A7/A16)") {
     withHttpStub(zipOf("scene.nat" -> "raster-bytes",
-        "manifest.xml" -> "<m/>")) { (base, _) =>
+        "manifest.xml" -> "<m/>")) { (base, served) =>
       val (state, out) = fresh("http_fetch")
-      CursorStore.commit(Paths.get(state),
+      CursorStore.commit(state,
         Instant.parse("2024-01-01T11:00:00Z"), T0) // next = 11:15
       val fetcher = graft.pipeline.HttpBlobFetcher(base,
         "EO:EUM:DAT:MSG:HRSEVIRI", "key", "secret")
@@ -241,8 +244,12 @@ class PipelineSpec extends AnyFunSuite {
           new String(row.getAs[Array[Byte]]("content"), "UTF-8"))).toMap
       assert(blobs == Map("scene.nat" -> "raster-bytes",
         "manifest.xml" -> "<m/>"))
-      assert(CursorStore.read(Paths.get(state)) ==
+      assert(CursorStore.read(state) ==
         Some(Instant.parse("2024-01-01T11:15:00Z")))
+      // the archive was fetched once for the tick: counting the members
+      // must not re-run the download
+      assert(served.toArray(Array.empty[String]).toSeq == Seq("/token",
+        s"/collections/EO:EUM:DAT:MSG:HRSEVIRI/products/$id"))
     }
   }
 
@@ -274,13 +281,13 @@ class PipelineSpec extends AnyFunSuite {
       Instant.parse("2024-01-01T11:45:00Z")))
     assert(trace.last == Stalled(Instant.parse("2024-01-01T11:45:00Z")))
     // the cursor reflects the last COMMITTED slot, not the stalled one
-    assert(CursorStore.read(Paths.get(state)) ==
+    assert(CursorStore.read(state) ==
       Some(Instant.parse("2024-01-01T11:30:00Z")))
   }
 
   test("the DSv2 catalog source drives a tick end-to-end (A4 pushdown path)") {
     val (state, out) = fresh("dsv2")
-    CursorStore.commit(Paths.get(state),
+    CursorStore.commit(state,
       Instant.parse("2024-01-09T23:45:00Z"), T0) // next = 2024-01-10T00:00
     val p = new SlotPipeline(spark, state, out)
     val catalog = spark.read.format("graft.sources.CatalogSource").load()
