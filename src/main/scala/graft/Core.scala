@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.{CompletableFuture, ExecutionException, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.{Failure, Success}
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType,
   TimestampNTZType, TimestampType}
@@ -154,6 +159,51 @@ object Spread {
   def roundRobin[T](ds: Dataset[T]): Dataset[T] = {
     val want = ds.sparkSession.sparkContext.defaultParallelism
     if (ds.rdd.getNumPartitions < want) ds.repartition(want) else ds
+  }
+}
+
+/** Overlap two INDEPENDENT Spark actions (guide §2.6 — overlap
+  * independent jobs: actions are only sequential because the driver
+  * calls them sequentially), e.g. two writes of disjoint outputs, so the
+  * second job's tasks back-fill cores freed by the first job's tail.
+  *
+  * Each side runs on a daemon thread (a run never stays alive for it)
+  * with the CALLER's Spark thread-locals — active session, local
+  * properties, job artifact state — captured by
+  * `SQLExecution.withThreadLocalCaptured`, the path Spark's own
+  * broadcast futures take. A plain pool thread instead carries the
+  * local properties it inherited when it was created: a stale
+  * `spark.sql.execution.root.id` there files the side's write as a
+  * nested execution of an older, unrelated query. Both sides are
+  * awaited before anything is rethrown — never return with an action
+  * still in flight — and the first side's failure wins, the other's
+  * rides along as suppressed. This is the one concurrency primitive of
+  * `src/main` (OracleLintSpec keeps it so). */
+object Overlap {
+  private val pool = Executors.newCachedThreadPool {
+    val n = new AtomicInteger()
+    (r: Runnable) => {
+      val t = new Thread(r, s"graft-overlap-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  }
+
+  def both[A, B](spark: SparkSession)(a: => A, b: => B): (A, B) = {
+    def side[T](body: => T) = SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      pool)(body)
+    def await[T](f: CompletableFuture[T]) =
+      try Success(f.get())
+      catch { case e: ExecutionException => Failure(e.getCause) }
+    val (fa, fb) = (side(a), side(b))
+    (await(fa), await(fb)) match {
+      case (Success(x), Success(y)) => (x, y)
+      case (Failure(e), other) =>
+        other.failed.filter(_ ne e).foreach(e.addSuppressed)
+        throw e
+      case (_, Failure(e)) => throw e
+    }
   }
 }
 

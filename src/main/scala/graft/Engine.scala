@@ -49,24 +49,6 @@ object Engine {
       else df
   }
 
-  /** Run two INDEPENDENT write actions concurrently (guide §2.6 —
-    * overlap independent jobs: actions are only sequential because the
-    * driver calls them sequentially). The index writers land two
-    * disjoint outputs (bands table, docs table) from the same persisted
-    * doc table; submitting both lets the second job's tasks back-fill
-    * executors freed by the first job's tail instead of waiting for its
-    * last straggler. Both are awaited and the first failure rethrown —
-    * never return with a write still in flight. */
-  private def inParallel(a: => Unit, b: => Unit): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val fs = Seq(Future(a), Future(b))
-    fs.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-      .foreach(_.get)
-  }
-
   /** Single-scan DATA-QUALITY audit (the Deequ discipline): every
     * row-local constraint is a conditional sum fused into ONE partial
     * aggregate, so auditing N constraints costs one corpus pass — not
@@ -2029,6 +2011,7 @@ object Engine {
     * `at(sub, "trash")` — `__compact_<sub>` / `__trash_<sub>` beside
     * the live table. */
   private sealed trait DedupIndex {
+    def spark: org.apache.spark.sql.SparkSession
     /** live name of table `sub`, or of its compaction `stage` temp */
     def at(sub: String, stage: String = ""): String
     def read(sub: String): DataFrame
@@ -2079,11 +2062,11 @@ object Engine {
     def write(bandRows: => DataFrame, docRows: => DataFrame,
         overwrite: Boolean): Unit = {
       val mode = if (overwrite) "overwrite" else "append"
-      inParallel(
+      Overlap.both(spark)(
         // file-local sort on the probe key: row-group min/max skipping
         bandRows.sortWithinPartitions(BandKeys.map(col): _*)
           .write.mode(mode).parquet(at("bands")),
-        docRows.write.mode(mode).parquet(at("docs")))
+        docRows.write.mode(mode).parquet(at("docs"))): Unit
     }
     def afterAppend(): Unit = ()
     def exists(name: String): Boolean =
@@ -2136,8 +2119,8 @@ object Engine {
         overwrite: Boolean): Unit = {
       val mode = if (overwrite) "overwrite" else "append"
       if (overwrite) Seq("bands", "docs").foreach(t => remove(at(t)))
-      inParallel(save(bandRows, at("bands"), BandKeys, mode),
-        save(docRows, at("docs"), DocKeys, mode))
+      Overlap.both(spark)(save(bandRows, at("bands"), BandKeys, mode),
+        save(docRows, at("docs"), DocKeys, mode)): Unit
     }
     private def save(df: DataFrame, name: String, keys: Seq[String],
         mode: String): Unit =
@@ -2235,7 +2218,8 @@ object Engine {
     }
     // the two tables touch disjoint names — overlap the rewrites (guide
     // §2.6); each swap's internal order is unchanged
-    inParallel(swap("bands", BandKeys), swap("docs", DocKeys))
+    Overlap.both(ix.spark)(swap("bands", BandKeys),
+      swap("docs", DocKeys)): Unit
   }
 
   /** Probe an index with a new batch: (left_id = batch doc, right_id =
@@ -3515,13 +3499,13 @@ object Engine {
     // vecs/ and buckets/ are independent projections of the persisted z
     // — overlap them (guide §2.6); stats/ stays strictly first (z is
     // derived from the persisted stats by contract)
-    inParallel(
+    Overlap.both(ss)(
     z.select(col("vec_id"), col("__z").as("z"))
       .write.mode("overwrite").parquet(s"$indexPath/vecs"),
     hyperBuckets(z, "vec_id", "__z", tables, bits, dims)
       .select(col("vec_id"), col("tbl"), col("bucket"))
       .repartition(col("tbl")).sortWithinPartitions("tbl", "bucket")
-      .write.mode("overwrite").parquet(s"$indexPath/buckets"))
+      .write.mode("overwrite").parquet(s"$indexPath/buckets")): Unit
   }
 
   /** Serve whitened top-k from a [[buildWhitenedHyperIndex]] artifact:

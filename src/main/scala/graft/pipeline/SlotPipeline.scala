@@ -10,6 +10,8 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Overlap
+
 /** The reference pipeline's cursor document and its atomic store —
   * `sources/meteosat.py:61-80` + `utils/fs.py:21-48` re-expressed:
   * a JSON file `{"date": "...Z", "last_updated": "...Z"}`, written
@@ -64,8 +66,13 @@ final case class Stalled(slot: Instant) extends TickResult
   *    the minute-truncated timestamp, earliest (ts, id) candidate wins;
   *  - a miss stalls forever (no gap-skip), a hit processes the slot's
   *    source rows into a slot-partitioned parquet layout (A15 —
-  *    idempotent per slot: reprocessing overwrites the same partition);
-  *  - the cursor commits ONLY after the write succeeds (A16), so a crash
+  *    idempotent per slot: each publish is a direct overwrite of its one
+  *    `slot_key=<key>` directory, so reprocessing REPLACES the slot's
+  *    partition, an empty replay included);
+  *  - with a transport, the rows publish and the archive publish run
+  *    concurrently and the tick waits for both; a failure on either side
+  *    is rethrown only after the other side has finished;
+  *  - the cursor commits ONLY after both writes succeed (A16), so a crash
   *    between write and commit replays the slot idempotently (A17).
   */
 final class SlotPipeline(spark: SparkSession, stateFile: String,
@@ -107,32 +114,32 @@ final class SlotPipeline(spark: SparkSession, stateFile: String,
         // A10–A15 analog: process the slot's source rows and publish them
         // under a slot-keyed partition (path-encoded layout).
         val slotEnd = java.sql.Timestamp.from(slot.plusSeconds(slotStep))
-        val slotKey =
-          lit(DateTimeFormatter.ISO_INSTANT.format(slot).replace(":", "-"))
-        // The count rides on the write as an Observation, so the publish
-        // is one job per output. Each publish attaches a fresh one to the
-        // very frame it writes: `get` waits with no timeout.
+        val slotKey = DateTimeFormatter.ISO_INSTANT.format(slot)
+          .replace(":", "-")
+        // The slot partition is known, so each publish overwrites just
+        // its `<dir>/slot_key=<key>` directory, the layout readers
+        // discover. The count rides on the write as an Observation, so
+        // the publish is one job per output; each attaches a fresh one to
+        // the very frame it writes (`get` waits with no timeout).
         def publish(ds: Dataset[_], dir: String): Long = {
           val written = new Observation()
-          ds.withColumn("slot_key", slotKey)
-            .observe(written, count(lit(1)).as("n"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("slot_key").parquet(dir)
+          ds.observe(written, count(lit(1)).as("n"))
+            .write.mode("overwrite").parquet(s"$dir/slot_key=$slotKey")
           written.get("n").asInstanceOf[Long]
         }
-        val n = publish(
-          source.filter(col("ts") >= lit(slotTs) && col("ts") < lit(slotEnd)),
-          outputDir)
+        val rows =
+          source.filter(col("ts") >= lit(slotTs) && col("ts") < lit(slotEnd))
         // A7/A8 analog: when a transport is injected, fetch the matched
         // product's archive and publish its decompressed members under
-        // the same slot partition — same dynamic-overwrite idempotency,
-        // so a crash-replay republishes bit-identically.
-        val nBlobs = fetcher.fold(0L) { f =>
+        // the same slot partition of `<outputDir>-blobs`. The two
+        // publishes are independent, so they run concurrently; both have
+        // finished (or failed) before the tick goes on.
+        val (n, nBlobs) = fetcher.fold((publish(rows, outputDir), 0L)) { f =>
           implicit val s: SparkSession = spark
           import spark.implicits._
-          publish(Blobs.fetchAndExplode(spark.createDataset(Seq(id)), f),
-            s"$outputDir-blobs")
+          val blobs = Blobs.fetchAndExplode(spark.createDataset(Seq(id)), f)
+          Overlap.both(spark)(publish(rows, outputDir),
+            publish(blobs, s"$outputDir-blobs"))
         }
         afterWrite() // crash seam: fires between publish and commit
         CursorStore.commit(stateFile, slot, now, hconf) // A16: commit LAST

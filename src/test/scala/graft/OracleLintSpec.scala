@@ -146,4 +146,38 @@ class OracleLintSpec extends AnyFunSuite {
       """sys.props.getOrElse("graft.io.dir", "x")""")
       .foreach(l => assert(write.findFirstIn(l).isEmpty, l))
   }
+
+  test("concurrency: no file under src/main/scala names a Scala Future or the global pool") {
+    // a pool thread carries the Spark local properties it inherited when
+    // it was created, so an action submitted there can be filed under a
+    // stale root execution; concurrent actions go through Overlap.both,
+    // which runs each side with the caller's thread-locals captured
+    val named = Seq("""ExecutionContext\s*\.\s*(Implicits\s*\.\s*)?global""",
+      """scala\.concurrent\.(\{[^}]*)?\bFuture\b""",
+      """(?<![\w.])Future\s*[({.\[]""").mkString("|").r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(
+      "src/main/scala"))
+    val uses = try files.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if named.findFirstIn(line).isDefined =>
+            s"${p.getFileName}:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    finally files.close()
+    assert(uses.isEmpty, uses.mkString("\n"))
+    // the detector fires on each spelling and passes the JDK futures the
+    // helper itself uses
+    Seq("implicit val ec = scala.concurrent.ExecutionContext.global",
+      "import scala.concurrent.ExecutionContext.Implicits.global",
+      "import scala.concurrent.{Await, Future}",
+      "import scala.concurrent.Future", "val f = Future(write())",
+      "Future { a }", "Future.sequence(fs)")
+      .foreach(l => assert(named.findFirstIn(l).isDefined, l))
+    Seq("import java.util.concurrent.{CompletableFuture, Executors}",
+      "def await[T](f: CompletableFuture[T]) = f.get()",
+      "java.util.concurrent.Future[_]", "val futureRows = 3")
+      .foreach(l => assert(named.findFirstIn(l).isEmpty, l))
+  }
 }

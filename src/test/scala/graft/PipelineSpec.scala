@@ -2,10 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.time.Instant
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Blobs, CursorStore, LocalDirFetcher, Processed,
-  SlotPipeline, Stalled}
+import graft.pipeline.{BlobFetcher, Blobs, CursorStore, LocalDirFetcher,
+  Processed, SlotPipeline, Stalled}
 
 /** System-level golden trace of the Part A pipeline replica
   * (meteosat.py:82-122,187-188 semantics): bootstrap, one-slot-per-tick,
@@ -102,6 +103,28 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).count() == 2) // no duplicates
   }
 
+  test("a replay replaces the slot's partition, an empty replay included (A15/A17)") {
+    val (state, out) = fresh("replay_empty")
+    CursorStore.commit(state,
+      Instant.parse("2024-01-01T11:00:00Z"), T0)
+    val p = new SlotPipeline(spark, state, out)
+    val catalog = mkCatalog(Seq("2024-01-01T11:15:00Z"))
+    intercept[RuntimeException] {
+      p.tick(catalog,
+        mkSource(Seq("2024-01-01T11:16:00Z", "2024-01-01T11:17:00Z")), T0,
+        afterWrite = () => throw new RuntimeException("crash"))
+    }
+    assert(spark.read.parquet(out).count() == 2)
+    // the source lost the slot's rows before the replay: the slot now
+    // holds nothing, not the crashed tick's rows
+    p.tick(catalog, mkSource(Nil), T0) match {
+      case Processed(_, _, rows, _) => assert(rows == 0)
+      case r => fail(s"expected a hit, got $r")
+    }
+    assert(spark.read.parquet(out)
+      .filter(col("slot_key") === "2024-01-01T11-15-00Z").count() == 0)
+  }
+
   test("cursor file is the reference's JSON shape and written atomically (A16)") {
     val (state, _) = fresh("atomic")
     CursorStore.commit(state,
@@ -146,6 +169,112 @@ class PipelineSpec extends AnyFunSuite {
         new String(row.getAs[Array[Byte]]("content"), "UTF-8"))).toMap
     assert(blobs == Map("scene.nat" -> "raster-bytes",
       "manifest.xml" -> "<m/>"))
+  }
+
+  private def blobsOf(out: String): Map[String, Seq[Byte]] =
+    spark.read.parquet(s"$out-blobs").collect().map(row =>
+      row.getAs[String]("entry") ->
+        row.getAs[Array[Byte]]("content").toSeq).toMap
+
+  test("a failed archive fetch fails the tick only after the rows publish " +
+      "finished; the cursor stays and the rerun publishes the same slot (A16/A17)") {
+    val (state, out) = fresh("fetch_fails")
+    val (cleanState, cleanOut) = fresh("fetch_fails_clean")
+    Seq(state, cleanState).foreach(CursorStore.commit(_,
+      Instant.parse("2024-01-01T11:00:00Z"), T0)) // next = 11:15
+    val stage = graft.sources.IO.scratch("pipeline_fetch_fails_stage", "spec")
+    val id = "MSG4-2024-01-01T11:15:00Z"
+    stageZip(stage, id, "scene.nat" -> "raster-bytes",
+      "manifest.xml" -> "<m/>")
+    val catalog = mkCatalog(Seq("2024-01-01T11:15:00Z"))
+    val source = mkSource(Seq("2024-01-01T11:16:00Z", "2024-01-01T11:17:00Z"))
+    val refused = new BlobFetcher {
+      def fetch(identifier: String): Array[Byte] =
+        throw new java.io.IOException(s"download of $identifier refused")
+    }
+    // the rows publish outlasts the failing fetch, so a tick that did not
+    // wait for it would throw with its write still in flight; the
+    // exchange keeps the optimizer from running the UDF at planning time
+    val slowly = udf { (v: Double) => Thread.sleep(1500); v }
+    val slowSource =
+      source.repartition(1).withColumn("value", slowly(col("value")))
+    val e = intercept[Exception] {
+      new SlotPipeline(spark, state, out, fetcher = Some(refused))
+        .tick(catalog, slowSource, T0)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("refused")), e)
+    assert(CursorStore.read(state) ==
+      Some(Instant.parse("2024-01-01T11:00:00Z")))
+    // no write is still running once the tick has thrown: no committer
+    // staging is left, and the rows partition is whole or absent
+    Seq(out, s"$out-blobs").map(Paths.get(_)).filter(Files.exists(_))
+      .foreach { dir =>
+        val walk = Files.walk(dir)
+        val left = try walk.iterator.asScala.map(_.toString)
+          .filter(_.contains("_temporary")).toList finally walk.close()
+        assert(left.isEmpty, left.mkString(", "))
+      }
+    val part = Paths.get(out, "slot_key=2024-01-01T11-15-00Z")
+    if (Files.exists(part)) {
+      assert(Files.exists(part.resolve("_SUCCESS")))
+      assert(spark.read.parquet(part.toString).count() == 2)
+    }
+    // the rerun with a working transport equals a tick that never failed
+    val fetcher = Some(LocalDirFetcher(stage))
+    val r = new SlotPipeline(spark, state, out, fetcher = fetcher)
+      .tick(catalog, source, T0)
+    val clean = new SlotPipeline(spark, cleanState, cleanOut,
+      fetcher = fetcher).tick(catalog, source, T0)
+    assert(r == clean &&
+      r == Processed(Instant.parse("2024-01-01T11:15:00Z"), id, 2, 2))
+    def rows(o: String) = spark.read.parquet(o).orderBy("event_id")
+      .collect().toSeq
+    assert(rows(out) == rows(cleanOut))
+    assert(blobsOf(out) == blobsOf(cleanOut))
+    assert(CursorStore.read(state) ==
+      Some(Instant.parse("2024-01-01T11:15:00Z")))
+  }
+
+  test("each publish of a transport tick is its own root SQL execution") {
+    val (state, out) = fresh("root_execs")
+    CursorStore.commit(state,
+      Instant.parse("2024-01-01T11:00:00Z"), T0) // next = 11:15
+    val stage = graft.sources.IO.scratch("pipeline_root_execs_stage", "spec")
+    // a stale root id shows only once pool threads have been created
+    // during earlier writes, so the trace runs a dozen ticks
+    val slots = (0 until 12).map(i =>
+      Instant.parse("2024-01-01T11:15:00Z").plusSeconds(900L * i).toString)
+    slots.foreach(s => stageZip(stage, s"MSG4-$s", "scene.nat" -> s))
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          starts.add(s): Unit
+        case _ => ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val trace = try {
+      val p = new SlotPipeline(spark, state, out,
+        fetcher = Some(LocalDirFetcher(stage)))
+      val t = p.run(mkCatalog(slots), mkSource(Seq("2024-01-01T11:16:00Z")),
+        () => T0, maxTicks = slots.size)
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      t
+    } finally sc.removeSparkListener(listener)
+    assert(trace.count(_.isInstanceOf[Processed]) == slots.size)
+    val writes = starts.asScala.toSeq.filter(s =>
+      s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") &&
+        s.physicalPlanDescription.contains(out))
+    val nested = writes.filter(s =>
+      s.rootExecutionId.exists(_ != s.executionId))
+    assert(nested.isEmpty, nested.map(s =>
+      s"${s.executionId} under ${s.rootExecutionId}").mkString(", "))
+    assert(writes.size == 2 * slots.size)
   }
 
   /** In-process HTTP stub modeling the reference API surface: a `/token`
