@@ -591,21 +591,28 @@ object Engine {
     * driver-side collect — if the price exceeds the budget. The gate
     * rides the frequency table every prefix ranking already consumes, so
     * a refused join dies after one vocabulary-sized aggregate, BEFORE
-    * any candidate pair is generated or shuffled. */
-  private def candidateBudgetGate(freq: DataFrame, price: DataFrame,
-      opName: String, bandedExit: String, maxPairs: Long): DataFrame =
-    freq.crossJoin(broadcast(price))
-      .filter(when(col("__price") <= lit(maxPairs), lit(true))
-        .otherwise(raise_error(concat(
-          lit(s"$opName: priced exact-join candidate volume "),
-          col("__price").cast(DecimalType(38, 0)).cast(StringType),
-          lit(s" exceeds maxCandidatePairs=$maxPairs. The gram equi-join" +
-            s" would flood (the q90p lesson: a 2.6 GB spill this price" +
-            s" predicts in one cheap aggregate — see dedupCostAudit)." +
-            s" Use the banded exit ($bandedExit) for the same verified" +
-            s" answer, or pass maxCandidatePairs explicitly to run the" +
-            s" exact form anyway")))))
-      .drop("__price")
+    * any candidate pair is generated or shuffled. `price` maps the
+    * (persisted) frequency table to its 1-row price; `maxPairs` =
+    * Long.MaxValue opts out, returning `freq` unpriced. */
+  private def candidateBudgetGate(freq: DataFrame, opName: String,
+      bandedExit: String, maxPairs: Long)(
+      price: DataFrame => DataFrame): DataFrame =
+    if (maxPairs == Long.MaxValue) freq
+    else {
+      val gated = freq.persistOnce()
+      gated.crossJoin(broadcast(price(gated)))
+        .filter(when(col("__price") <= lit(maxPairs), lit(true))
+          .otherwise(raise_error(concat(
+            lit(s"$opName: priced exact-join candidate volume "),
+            col("__price").cast(DecimalType(38, 0)).cast(StringType),
+            lit(s" exceeds maxCandidatePairs=$maxPairs. The gram equi-join" +
+              s" would flood (the q90p lesson: a 2.6 GB spill this price" +
+              s" predicts in one cheap aggregate — see dedupCostAudit)." +
+              s" Use the banded exit ($bandedExit) for the same verified" +
+              s" answer, or pass maxCandidatePairs explicitly to run the" +
+              s" exact form anyway")))))
+        .drop("__price")
+    }
 
   /** N-gram Jaccard similarity join via PREFIX FILTERING (the
     * AllPairs/PPJoin family) — the deterministic-recall alternative to
@@ -646,53 +653,37 @@ object Engine {
     *    1 + min(|a|−ra, |b|−rb) ≥ α can be dropped: a qualifying pair's
     *    first shared prefix n-gram always survives, so recall stays 1.0.
     *
-    * Verification runs the codegen merge kernel
-    * [[graft.plans.SortedIntersectCount]] over per-document LEX-SORTED
-    * n-gram arrays (sorted once per doc, not per pair) — an
-    * allocation-free ~|a|+|b| walk per candidate instead of
-    * array_intersect's per-pair hash set. Measured at sf0.1 (5000 docs,
-    * 931-n-gram vocabulary — a worst case for prefix selectivity): raw
-    * candidate rows drop 12.8M → 8.85M via the asymmetric prefixes,
-    * then to 2.4M distinct pairs after the length/positional filters —
-    * for 256 true pairs — and the filters + merge kernel together took
-    * the operator from 23.4 s to ~8 s for the identical output.
+    * Verification is the family's one exact [[verify]] (the merge
+    * kernel over LEX-SORTED n-gram arrays). Measured at sf0.1 (5000
+    * docs, 931-n-gram vocabulary — a worst case for prefix
+    * selectivity): raw candidate rows drop 12.8M → 8.85M via the
+    * asymmetric prefixes, then to 2.4M distinct pairs after the
+    * length/positional filters — for 256 true pairs — and the filters
+    * + merge kernel together took the operator from 23.4 s to ~8 s for
+    * the identical output.
     */
   def jaccardJoin(df: DataFrame, id: String, text: String,
       thresholdPct: Int = 60, ngramWords: Int = 2,
-      suffixBound: Boolean = false,
-      maxCandidatePairs: Long = exactJoinDefaultBudget): DataFrame = {
+      maxCandidatePairs: Long = exactJoinDefaultBudget): DataFrame =
+    verify(jaccardCandidates(df, id, text, thresholdPct, ngramWords,
+      maxCandidatePairs))
+
+  /** [[jaccardJoin]]'s prefix-filter candidate half. */
+  private[graft] def jaccardCandidates(df: DataFrame, id: String,
+      text: String, thresholdPct: Int, ngramWords: Int,
+      maxCandidatePairs: Long): Candidates = {
     require(thresholdPct >= 1 && thresholdPct <= 100)
-    graft.plans.SortedIntersectCount.register(df.sparkSession)
-    val docs = Spread.roundRobin(df)
-      .withColumn("__words", split(col(text), " "))
-      .withColumn("__sv", sort_array(wordNgrams(col("__words"), ngramWords)))
-      .filter(size(col("__sv")) >= 1)
-      // __n is LONG from the start: every downstream product (__n · pct,
-      // __na + __nb, the verify filter) then runs in 64-bit — Int
-      // arithmetic would overflow (and under ANSI mode, throw) at ~21M
-      // n-grams per document (r3 advice).
-      .select(col(id).as("__id"), col("__sv"),
-        size(col("__sv")).cast("long").as("__n"))
-      // read three times (token explode + both verify sides): persist,
-      // not localCheckpoint — same recoverability rationale as
-      // minHashNearDups' banded signatures.
-      .persistOnce()
+    val docs = prefixDocTable(df, id, text, ngramWords)
     val tok = docs.select(col("__id"), col("__n"), explode(col("__sv")).as("__t"))
-    val dfreq0 = tok.groupBy("__t").agg(count(lit(1)).as("__df"))
     // priced refusal (see [[candidateBudgetGate]]): Σ df·(df−1)/2 — the
     // exact all-pairs volume of the gram equi-join (q90v's number) —
-    // must fit the budget before any candidate is generated. MaxValue
-    // opts out plan-unchanged (the q90d contrast-anchor override).
-    val dfreq =
-      if (maxCandidatePairs == Long.MaxValue) dfreq0
-      else {
-        val gated = dfreq0.persistOnce()
-        candidateBudgetGate(gated,
-          gated.agg(coalesce(
-            sum(expr("CAST(__df AS DECIMAL(38,0)) * (__df - 1) / 2")),
-            lit(0).cast(DecimalType(38, 6))).as("__price")),
-          "jaccardJoin", "minHashNearDups (q91)", maxCandidatePairs)
-      }
+    // must fit the budget before any candidate is generated
+    val dfreq = candidateBudgetGate(
+        tok.groupBy("__t").agg(count(lit(1)).as("__df")),
+        "jaccardJoin", "minHashNearDups (q91)", maxCandidatePairs)(
+      _.agg(coalesce(
+        sum(expr("CAST(__df AS DECIMAL(38,0)) * (__df - 1) / 2")),
+        lit(0).cast(DecimalType(38, 6))).as("__price")))
     val byDoc = Window.partitionBy(col("__id"))
     val pref = tok.join(dfreq, Seq("__t"))
       .withColumn("__rn", row_number().over(
@@ -701,7 +692,7 @@ object Engine {
         col("__n") - expr(s"(__n * $thresholdPct + 99) div 100") + 1)
       .select(col("__t"), col("__id"), col("__rn"), col("__n"))
       // the prefix pipeline runs once, not per join side (cache policy:
-      // see the docs persist above)
+      // see [[prefixDocTable]])
       .persistOnce()
     // PPJoin's ASYMMETRIC prefixes: order each pair by (size, id); the
     // SMALLER record only needs the INDEXING prefix of length
@@ -729,110 +720,127 @@ object Engine {
         col("__nb") * 100 >= col("__na") * thresholdPct &&
         col("__na") * 100 >= col("__nb") * thresholdPct &&
         least(col("__na") - col("__ra"), col("__nb") - col("__rb")) + 1 >= alpha)
-    // VERIFY-STAGE POLICY: reduce the candidate stream to a NARROW pair
-    // list first (a candidate recurs once per shared prefix n-gram, and
-    // on a saturated vocabulary that duplication factor alone multiplies
-    // verify work), by the [[suffixBoundReduce]] policy (default: the
-    // two-long dedup — the measured winner; opt-in: the exact PPJoin
-    // suffix-bound aggregate, see that method's scaladoc for the
-    // measured refutation).
-    val pruned = suffixBoundReduce(cands, suffixBound, "ida", "idb", alpha)
-      .select(least(col("ida"), col("idb")).as("doc_a"),
-        greatest(col("ida"), col("idb")).as("doc_b"))
-    // Then attach the n-gram arrays by the size-gated strategy of
-    // [[verifyBroadcastMaxDocs]]: a bounded corpus BROADCASTS its array
-    // table, so distinct pairs stream through two in-memory hash joins
-    // and the arrays never ride an exchange; past the gate, sort-merge —
-    // the only shape when the corpus outgrows a broadcast. The 10× scale
-    // fixture is the motivating regime: its ~31-word vocabulary
-    // saturates the trigram space, prefix selectivity collapses (10.9M
-    // candidates for 256 true pairs), and the old SMJ attach shipped
-    // every pair's arrays through two shuffles — measured 39–58 s solo
-    // at sf1 vs ~14 s streamed.
-    val nDocs = docs.count() // docs is persisted; also warms the verify side
-    val sa = docs.select(col("__id").as("doc_a"), col("__sv").as("__sa"))
-    val sb = docs.select(col("__id").as("doc_b"), col("__sv").as("__sb"))
-    val distinctPairs = pruned
-    val verified =
-      if (nDocs <= verifyBroadcastMaxDocs)
-        distinctPairs.join(broadcast(sa), Seq("doc_a"))
-          .join(broadcast(sb), Seq("doc_b"))
-      else
-        distinctPairs.join(sa, Seq("doc_a")).join(sb, Seq("doc_b"))
-    // Early-terminating merge (see [[graft.plans.SortedIntersectAtLeast]]):
-    // J ≥ t ⟺ inter ≥ α = ⌈t/(1+t)·(|a|+|b|)⌉, so α is the exact
-    // per-row required minimum — doomed candidates exit the walk in
-    // ~α steps, survivors return exact counts, output unchanged.
-    val inter = expr("sorted_intersect_count(__sa, __sb, " +
-      s"(CAST($thresholdPct AS BIGINT) * (size(__sa) + size(__sb)) + " +
-      s"${100 + thresholdPct - 1}) div ${100 + thresholdPct})")
-    val uni = size(col("__sa")) + size(col("__sb")) - inter
-    verified
-      .withColumn("jaccard", round(inter.cast(DoubleType) / uni, 6))
-      // 64-bit verify filter: inter/uni are Int-typed array sizes; the
-      // ×100/×pct products overflow Int at ~21M distinct n-grams, which
-      // ANSI mode turns into a job-killing exception (r3 advice).
-      .filter(inter.cast("long") * 100 >= uni.cast("long") * thresholdPct)
-      .select("doc_a", "doc_b", "jaccard")
+    // a candidate recurs once per shared prefix n-gram: reduce to the
+    // distinct pair list before the wide verify, narrowed to the two ids
+    // first — a carried-along column becomes a per-entry buffer in the
+    // dedup aggregate, and the two-long entry is what bounds its
+    // map/spill footprint when a gram-saturated corpus floods the
+    // candidate join (77.7M distinct pairs at the 10× fixture; the
+    // tighter PPJoin suffix bound in this aggregate was measured and
+    // refuted there, SURVEY.md §8)
+    Candidates(cands.select("ida", "idb").dropDuplicates("ida", "idb")
+        .select(least(col("ida"), col("idb")).as("doc_a"),
+          greatest(col("ida"), col("idb")).as("doc_b")),
+      "doc_a", docs, "doc_b", docs, Jaccard(thresholdPct))
   }
 
-  /** Pair-list reduction shared by the three prefix-filter joins:
-    * collapse the per-shared-gram candidate stream (id pair + positions
-    * `__ra`/`__rb` + sizes `__na`/`__nb`) to distinct pairs. Two shapes,
-    * chosen by `exact`:
+  /** The prefix joins' doc table: [[minHashDocTable]] plus each doc's
+    * gram count `__n`, LONG from the start so every downstream product
+    * (__n · pct, __na + __nb) runs in 64-bit — Int arithmetic would
+    * overflow (and under ANSI mode, throw) at ~21M n-grams per document
+    * (r3 advice). Read by the token explode and the verify attach:
+    * persist, not localCheckpoint — same recoverability rationale as
+    * minHashNearDups' banded signatures. */
+  private def prefixDocTable(df: DataFrame, id: String, text: String,
+      ngramWords: Int): DataFrame =
+    minHashDocTable(df, id, text, ngramWords)
+      .withColumn("__n", size(col("__sv")).cast("long")).persistOnce()
+
+  /** A threshold measure of the one exact [[verify]], as an integer
+    * percentage — so every bound is exact integer arithmetic; a float
+    * ⌈⌉ at the boundary could shorten a bound and lose recall. */
+  private[graft] sealed trait Measure
+  /** J(a, b) = |a ∩ b| / |a ∪ b| ≥ pct/100 → (idA, idB, jaccard) */
+  private[graft] final case class Jaccard(pct: Int) extends Measure
+  /** C(a→b) = |a ∩ b| / |a| ≥ pct/100 → (idA, idB, n_shared, n_grams_a) */
+  private[graft] final case class Containment(pct: Int) extends Measure
+
+  /** One n-gram similarity operator's candidate pairs (`idA`, `idB`),
+    * the (__id, __sv) doc table each side attaches its sorted gram
+    * array from, and the measure the pairs are verified by. */
+  private[graft] final case class Candidates(pairs: DataFrame,
+      idA: String, docsA: DataFrame, idB: String, docsB: DataFrame,
+      measure: Measure)
+
+  /** The ONE exact verify of the n-gram similarity family: every
+    * candidate generator — prefix filter ([[jaccardJoin]],
+    * [[jaccardJoinAcross]], [[containmentJoin]]), banding
+    * ([[minHashJoinAcross]], [[containmentJoinBanded]]), index probe
+    * ([[probeIndex]], tail only) — feeds it, so a pair's answer cannot
+    * depend on which generator found it (REPOSE's bound-then-verify
+    * split, PAPERS.md).
     *
-    * DEFAULT (exact = false) — dropDuplicates on the id pair: the
-    * hash-aggregate entry is two longs, the narrowest possible, which
-    * bounds the map/spill footprint when a gram-saturated corpus floods
-    * the candidate join (77.7M distinct pairs at the 10× fixture).
-    *
-    * OPT-IN (exact = true) — Xiao et al.'s PPJoin suffix bound computed
-    * in the same aggregate: per pair, the surviving join rows are a
-    * PREFIX of the pair's shared-gram sequence (both sides rank in the
-    * ONE global (df, gram) order, so shared grams appear in the same
-    * relative order on both sides and the per-row first-token
-    * positional filter is monotone along that sequence); with `__o`
-    * shared grams seen and the last at (max `__ra`, max `__rb`), every
-    * further shared gram lies beyond BOTH, so
-    *   overlap ≤ __o + min(__na − max __ra, __nb − max __rb)
-    * — checked against `requiredOverlap` (α for Jaccard, ⌈t·n_a⌉ for
-    * containment). Exact — the bound never under-estimates — so recall
-    * stays 1.0 and the output is hash-identical; EngineSpec pins all
-    * three joins against brute force with the bound ON.
-    *
-    * Why the tighter bound is NOT the default — it was measured, and it
-    * lost: on the 10× gram-saturated fixture it prunes 0 of 77,734,986
-    * q90d candidate pairs (saturated collisions share MANY grams, so
-    * __o + suffix never falls below α) while the aggregate entry grows
-    * from 2 longs to 4 group keys + 3 buffers — measured as
-    * pair-reduction spill 1.11 → 3.09 GB (byte-deterministic, host-
-    * independent) and q90d solo ~39 → ~50 s at sf1. The verify stage's
-    * early-terminating merge already exits a false pair in ~α steps, so
-    * the bound's savings cannot repay a wider 78M-entry hash map.
-    * Enable it for long-document corpora where candidate pairs share
-    * FEW grams and the array-attach verify dominates — the regime the
-    * bound was invented for. */
-  private def suffixBoundReduce(cands: DataFrame, exact: Boolean,
-      idA: String, idB: String, requiredOverlap: Column,
-      extra: Seq[String] = Nil): DataFrame = {
-    val keep = (Seq(idA, idB) ++ extra).map(col)
-    // both branches NARROW before reducing — a carried-along column
-    // becomes a per-entry first-value buffer in the dedup aggregate,
-    // which is exactly the footprint this policy exists to bound
-    if (!exact) cands.select(keep: _*).dropDuplicates(idA, idB)
-    else cands
-      .groupBy(col(idA), col(idB), col("__na"), col("__nb"))
-      .agg(count(lit(1)).as("__o"),
-        max(col("__ra")).as("__ram"), max(col("__rb")).as("__rbm"))
-      .filter(col("__o") + least(col("__na") - col("__ram"),
-        col("__nb") - col("__rbm")) >= requiredOverlap)
-      .select(keep: _*)
+    * The attach is size-gated on the doc count (a self-join hands one
+    * table to both sides and counts it once): at or under
+    * `broadcastMaxDocs` ([[verifyBroadcastMaxDocs]]) both array tables
+    * BROADCAST, so distinct pairs stream through two in-memory hash
+    * joins and the arrays never ride an exchange; past it, sort-merge —
+    * the only shape when the corpus outgrows a broadcast. The 10× scale
+    * fixture is the motivating regime: its ~31-word vocabulary
+    * saturates the trigram space, prefix selectivity collapses (10.9M
+    * candidates for 256 true pairs), and an SMJ attach shipped every
+    * pair's arrays through two shuffles — measured 39–58 s solo at sf1
+    * vs ~14 s streamed. The candidate list itself is never broadcast:
+    * its size is candidate-volume-bound, not corpus-bound. */
+  private[graft] def verify(c: Candidates,
+      broadcastMaxDocs: Long = verifyBroadcastMaxDocs): DataFrame = {
+    val nDocs =
+      if (c.docsA eq c.docsB) c.docsA.count()
+      else c.docsA.count() + c.docsB.count()
+    def side(docs: DataFrame, id: String, sv: String) = {
+      val s = docs.select(col("__id").as(id), col("__sv").as(sv))
+      if (nDocs <= broadcastMaxDocs) broadcast(s) else s
+    }
+    keepQualifying(c.pairs.join(side(c.docsA, c.idA, "__sa"), Seq(c.idA))
+      .join(side(c.docsB, c.idB, "__sb"), Seq(c.idB)), c.idA, c.idB,
+      c.measure)
   }
 
-  /** Gate for the prefix-filter joins' verify stage: corpora at or under
-    * this row count attach their n-gram arrays to the (deduped) candidate
-    * pairs via BROADCAST hash joins — the arrays cross the cluster once,
-    * never per pair; larger corpora sort-merge. ~250k docs × ~400 B of
+  /** [[verify]]'s tail: keep the pairs of `attached` (candidates carrying
+    * both sorted arrays `__sa`/`__sb`) whose measure reaches the
+    * threshold, with the measure's output columns. The kernel is the
+    * early-terminating merge ([[graft.plans.SortedIntersectAtLeast]])
+    * under each measure's exact required overlap — J ≥ t ⟺ inter ≥ α =
+    * ⌈pct·(|a|+|b|)/(100+pct)⌉, C ≥ t ⟺ inter ≥ ⌈pct·|a|/100⌉ — so
+    * doomed candidates exit the walk in ~bound steps (the
+    * saturated-vocabulary fixture put 31.9M candidates in front of 30
+    * true containment pairs; the full walk was 13.8 s of the query's
+    * 26 s) and survivors return exact counts. Every filter product runs
+    * in 64-bit: the ×100/×pct products overflow Int at ~21M distinct
+    * n-grams, which ANSI mode turns into a job-killing exception (r3
+    * advice). Containment also prunes on size first (intersection ≤
+    * |b|), short-circuiting the kernel on pairs no larger b could
+    * satisfy. */
+  private def keepQualifying(attached: DataFrame, idA: String, idB: String,
+      m: Measure): DataFrame = {
+    graft.plans.SortedIntersectCount.register(attached.sparkSession)
+    def atLeast(bound: String) =
+      expr(s"sorted_intersect_count(__sa, __sb, $bound)")
+    val (na, nb) = (size(col("__sa")), size(col("__sb")))
+    m match {
+      case Jaccard(pct) =>
+        val inter = atLeast(s"(CAST($pct AS BIGINT) * (size(__sa) + " +
+          s"size(__sb)) + ${100 + pct - 1}) div ${100 + pct}")
+        val uni = na + nb - inter
+        attached
+          .withColumn("jaccard", round(inter.cast(DoubleType) / uni, 6))
+          .filter(inter.cast("long") * 100 >= uni.cast("long") * pct)
+          .select(idA, idB, "jaccard")
+      case Containment(pct) =>
+        val inter = atLeast(s"(CAST(size(__sa) AS BIGINT) * $pct + 99) div 100")
+        val need = na.cast("long") * pct
+        attached
+          .filter(nb.cast("long") * 100 >= need &&
+            inter.cast("long") * 100 >= need)
+          .select(col(idA), col(idB), inter.cast("int").as("n_shared"),
+            na.cast("int").as("n_grams_a"))
+    }
+  }
+
+  /** Gate for [[verify]]'s array attach: corpora at or under this row
+    * count attach their n-gram arrays to the (deduped) candidate pairs
+    * via BROADCAST hash joins — the arrays cross the cluster once, never
+    * per pair; larger corpora sort-merge. ~250k docs × ~400 B of
     * sorted n-gram array ≈ 100 MB — comfortable in the deployment
     * contract's executor memory, far under Spark's 8 GB broadcast cap.
     * The gate matters because a vocabulary-saturated corpus floods the
@@ -841,11 +849,11 @@ object Engine {
     * corpus can never broadcast its arrays and only the sort-merge shape
     * survives. Size, not semantics: both branches verify identically —
     * EngineSpec pins that equivalence by forcing the sort-merge branch
-    * through the system-property override (the gate would otherwise
-    * never flip below 250k docs, leaving the exact branch that runs at
-    * production scale untested). The property also serves as an ops
-    * tuning knob for executors whose memory budget differs from the
-    * deployment contract's. */
+    * through [[verify]]'s `broadcastMaxDocs` parameter (the gate would
+    * otherwise never flip below 250k docs, leaving the exact branch that
+    * runs at production scale untested). `-Dgraft.verifyBroadcastMaxDocs`
+    * is an ops tuning knob for executors whose memory budget differs
+    * from the deployment contract's. */
   def verifyBroadcastMaxDocs: Long = VerifyBroadcastMaxDocs.value
   private[graft] val VerifyBroadcastMaxDocs = Knob("verifyBroadcastMaxDocs",
     default = 250000L, min = 0L, max = Long.MaxValue)
@@ -856,8 +864,8 @@ object Engine {
     * broadcast either way). Past the gate the probe falls back loudly
     * to the shuffled history attach — see the probe body's rationale.
     * Overridable via `-Dgraft.probeBroadcastMaxCands` (the
-    * [[verifyBroadcastMaxDocs]] test/ops discipline; 0 forces the
-    * shuffled attach). */
+    * [[verifyBroadcastMaxDocs]] ops discipline); [[probeIndex]]'s
+    * `broadcastMaxCands` = 0 forces the shuffled attach. */
   def probeBroadcastMaxCands: Long = ProbeBroadcastMaxCands.value
   private[graft] val ProbeBroadcastMaxCands = Knob("probeBroadcastMaxCands",
     default = 1000000L, min = 0L, max = Long.MaxValue)
@@ -1489,46 +1497,40 @@ object Engine {
     * min(n_a − r_a, n_b − r_b) + 1 ≥ ⌈t·n_a⌉ — applied with the size
     * prune (intersection ≤ |g(b)|) inside the join, BEFORE the pair
     * dedup and the array-attach verify joins (the q91c ordering
-    * argument). Verification is the codegen sorted-intersect kernel;
-    * the contract is integer-only — (n_shared, n_grams_a), no FP. */
+    * argument). Verification is the one exact [[verify]]; the contract
+    * is integer-only — (n_shared, n_grams_a), no FP. */
   def containmentJoin(contained: DataFrame, container: DataFrame,
       id: String, text: String, thresholdPct: Int = 80,
-      ngramWords: Int = 2, suffixBound: Boolean = false,
-      maxCandidatePairs: Long = exactJoinDefaultBudget): DataFrame = {
+      ngramWords: Int = 2,
+      maxCandidatePairs: Long = exactJoinDefaultBudget): DataFrame =
+    verify(containmentCandidates(contained, container, id, text,
+      thresholdPct, ngramWords, maxCandidatePairs))
+
+  /** [[containmentJoin]]'s prefix-filter candidate half. */
+  private[graft] def containmentCandidates(contained: DataFrame,
+      container: DataFrame, id: String, text: String, thresholdPct: Int,
+      ngramWords: Int, maxCandidatePairs: Long): Candidates = {
     require(thresholdPct >= 1 && thresholdPct <= 100)
-    graft.plans.SortedIntersectCount.register(contained.sparkSession)
-    def docsOf(df: DataFrame) = Spread.roundRobin(df)
-      .withColumn("__words", split(col(text), " "))
-      .withColumn("__sv", sort_array(wordNgrams(col("__words"), ngramWords)))
-      .filter(size(col("__sv")) >= 1)
-      .select(col(id).as("__id"), col("__sv"),
-        size(col("__sv")).cast("long").as("__n"))
-      .persistOnce()
-    val (da, db) = (docsOf(contained), docsOf(container))
+    val (da, db) = (prefixDocTable(contained, id, text, ngramWords),
+      prefixDocTable(container, id, text, ngramWords))
     def tokOf(d: DataFrame) =
       d.select(col("__id"), col("__n"), explode(col("__sv")).as("__t"))
     // the container's df defines the one global rarity order both
     // rankings share (required for the positional filter's
-    // first-shared-gram argument)
-    val dfreq0 = tokOf(db).groupBy("__t").agg(count(lit(1)).as("__df"))
-    // priced refusal (see [[candidateBudgetGate]]): containment's
+    // first-shared-gram argument). Priced refusal (see
+    // [[candidateBudgetGate]]): containment's
     // candidates are Σ_{t∈prefix(a)} df_B(t) ≤ Σ_t df_A(t)·df_B(t) —
     // priced with the UPPER bound (both df tables are vocabulary-sized
     // aggregates; the prefix discount is corpus-dependent and the gate
-    // must never under-price). MaxValue opts out plan-unchanged — the
-    // q90h anchor keeps its committed qio floor.
-    val dfreq =
-      if (maxCandidatePairs == Long.MaxValue) dfreq0
-      else {
-        val gated = dfreq0.persistOnce()
-        val dfa = tokOf(da).groupBy("__t").agg(count(lit(1)).as("__dfa"))
-        candidateBudgetGate(gated,
-          gated.join(dfa, Seq("__t")).agg(coalesce(
-            sum(expr("CAST(__dfa AS DECIMAL(38,0)) * __df")),
-            lit(0).cast(DecimalType(38, 0))).as("__price")),
-          "containmentJoin", "containmentJoinBanded (the q90h default)",
-          maxCandidatePairs)
-      }
+    // must never under-price).
+    val dfreq = candidateBudgetGate(
+        tokOf(db).groupBy("__t").agg(count(lit(1)).as("__df")),
+        "containmentJoin", "containmentJoinBanded (the q90h default)",
+        maxCandidatePairs)(
+      _.join(tokOf(da).groupBy("__t").agg(count(lit(1)).as("__dfa")),
+        Seq("__t")).agg(coalesce(
+        sum(expr("CAST(__dfa AS DECIMAL(38,0)) * __df")),
+        lit(0).cast(DecimalType(38, 0))).as("__price")))
     def rankOf(tok: DataFrame) = tok
       .join(dfreq, Seq("__t"), "left")
       .withColumn("__rn", row_number().over(
@@ -1542,44 +1544,20 @@ object Engine {
         col("__rn").as("__ra"), col("__na"))
     val allB = rankOf(tokOf(db)).select(col("__t"),
       col("__id").as("doc_b"), col("__rn").as("__rb"), col("__n").as("__nb"))
-    // Same verify policy as [[jaccardJoin]]: ALWAYS reduce to the narrow
-    // pair list first — containment's candidate duplication factor is
-    // the worst of the family (the container side has no size-relative
-    // prefix bound, so a pair recurs once per shared gram and the
-    // saturated-vocabulary fixture measured ~20× duplication; streaming
-    // raw candidates through the merge kernel cost 2× the OLD shape) —
-    // via the [[suffixBoundReduce]] policy, with containment's required
-    // overlap ⌈t·n_a⌉ as the bound when the exact form is opted in;
-    // the array attach then follows the [[verifyBroadcastMaxDocs]] size
-    // gate.
-    val cands = suffixBoundReduce(
-      prefA.join(allB, Seq("__t"))
+    // ALWAYS reduce to the narrow pair list first (as in
+    // [[jaccardCandidates]]): containment's candidate duplication
+    // factor is the worst of the family (the container side has no
+    // size-relative prefix bound, so a pair recurs once per shared gram
+    // and the saturated-vocabulary fixture measured ~20× duplication;
+    // streaming raw candidates through the merge kernel cost 2× the OLD
+    // shape).
+    Candidates(prefA.join(allB, Seq("__t"))
         .filter(col("doc_a") =!= col("doc_b") &&
           col("__nb") * 100 >= col("__na") * thresholdPct &&
           least(col("__na") - col("__ra"), col("__nb") - col("__rb")) + 1
-            >= ceilTna),
-      suffixBound, "doc_a", "doc_b", ceilTna, extra = Seq("__na"))
-    val sb2 = db.select(col("__id").as("doc_b"), col("__sv").as("__sb"))
-    val sa2 = da.select(col("__id").as("doc_a"), col("__sv").as("__sa"))
-    val distinctPairs = cands
-    val verified =
-      if (da.count() + db.count() <= verifyBroadcastMaxDocs)
-        distinctPairs.join(broadcast(sb2), Seq("doc_b"))
-          .join(broadcast(sa2), Seq("doc_a"))
-      else
-        distinctPairs.join(sb2, Seq("doc_b")).join(sa2, Seq("doc_a"))
-    // Early-terminating merge: containment needs inter ≥ ⌈t·n_a⌉, the
-    // same bound the candidate filter used — verify exits doomed pairs
-    // after ~⌈t·n_a⌉ steps (the saturated-vocabulary fixture put 31.9M
-    // candidates in front of 30 true pairs; the full walk was 13.8 s of
-    // the query's 26 s).
-    val inter = expr("sorted_intersect_count(__sa, __sb, " +
-      s"(__na * $thresholdPct + 99) div 100)")
-    verified
-      .filter(inter.cast("long") * 100 >= col("__na") * thresholdPct)
-      .select(col("doc_a"), col("doc_b"),
-        inter.cast("int").as("n_shared"),
-        col("__na").cast("int").as("n_grams_a"))
+            >= ceilTna)
+        .select("doc_a", "doc_b").dropDuplicates("doc_a", "doc_b"),
+      "doc_a", da, "doc_b", db, Containment(thresholdPct))
   }
 
   /** BANDED containment join — [[containmentJoin]]'s exact verification
@@ -1602,18 +1580,15 @@ object Engine {
     * genuine wrapper/quote asymmetry (n_b ≫ n_a mass), use the exact
     * prefix path — its priced refusal gate names this operator as the
     * exit precisely so the choice is a measured one. Verification is
-    * byte-identical to the exact path: same sorted-intersect kernel,
-    * same ⌈t·n_a⌉ early exit, same integer-only contract — the two
-    * paths can never disagree on a surviving pair's values. */
+    * the exact path's own [[verify]] — the two paths can never disagree
+    * on a surviving pair's values. */
   def containmentJoinBanded(contained: DataFrame, container: DataFrame,
       id: String, text: String, thresholdPct: Int = 80,
       ngramWords: Int = 2, numHashes: Int = 64,
       bands: Int = 16): DataFrame = {
     require(thresholdPct >= 1 && thresholdPct <= 100)
-    graft.plans.SortedIntersectCount.register(contained.sparkSession)
-    def docsOf(df: DataFrame) =
-      minHashDocTable(df, id, text, ngramWords).persistOnce()
-    val (da, db) = (docsOf(contained), docsOf(container))
+    val da = minHashDocTable(contained, id, text, ngramWords).persistOnce()
+    val db = minHashDocTable(container, id, text, ngramWords).persistOnce()
     // ASYMMETRY AUDIT (r15, ADVICE): the honesty bound below is silent
     // by construction — a corpus where it bites looks exactly like one
     // where it doesn't. Price the check instead: one bounded min/max
@@ -1630,29 +1605,11 @@ object Engine {
     // contained ⊆ container in the q90h batch-vs-corpus shape, so the
     // banded equi-join surfaces self-pairs the bipartite dedup callers
     // never see — drop them before the verify attach
-    val cands = minHashCandidatesAcross(da, db, numHashes, bands,
+    verify(Candidates(minHashCandidatesAcross(da, db, numHashes, bands,
         broadcastBounded = false)
       .filter(col("left_id") =!= col("right_id"))
-      .select(col("left_id").as("doc_a"), col("right_id").as("doc_b"))
-    val sa2 = da.select(col("__id").as("doc_a"), col("__sv").as("__sa"),
-      size(col("__sv")).cast("long").as("__na"))
-    val sb2 = db.select(col("__id").as("doc_b"), col("__sv").as("__sb"))
-    val verified =
-      if (da.count() + db.count() <= verifyBroadcastMaxDocs)
-        cands.join(broadcast(sb2), Seq("doc_b"))
-          .join(broadcast(sa2), Seq("doc_a"))
-      else cands.join(sb2, Seq("doc_b")).join(sa2, Seq("doc_a"))
-    val inter = expr("sorted_intersect_count(__sa, __sb, " +
-      s"(__na * $thresholdPct + 99) div 100)")
-    verified
-      // size prune first (intersection ≤ |g(b)|) — short-circuits the
-      // merge kernel on pairs a larger b could never satisfy anyway
-      .filter(size(col("__sb")).cast("long") * 100 >=
-          col("__na") * thresholdPct &&
-        inter.cast("long") * 100 >= col("__na") * thresholdPct)
-      .select(col("doc_a"), col("doc_b"),
-        inter.cast("int").as("n_shared"),
-        col("__na").cast("int").as("n_grams_a"))
+      .select(col("left_id").as("doc_a"), col("right_id").as("doc_b")),
+      "doc_a", da, "doc_b", db, Containment(thresholdPct)))
   }
 
   /** [[containmentJoinBanded]]'s asymmetry audit, factored pure so the
@@ -1776,49 +1733,41 @@ object Engine {
     * kept — the self-join's asymmetric indexing-prefix trick orders the
     * two records of a PAIR by size, which has no analog when the roles
     * are fixed. Length and positional filters apply unchanged (both are
-    * pair-local theorems), and verification runs the same codegen merge
-    * kernel. Returns (left_id, right_id, jaccard). */
+    * pair-local theorems), and verification is the one exact
+    * [[verify]]. Returns (left_id, right_id, jaccard). */
   def jaccardJoinAcross(left: DataFrame, right: DataFrame, id: String,
       text: String, thresholdPct: Int = 60, ngramWords: Int = 2,
       broadcastBounded: Boolean = false,
-      suffixBound: Boolean = false,
-      maxCandidatePairs: Long = exactJoinDefaultBudget): DataFrame = {
+      maxCandidatePairs: Long = exactJoinDefaultBudget): DataFrame =
+    verify(jaccardAcrossCandidates(left, right, id, text, thresholdPct,
+      ngramWords, broadcastBounded, maxCandidatePairs))
+
+  /** [[jaccardJoinAcross]]'s prefix-filter candidate half. */
+  private[graft] def jaccardAcrossCandidates(left: DataFrame,
+      right: DataFrame, id: String, text: String, thresholdPct: Int,
+      ngramWords: Int, broadcastBounded: Boolean,
+      maxCandidatePairs: Long): Candidates = {
     require(thresholdPct >= 1 && thresholdPct <= 100)
-    graft.plans.SortedIntersectCount.register(left.sparkSession)
-    def docsOf(df: DataFrame) = Spread.roundRobin(df)
-      .withColumn("__words", split(col(text), " "))
-      .withColumn("__sv", sort_array(wordNgrams(col("__words"), ngramWords)))
-      .filter(size(col("__sv")) >= 1)
-      .select(col(id).as("__id"), col("__sv"),
-        size(col("__sv")).cast("long").as("__n"))
-      .persistOnce()
-    val (dl, dr) = (docsOf(left), docsOf(right))
+    val (dl, dr) = (prefixDocTable(left, id, text, ngramWords),
+      prefixDocTable(right, id, text, ngramWords))
     def tokOf(d: DataFrame) =
       d.select(col("__id"), col("__n"), explode(col("__sv")).as("__t"))
     val (tokL, tokR) = (tokOf(dl), tokOf(dr))
     // priced refusal (see [[candidateBudgetGate]]): the bipartite price
     // is Σ df_L·df_R per gram — the exact cross-side volume of the
     // prefix equi-join's worst case. Side counts ride the SAME
-    // aggregate the prefix order already needs (one extra sum), and
-    // MaxValue opts out with the round-12 plan byte-identical — the
-    // q90d contrast anchor keeps its committed qio floor.
-    val dfreq =
-      if (maxCandidatePairs == Long.MaxValue)
-        tokL.unionByName(tokR)
-          .groupBy("__t").agg(count(lit(1)).as("__df"))
-      else {
-        val tagged = tokL.withColumn("__l", lit(1L))
+    // aggregate the prefix order already needs (one extra sum).
+    val dfreq = candidateBudgetGate(
+        tokL.withColumn("__l", lit(1L))
           .unionByName(tokR.withColumn("__l", lit(0L)))
           .groupBy("__t").agg(count(lit(1)).as("__df"),
-            sum(col("__l")).as("__dfl"))
-          .persistOnce()
-        candidateBudgetGate(tagged,
-          tagged.agg(coalesce(
-            sum(expr("CAST(__dfl AS DECIMAL(38,0)) * (__df - __dfl)")),
-            lit(0).cast(DecimalType(38, 0))).as("__price")),
-          "jaccardJoinAcross", "minHashJoinAcross (q90d)",
-          maxCandidatePairs).drop("__dfl")
-      }
+            sum(col("__l")).as("__dfl")),
+        "jaccardJoinAcross", "minHashJoinAcross (q90d)",
+        maxCandidatePairs)(
+      _.agg(coalesce(
+        sum(expr("CAST(__dfl AS DECIMAL(38,0)) * (__df - __dfl)")),
+        lit(0).cast(DecimalType(38, 0))).as("__price")))
+      .drop("__dfl")
     def prefixOf(tok: DataFrame) = tok.join(dfreq, Seq("__t"))
       .withColumn("__rn", row_number().over(Window.partitionBy(col("__id"))
         .orderBy(col("__df").asc, col("__t").asc)))
@@ -1851,42 +1800,19 @@ object Engine {
     // vocabulary-saturated corpus the prefix equi-join floods (the 10×
     // fixture measured ~10⁸ raw candidates for a 10k-doc batch), and a
     // pinned broadcast(cands) turned that into a hard driver-side
-    // collect failure the first time q90d ran at sf1. Verify instead
-    // follows the [[verifyBroadcastMaxDocs]] size gate on the ARRAY
-    // tables, whose sizes are known (both sides are persisted corpora):
-    // bounded ⇒ distinct pairs stream through broadcast attach joins;
-    // unbounded ⇒ plain sort-merge, AQE free to degrade.
+    // collect failure the first time q90d ran at sf1. [[verify]] gates
+    // the ARRAY tables instead, whose sizes are known (both sides are
+    // persisted corpora).
     def bounded(df: DataFrame) = if (broadcastBounded) broadcast(df) else df
-    // Pair reduction before the wide verify, by the
-    // [[suffixBoundReduce]] policy (default: two-long dedup — at this
-    // join's 10× flood, 77.7M distinct pairs, entry width IS the spill
-    // bill; the exact PPJoin bound is the measured-and-documented
-    // opt-in).
-    val cands = suffixBoundReduce(
-      bounded(a).join(b, Seq("__t"))
+    // narrow pair reduction before the wide verify, as in
+    // [[jaccardCandidates]] (this join's 10× flood is the 77.7M pairs)
+    Candidates(bounded(a).join(b, Seq("__t"))
         .filter(col("__nb") * 100 >= col("__na") * thresholdPct &&
           col("__na") * 100 >= col("__nb") * thresholdPct &&
           least(col("__na") - col("__ra"), col("__nb") - col("__rb")) + 1
-            >= alpha),
-      suffixBound, "left_id", "right_id", alpha)
-    val sl = dl.select(col("__id").as("left_id"), col("__sv").as("__sa"))
-    val sr = dr.select(col("__id").as("right_id"), col("__sv").as("__sb"))
-    val verified =
-      if (dl.count() + dr.count() <= verifyBroadcastMaxDocs)
-        cands.join(broadcast(sl), Seq("left_id"))
-          .join(broadcast(sr), Seq("right_id"))
-      else
-        cands.join(sl, Seq("left_id")).join(sr, Seq("right_id"))
-    // Early-terminating merge with the same α bound as the self-join
-    // form (exact survivors, doomed pairs exit early — see jaccardJoin).
-    val inter = expr("sorted_intersect_count(__sa, __sb, " +
-      s"(CAST($thresholdPct AS BIGINT) * (size(__sa) + size(__sb)) + " +
-      s"${100 + thresholdPct - 1}) div ${100 + thresholdPct})")
-    val uni = size(col("__sa")) + size(col("__sb")) - inter
-    verified
-      .withColumn("jaccard", round(inter.cast(DoubleType) / uni, 6))
-      .filter(inter.cast("long") * 100 >= uni.cast("long") * thresholdPct)
-      .select("left_id", "right_id", "jaccard")
+            >= alpha)
+        .select("left_id", "right_id").dropDuplicates("left_id", "right_id"),
+      "left_id", dl, "right_id", dr, Jaccard(thresholdPct))
   }
 
   /** BIPARTITE banded-MinHash join — [[minHashNearDups]]' machinery
@@ -1919,40 +1845,19 @@ object Engine {
     * [[minHashNearDups]] uses (the seeded-xxhash64 [[minHashBands]]
     * kernel), so a self-join dedup and this incremental form never
     * disagree on a pair's signature. Returns (left_id, right_id,
-    * jaccard ≥ pct/100), jaccard EXACT (same merge kernel + integer
-    * arithmetic as the prefix-filter joins). */
+    * jaccard ≥ pct/100), jaccard EXACT: the prefix-filter joins' one
+    * [[verify]], so a pair both find carries a bit-identical value. */
   def minHashJoinAcross(left: DataFrame, right: DataFrame, id: String,
       text: String, thresholdPct: Int = 60, numHashes: Int = 64,
       bands: Int = 16, ngramWords: Int = 2,
       broadcastBounded: Boolean = false): DataFrame = {
     require(thresholdPct >= 1 && thresholdPct <= 100)
-    graft.plans.SortedIntersectCount.register(left.sparkSession)
     // read twice (banding + verify attach): persist, not localCheckpoint
     // — same recoverability rationale as minHashNearDups
-    def docsOf(df: DataFrame) =
-      minHashDocTable(df, id, text, ngramWords).persistOnce()
-    val (dl, dr) = (docsOf(left), docsOf(right))
-    val cands = minHashCandidatesAcross(dl, dr, numHashes, bands,
-      broadcastBounded)
-    val sl = dl.select(col("__id").as("left_id"), col("__sv").as("__sa"))
-    val sr = dr.select(col("__id").as("right_id"), col("__sv").as("__sb"))
-    val verified =
-      if (dl.count() + dr.count() <= verifyBroadcastMaxDocs)
-        cands.join(broadcast(sl), Seq("left_id"))
-          .join(broadcast(sr), Seq("right_id"))
-      else
-        cands.join(sl, Seq("left_id")).join(sr, Seq("right_id"))
-    // exact verification: the same early-terminating sorted-merge kernel
-    // and integer threshold arithmetic as jaccardJoinAcross, so the two
-    // operators' surviving pairs carry bit-identical jaccard values
-    val inter = expr("sorted_intersect_count(__sa, __sb, " +
-      s"(CAST($thresholdPct AS BIGINT) * (size(__sa) + size(__sb)) + " +
-      s"${100 + thresholdPct - 1}) div ${100 + thresholdPct})")
-    val uni = size(col("__sa")) + size(col("__sb")) - inter
-    verified
-      .withColumn("jaccard", round(inter.cast(DoubleType) / uni, 6))
-      .filter(inter.cast("long") * 100 >= uni.cast("long") * thresholdPct)
-      .select("left_id", "right_id", "jaccard")
+    val dl = minHashDocTable(left, id, text, ngramWords).persistOnce()
+    val dr = minHashDocTable(right, id, text, ngramWords).persistOnce()
+    verify(Candidates(minHashCandidatesAcross(dl, dr, numHashes, bands,
+      broadcastBounded), "left_id", dl, "right_id", dr, Jaccard(thresholdPct)))
   }
 
   /** Candidate stage of [[minHashJoinAcross]] — the banded bipartite
@@ -1970,10 +1875,11 @@ object Engine {
       .dropDuplicates("left_id", "right_id")
   }
 
-  /** Internal: (__id, __sv) doc table for the MinHash family — shared by
-    * [[minHashJoinAcross]] and the persisted-index builders so an index
-    * probe and an in-memory join never disagree on shingling. */
-  private def minHashDocTable(df: DataFrame, id: String, text: String,
+  /** Internal: (__id, __sv) doc table of the n-gram similarity family —
+    * shared by the banded joins, the prefix joins ([[prefixDocTable]])
+    * and the persisted-index builders, so an index probe and an
+    * in-memory join never disagree on shingling. */
+  private[graft] def minHashDocTable(df: DataFrame, id: String, text: String,
       ngramWords: Int): DataFrame =
     withShingles(shingleFrame(df, id, text, ngramWords))
 
@@ -2010,7 +1916,7 @@ object Engine {
     * Compaction temps are named by `at(sub, "compact")` /
     * `at(sub, "trash")` — `__compact_<sub>` / `__trash_<sub>` beside
     * the live table. */
-  private sealed trait DedupIndex {
+  private[graft] sealed trait DedupIndex {
     def spark: org.apache.spark.sql.SparkSession
     /** live name of table `sub`, or of its compaction `stage` temp */
     def at(sub: String, stage: String = ""): String
@@ -2040,7 +1946,7 @@ object Engine {
     * metadata (a catalog property, not an engine limit), so the probe
     * table is only sorted within files; compaction rewrites each table
     * range-clustered on its key into `compactFiles` files. */
-  private final case class PathIndex(spark: org.apache.spark.sql.SparkSession,
+  private[graft] final case class PathIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, compactFiles: Int = 8,
       idType: Option[org.apache.spark.sql.types.DataType] = None)
       extends DedupIndex {
@@ -2226,15 +2132,16 @@ object Engine {
     * indexed doc, jaccard ≥ pct/100) — result-identical to
     * [[minHashJoinAcross]](batch, history) by construction (same
     * seeded-xxhash64 family, same banding, same exact sorted-merge
-    * verification), with history-side hashing amortized to ZERO: only
-    * the batch's (__id, __sv) doc table `dl` is hashed here. Both
-    * storage forms share this body, so their probe semantics cannot
-    * drift. */
-  private def probeIndex(ix: DedupIndex, dl: DataFrame, thresholdPct: Int,
-      numHashes: Int, bands: Int): Probe = {
+    * verification — [[verify]]'s Jaccard tail), with history-side
+    * hashing amortized to ZERO: only the batch's (__id, __sv) doc table
+    * `dl` is hashed here. Both storage forms share this body, so their
+    * probe semantics cannot drift. `broadcastMaxCands` is the pinned
+    * candidate-broadcast gate ([[probeBroadcastMaxCands]]). */
+  private[graft] def probeIndex(ix: DedupIndex, dl: DataFrame,
+      thresholdPct: Int, numHashes: Int, bands: Int,
+      broadcastMaxCands: Long = probeBroadcastMaxCands): Probe = {
     require(thresholdPct >= 1 && thresholdPct <= 100)
     val (bandsTbl, docsTbl) = (ix.read("bands"), ix.read("docs"))
-    graft.plans.SortedIntersectCount.register(dl.sparkSession)
     // the batch-side band table is bands × |batch| rows — the bounded
     // side by the incremental contract, so pin the broadcast (the q90d
     // rationale: AQE size estimates flap on freshly-derived tables)
@@ -2265,10 +2172,10 @@ object Engine {
     // pins — which is also why the bucketed index does NOT pin).
     val pinned = ix.pinsProbe && {
       val nCands = cands.persistOnce().count()
-      val ok = nCands <= probeBroadcastMaxCands
+      val ok = nCands <= broadcastMaxCands
       if (!ok) Console.err.println(
         s"[graft] probeMinHashIndex: $nCands candidate pairs overflow " +
-          s"the pinned broadcast gate ($probeBroadcastMaxCands; " +
+          s"the pinned broadcast gate ($broadcastMaxCands; " +
           "-Dgraft.probeBroadcastMaxCands overrides) — the history " +
           "docs attach will SHUFFLE this slot. A sustained dup-burst " +
           "regime belongs on the bucketed index (dedupIngestBucketed), " +
@@ -2282,21 +2189,15 @@ object Engine {
       else
         cands.join(broadcast(sl), Seq("left_id"))
           .join(docsSide, Seq("right_id"))
-    val inter = expr("sorted_intersect_count(__sa, __sb, " +
-      s"(CAST($thresholdPct AS BIGINT) * (size(__sa) + size(__sb)) + " +
-      s"${100 + thresholdPct - 1}) div ${100 + thresholdPct})")
-    val uni = size(col("__sa")) + size(col("__sb")) - inter
-    Probe(verified
-      .withColumn("jaccard", round(inter.cast(DoubleType) / uni, 6))
-      .filter(inter.cast("long") * 100 >= uni.cast("long") * thresholdPct)
-      .select("left_id", "right_id", "jaccard"),
-      if (ix.pinsProbe) Seq(cands) else Nil)
+    Probe(keepQualifying(verified, "left_id", "right_id",
+      Jaccard(thresholdPct)), if (ix.pinsProbe) Seq(cands) else Nil)
   }
 
   /** A probe's (left_id, right_id, jaccard) pairs and the frames it
     * cached to plan them, which a caller that is done with the pairs
     * releases. */
-  private final case class Probe(pairs: DataFrame, cached: Seq[DataFrame])
+  private[graft] final case class Probe(pairs: DataFrame,
+      cached: Seq[DataFrame])
 
   /** [[probeIndex]] with `batch` shingled here (the doc table stays
     * cached for the returned pairs' lifetime). */

@@ -885,31 +885,51 @@ class EngineSpec extends AnyFunSuite {
 
   test("verify attach: forced sort-merge branch == broadcast branch (the 100 TB shape)") {
     // The verifyBroadcastMaxDocs gate never flips below 250k docs, so
-    // without the property override the sort-merge attach — the ONLY
-    // shape a 100 TB corpus can run — would go to production untested.
-    // Force it and require bit-identical output from all three
-    // prefix-filter joins.
+    // without forcing it the sort-merge attach — the ONLY shape a 100 TB
+    // corpus can run — would go to production untested. Force it
+    // through the shared verify's gate parameter and require each of
+    // the three prefix-filter joins to match its default (broadcast)
+    // output bit for bit. The forced side runs in a session with
+    // automatic broadcasts off: at this fixture's size the planner
+    // would otherwise broadcast the array tables on its own estimate,
+    // and no sort-merge attach would run.
     val docs = Tables.t(spark, TestSpark.sfDir, "documents")
-    def all() = (
-      Engine.jaccardJoin(docs, "doc_id", "text", thresholdPct = 60)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSet,
-      Engine.jaccardJoinAcross(
-          docs.filter(col("doc_id") % 5 === 0),
-          docs.filter(col("doc_id") % 5 =!= 0),
-          "doc_id", "text", thresholdPct = 60)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSet,
-      Engine.containmentJoin(docs, docs, "doc_id", "text",
-          thresholdPct = 80)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3)))
-        .toSet)
-    val viaBroadcast = all()
+    val batch = docs.filter(col("doc_id") % 5 === 0)
+    val hist = docs.filter(col("doc_id") % 5 =!= 0)
+    val budget = Engine.exactJoinDefaultBudget
+    val noAuto = spark.newSession()
+    Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+      .foreach(noAuto.conf.set(_, "-1"))
+    val sdocs = Tables.t(noAuto, TestSpark.sfDir, "documents")
+    def sortMerged(c: Engine.Candidates) = {
+      val df = Engine.verify(c, broadcastMaxDocs = 0L)
+      df.collect() // an adaptive plan is final once it has run
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains(s"SortMergeJoin [${c.idA}#"), plan)
+      df
+    }
+    def jac(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def cont(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3))).toSet
+    val viaBroadcast = (
+      jac(Engine.jaccardJoin(docs, "doc_id", "text", thresholdPct = 60)),
+      jac(Engine.jaccardJoinAcross(batch, hist, "doc_id", "text",
+        thresholdPct = 60)),
+      cont(Engine.containmentJoin(docs, docs, "doc_id", "text",
+        thresholdPct = 80)))
     assert(viaBroadcast._1.nonEmpty && viaBroadcast._3.nonEmpty)
-    sys.props("graft.verifyBroadcastMaxDocs") = "0"
-    try assert(all() == viaBroadcast)
-    finally sys.props -= "graft.verifyBroadcastMaxDocs"
+    val viaSortMerge = (
+      jac(sortMerged(Engine.jaccardCandidates(sdocs, "doc_id", "text",
+        60, 2, budget))),
+      jac(sortMerged(Engine.jaccardAcrossCandidates(
+        sdocs.filter(col("doc_id") % 5 === 0),
+        sdocs.filter(col("doc_id") % 5 =!= 0),
+        "doc_id", "text", 60, 2, broadcastBounded = false, budget))),
+      cont(sortMerged(Engine.containmentCandidates(sdocs, sdocs, "doc_id",
+        "text", 80, 2, budget))))
+    assert(viaSortMerge == viaBroadcast)
   }
 
   test("jaccardJoin: prefix filtering finds EXACTLY the brute-force pairs (recall 1.0)") {
@@ -978,22 +998,18 @@ class EngineSpec extends AnyFunSuite {
     assert(viaDefault.nonEmpty && viaDefault == viaOverride)
   }
 
-  test("PPJoin suffix bound (opt-in): all three prefix-filter joins find " +
-      "EXACTLY the brute-force pairs with the tightened per-pair prune on") {
-    // The per-pair aggregate bound (o + min(na−ram, nb−rbm) ≥ required
-    // overlap) prunes strictly more candidates than the per-row
-    // first-token bound; this pins that it prunes ONLY false ones — set
-    // equality against brute force, not ⊆ — for the self-join,
-    // bipartite and containment forms. (The DEFAULT narrow-dedup arms
-    // are covered by the self-join brute-force test above and the
-    // q90d/q90h oracle gates.)
+  test("prefix-filter joins: the self-join, bipartite and containment " +
+      "forms find EXACTLY the brute-force pairs") {
+    // The length, positional and asymmetric-prefix filters prune inside
+    // the candidate join; this pins that they prune ONLY false pairs —
+    // set equality against brute force, not ⊆ — for all three forms.
     val docs = Tables.t(spark, TestSpark.sfDir, "documents")
     val sets = docs
       .withColumn("sv", Engine.wordNgrams(split(col("text"), " "), 2))
       .filter(size(col("sv")) >= 1)
       .select(col("doc_id"), col("sv"))
     val gotSelf = Engine.jaccardJoin(docs, "doc_id", "text",
-        thresholdPct = 60, suffixBound = true)
+        thresholdPct = 60)
       .collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     val sa0 = sets.select(col("doc_id").as("pa"), col("sv").as("sa"))
     val sb0 = sets.select(col("doc_id").as("pb"), col("sv").as("sb"))
@@ -1007,7 +1023,7 @@ class EngineSpec extends AnyFunSuite {
     val gotAcross = Engine.jaccardJoinAcross(
         docs.filter(col("doc_id") % 5 === 0),
         docs.filter(col("doc_id") % 5 =!= 0),
-        "doc_id", "text", thresholdPct = 60, suffixBound = true)
+        "doc_id", "text", thresholdPct = 60)
       .collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     val la = sets.filter(col("doc_id") % 5 === 0)
       .select(col("doc_id").as("lid"), col("sv").as("sa"))
@@ -1021,7 +1037,7 @@ class EngineSpec extends AnyFunSuite {
     assert(wantAcross.nonEmpty, "test needs at least one qualifying pair")
     assert(gotAcross == wantAcross)
     val gotCont = Engine.containmentJoin(docs, docs, "doc_id", "text",
-        thresholdPct = 80, suffixBound = true)
+        thresholdPct = 80)
       .collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     val ca = sets.select(col("doc_id").as("da"), col("sv").as("sa"))
     val cb = sets.select(col("doc_id").as("db"), col("sv").as("sb"))
@@ -3184,10 +3200,9 @@ class EngineSpec extends AnyFunSuite {
       .createTempDirectory("mh_probe_gate").toString
     try {
       Engine.buildMinHashIndex(hist, "doc_id", "text", path)
-      def got() = Engine.searchMinHashIndex(batch, "doc_id", "text",
+      val pinned = Engine.searchMinHashIndex(batch, "doc_id", "text",
           path).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val pinned = got()
       assert(pinned.nonEmpty)
       // the pinned plan's exchanges carry candidate ids / batch-side
       // payload only — history gram arrays are read in place via the
@@ -3206,9 +3221,12 @@ class EngineSpec extends AnyFunSuite {
         s"history payload crossed an exchange:\n$plan")
       // the overflow regime (gate forced to 0) falls back loudly to
       // the shuffled attach — result-identical, the 100 TB-burst shape
-      sys.props("graft.probeBroadcastMaxCands") = "0"
-      try assert(got() == pinned)
-      finally sys.props -= "graft.probeBroadcastMaxCands"
+      val shuffled = Engine.probeIndex(Engine.PathIndex(spark, path),
+          Engine.minHashDocTable(batch, "doc_id", "text", 2),
+          thresholdPct = 60, numHashes = 64, bands = 16,
+          broadcastMaxCands = 0L).pairs.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(shuffled == pinned)
     } finally graft.sources.IO.deleteRec(new java.io.File(path))
   }
 

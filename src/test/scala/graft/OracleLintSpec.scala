@@ -121,30 +121,63 @@ class OracleLintSpec extends AnyFunSuite {
       s"files defining a main: ${mains.toSeq.sorted.mkString(", ")}")
   }
 
-  test("system properties: no file under src/main/scala writes one") {
+  /** `file:line: text` of every line of every Scala file under `roots`
+    * that `hit(file name, line)` accepts. */
+  private def scalaLines(roots: String*)(
+      hit: (String, String) => Boolean): List[String] =
+    roots.toList.flatMap { root =>
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try files.iterator.asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          val name = p.getFileName.toString
+          java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (line, i) if hit(name, line) =>
+              s"$name:${i + 1}: ${line.trim}"
+          }
+        }.toList
+      finally files.close()
+    }
+
+  test("system properties: no file under src/main/scala or src/test/scala writes one") {
     // a JVM-global write outlives the session that made it and leaks into
-    // every later query in the JVM; Spark settings belong on the session
+    // every later query in the JVM (and, in a test, into every later
+    // suite in the forked JVM); Spark settings belong on the session
     // builder, program settings in constructor arguments or parameters
     val write = """sys\.props\s*(\([^)]*\)\s*=[^=]|[+-]=)|System\.setProperty""".r
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(
-      "src/main/scala"))
-    val writes = try files.iterator.asScala
-      .filter(_.toString.endsWith(".scala"))
-      .flatMap { p =>
-        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if write.findFirstIn(line).isDefined =>
-            s"${p.getFileName}:${i + 1}: ${line.trim}"
-        }
-      }.toList
-    finally files.close()
-    assert(writes.isEmpty, writes.mkString("\n"))
-    // the detector fires on each write form and passes reads
-    Seq("""sys.props("graft.x") = "1"""", "sys.props += k -> v",
+    val writes = Seq("""sys.props("graft.x") = "1"""", "sys.props += k -> v",
       """sys.props -= "graft.x"""", """System.setProperty("a", "b")""")
-      .foreach(l => assert(write.findFirstIn(l).isDefined, l))
+    // this spec's own self-check literals below are the one exemption
+    val found = scalaLines("src/main/scala", "src/test/scala") { (f, line) =>
+      val own =
+        if (f == "OracleLintSpec.scala") writes.foldLeft(line)(_.replace(_, ""))
+        else line
+      write.findFirstIn(own).isDefined
+    }
+    assert(found.isEmpty, found.mkString("\n"))
+    // the detector fires on each write form and passes reads
+    writes.foreach(l => assert(write.findFirstIn(l).isDefined, l))
     Seq("""sys.props.get("graft.x")""", """sys.props("a") == "b"""",
       """sys.props.getOrElse("graft.io.dir", "x")""")
       .foreach(l => assert(write.findFirstIn(l).isEmpty, l))
+  }
+
+  test("similarity verify: sorted_intersect_count( is spelled in exactly one place under src/main/scala") {
+    // the n-gram similarity family shares one exact verify
+    // (Engine.keepQualifying); a second spelling of the kernel call is
+    // a copied verify whose bound or threshold arithmetic can drift
+    val kernel = """\bsorted_intersect_count\s*\(""".r
+    val found = scalaLines("src/main/scala") { (f, line) =>
+      f != "SortedIntersectCount.scala" && kernel.findFirstIn(line).isDefined
+    }
+    assert(found.size == 1, found.mkString("\n"))
+    // the detector fires on the call spellings and passes the name alone
+    Seq("""expr(s"sorted_intersect_count(__sa, __sb, $b)")""",
+      "sorted_intersect_count (a, b)", """expr("sorted_intersect_count(sa, sb)")""")
+      .foreach(l => assert(kernel.findFirstIn(l).isDefined, l))
+    Seq("val name = \"sorted_intersect_count\"", "SortedIntersectCount.register(s)",
+      "my_sorted_intersect_count(a)")
+      .foreach(l => assert(kernel.findFirstIn(l).isEmpty, l))
   }
 
   test("concurrency: no file under src/main/scala names a Scala Future or the global pool") {
@@ -155,17 +188,8 @@ class OracleLintSpec extends AnyFunSuite {
     val named = Seq("""ExecutionContext\s*\.\s*(Implicits\s*\.\s*)?global""",
       """scala\.concurrent\.(\{[^}]*)?\bFuture\b""",
       """(?<![\w.])Future\s*[({.\[]""").mkString("|").r
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(
-      "src/main/scala"))
-    val uses = try files.iterator.asScala
-      .filter(_.toString.endsWith(".scala"))
-      .flatMap { p =>
-        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if named.findFirstIn(line).isDefined =>
-            s"${p.getFileName}:${i + 1}: ${line.trim}"
-        }
-      }.toList
-    finally files.close()
+    val uses = scalaLines("src/main/scala")((_, line) =>
+      named.findFirstIn(line).isDefined)
     assert(uses.isEmpty, uses.mkString("\n"))
     // the detector fires on each spelling and passes the JDK futures the
     // helper itself uses
