@@ -771,7 +771,8 @@ object Engine {
     * split, PAPERS.md).
     *
     * The attach is size-gated on the doc count (a self-join hands one
-    * table to both sides and counts it once): at or under
+    * table to both sides and counts it once; two tables are counted by
+    * one action over their union): at or under
     * `broadcastMaxDocs` ([[verifyBroadcastMaxDocs]]) both array tables
     * BROADCAST, so distinct pairs stream through two in-memory hash
     * joins and the arrays never ride an exchange; past it, sort-merge —
@@ -786,7 +787,7 @@ object Engine {
       broadcastMaxDocs: Long = verifyBroadcastMaxDocs): DataFrame = {
     val nDocs =
       if (c.docsA eq c.docsB) c.docsA.count()
-      else c.docsA.count() + c.docsB.count()
+      else c.docsA.select(lit(1)).union(c.docsB.select(lit(1))).count()
     def side(docs: DataFrame, id: String, sv: String) = {
       val s = docs.select(col("__id").as(id), col("__sv").as(sv))
       if (nDocs <= broadcastMaxDocs) broadcast(s) else s
@@ -937,40 +938,27 @@ object Engine {
       .groupBy(lut("__qid").as("query_id"), codes("vec_id").as("vec_id"))
       .agg(sum(col("__dd").cast(org.apache.spark.sql.types
         .DecimalType(38, 6))).cast(DoubleType).as("adist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk").cast("int").as("rnk"),
-        col("vec_id"), col("adist"))
+    topKWithin(scored, "query_id",
+        Seq(col("adist").asc, col("vec_id").asc), k)
+      .select("query_id", "rnk", "vec_id", "adist")
   }
 
   /** Per-vector IVF RESIDUAL: assign every row its nearest coarse
-    * centroid (rounded cosine, centroid-id tiebreak — the q99b
-    * discipline) and emit (idAs, cell, residual = vec − μ_cell), the
-    * quantity the standard IVF-PQ construction encodes. Subtraction
-    * runs element-wise in DOUBLE (float→double widening is exact and
-    * IEEE subtraction is correctly rounded, so both engines agree
-    * bit-for-bit). Centroids broadcast; the whole thing is a map pass
-    * over the corpus — no shuffle, pipelines inside the scan at any
-    * scale. */
+    * centroid ([[nearestCells]]) and emit (idAs, cell, residual =
+    * vec − μ_cell), the quantity the standard IVF-PQ construction
+    * encodes. Subtraction runs element-wise in DOUBLE (float→double
+    * widening is exact and IEEE subtraction is correctly rounded, so
+    * both engines agree bit-for-bit). Centroids broadcast; the whole
+    * thing is a map pass over the corpus — no shuffle, pipelines inside
+    * the scan at any scale. */
   def ivfResiduals(corpus: DataFrame, id: String, vec: String,
       centroids: DataFrame, cid: String, cvec: String,
-      idAs: String = "vec_id"): DataFrame = {
-    graft.plans.CosineSimilarity.register(corpus.sparkSession)
-    val cent = broadcast(
-      centroids.select(col(cid).as("__ccid"), col(cvec).as("__ce")))
-    val w = Window.partitionBy(col(idAs))
-      .orderBy(col("__cos").desc, col("__ccid").asc)
-    corpus.select(col(id).as(idAs), col(vec).as("__e"))
-      .crossJoin(cent)
-      .withColumn("__cos", round(expr("cosine_sim(__e, __ce)"), 6))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
+      idAs: String = "vec_id"): DataFrame =
+    nearestCells(corpus.select(col(id).as(idAs), col(vec).as("__e")), idAs,
+        "__e", centroids, cid, cvec, probe = 1)
       .select(col(idAs), col("__ccid").as("cell"),
         expr("zip_with(__e, __ce, (a, b) -> " +
           "CAST(a AS DOUBLE) - CAST(b AS DOUBLE))").as("residual"))
-  }
 
   /** The deterministic seed PQ codebook for the RESIDUAL space: the
     * residuals of `seedIds`' own vectors vs their assigned coarse cells
@@ -1124,8 +1112,7 @@ object Engine {
     * centroid set and a residual-trained codebook (e.g.
     * [[pqSeedResidualCodebook]] refined offline) as `codebook`.
     *
-    * Determinism: cell argmax runs over ROUNDED cosines with
-    * centroid-id tiebreak (the q99b discipline); residuals subtract in
+    * Determinism: cells come from [[nearestCells]]; residuals subtract in
     * double (exact); block distances and their sums reuse the
     * decimal-exact [[graft.plans.PqBlockDists]] kernel; final ranking
     * ties break (adist ASC, id ASC).
@@ -1150,9 +1137,6 @@ object Engine {
     require(nprobe >= 1 && k >= 1)
     require(rerank == 0 || rerank >= k,
       s"rerank shortlist ($rerank) must be at least k ($k)")
-    graft.plans.CosineSimilarity.register(corpus.sparkSession)
-    val cent = broadcast(
-      centroids.select(col(cid).as("__ccid"), col(cvec).as("__ce")))
     // corpus side: cell + residual in ONE assignment pass, the cell
     // riding through the encode as part of the composite key — the
     // whole corpus side is a single map+aggregate pipeline (no second
@@ -1169,13 +1153,9 @@ object Engine {
         col("__blk").as("block"), col("__m.__cid").as("code"))
     // query side: nprobe cells, each with its OWN query residual — the
     // LUT is keyed (query, cell): ADC distances are cell-relative
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("__cos").desc, col("__ccid").asc)
-    val qres = queries.select(col(qid).as("query_id"), col(qvec).as("__qe"))
-      .crossJoin(cent)
-      .withColumn("__cos", round(expr("cosine_sim(__qe, __ce)"), 6))
-      .withColumn("__rn", row_number().over(wq))
-      .filter(col("__rn") <= nprobe)
+    val qres = nearestCells(
+        queries.select(col(qid).as("query_id"), col(qvec).as("__qe")),
+        "query_id", "__qe", centroids, cid, cvec, nprobe)
       .select(col("query_id"), col("__ccid").as("cell"),
         expr("zip_with(__qe, __ce, (a, b) -> " +
           "CAST(a AS DOUBLE) - CAST(b AS DOUBLE))").as("__qr"))
@@ -1196,19 +1176,15 @@ object Engine {
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("__dd").cast(org.apache.spark.sql.types
         .DecimalType(38, 6))).cast(DoubleType).as("adist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("vec_id").asc)
+    val byAdist = Seq(col("adist").asc, col("vec_id").asc)
     if (rerank == 0) {
-      scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= k)
-        .select(col("query_id"), col("rnk").cast("int").as("rnk"),
-          col("vec_id"), col("adist"))
+      topKWithin(scored, "query_id", byAdist, k)
+        .select("query_id", "rnk", "vec_id", "adist")
     } else {
       // refine: the |Q|·rerank shortlist broadcasts onto the corpus —
       // one hash join keyed on the vector id re-reads ONLY shortlist
       // vectors; exact rounded-cosine rescoring then ranks the final k
-      val shortlist = scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= rerank)
+      val shortlist = topKWithin(scored, "query_id", byAdist, rerank)
         .select(col("query_id"), col("vec_id"))
       val qv = broadcast(queries
         .select(col(qid).as("query_id"), col(qvec).as("__qe2")))
@@ -1217,26 +1193,23 @@ object Engine {
         .join(broadcast(shortlist), Seq("vec_id"))
         .join(qv, Seq("query_id"))
         .select(col("query_id"), col("vec_id"),
-          round(expr("cosine_sim(__qe2, __e2)"), 6).as("cos_sim"))
-      val wr = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      exact.withColumn("rnk", row_number().over(wr))
-        .filter(col("rnk") <= k)
-        .select(col("query_id"), col("rnk").cast("int").as("rnk"),
-          col("vec_id"), col("cos_sim"))
+          cosine(col("__qe2"), col("__e2")).as("cos_sim"))
+      topKWithin(exact, "query_id",
+          Seq(col("cos_sim").desc, col("vec_id").asc), k)
+        .select("query_id", "rnk", "vec_id", "cos_sim")
     }
   }
 
   /** IVF search served from a PERSISTED index — the missing operational
     * half of [[ivfPqSearch]]: a billion-vector index is not rebuilt per
     * query batch, it is a TABLE, laid out so the storage engine prunes
-    * it. Build: assign every corpus vector its nearest cell (rounded
-    * cosine, centroid-id tiebreak — the q99b discipline) and write
-    * (vec_id, embedding) PARTITIONED BY cell to `indexPath`. Serve:
-    * compute each query's `nprobe` nearest cells, collect the DISTINCT
-    * probed-cell list (bounded by min(|queries|·nprobe, K) scalars — a
-    * config-sized driver list, never data), and read the index back
-    * with `cell IN (…)`: the filter lands on the PARTITION column, so
+    * it. Build: assign every corpus vector its nearest cell
+    * ([[nearestCells]]) and write (vec_id, embedding) PARTITIONED BY
+    * cell to `indexPath`. Serve: compute each query's `nprobe` nearest
+    * cells, collect the DISTINCT probed-cell list (bounded by
+    * min(|queries|·nprobe, K) scalars — a config-sized driver list,
+    * never data), and read the index back with `cell IN (…)`: the
+    * filter lands on the PARTITION column, so
     * the scan reads only the probed directories — nprobe/K of the
     * corpus off disk, which is the entire point of an inverted file.
     * Scoring then joins the broadcast probes on the cell and ranks
@@ -1255,27 +1228,52 @@ object Engine {
       nprobe, k)
   }
 
-  /** The shared cell-assignment map: nearest `probe` centroids per row
-    * by rounded cosine with centroid-id tiebreak (the q99b
-    * discipline); centroids broadcast, assignment is a map pass. Every
-    * OTHER column of `src` rides through unchanged, so index builds
-    * can carry filterable metadata beside the vector. */
+  /** The vector family's one exact scorer: the cosine of two
+    * ARRAY<FLOAT|DOUBLE> columns through the codegen
+    * [[graft.plans.CosineSimilarity]] kernel, rounded to 6 dp so every
+    * rank, threshold and argmax compares values both engines produce
+    * identically. Built directly like [[positionalNgrams]], so no session
+    * has to register the kernel first. */
+  private[graft] def cosine(a: Column, b: Column): Column =
+    round(org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      graft.plans.CosineSimilarity(
+        org.apache.spark.sql.graftbridge.ColumnBridge.expression(a),
+        org.apache.spark.sql.graftbridge.ColumnBridge.expression(b))), 6)
+
+  /** The first `k` rows of `df` within each `key` by `order`, numbered
+    * by an INT `rnk` from 1. The rank filter compiles to a partial
+    * WindowGroupLimit below the window's exchange (the q44 family). */
+  private[graft] def topKWithin(df: DataFrame, key: String,
+      order: Seq[Column], k: Int): DataFrame =
+    df.withColumn("rnk",
+        row_number().over(Window.partitionBy(col(key)).orderBy(order: _*)))
+      .filter(col("rnk") <= k)
+
+  /** The vector family's one nearest-centroid step: each row of `rows`
+    * (identified by `key`) keeps its `probe` nearest centroids by
+    * [[cosine]] of `vec`, ties to the smaller centroid id, so a vector's
+    * cell cannot depend on which operator assigned it. The centroids
+    * broadcast and the assignment is a map pass. Every column of `rows`
+    * rides through beside the centroid's `__ccid` and `__ce` (and the
+    * row's `__cos` and `rnk`). */
+  private[graft] def nearestCells(rows: DataFrame, key: String, vec: String,
+      centroids: DataFrame, cid: String, cvec: String,
+      probe: Int): DataFrame =
+    topKWithin(rows.crossJoin(broadcast(
+          centroids.select(col(cid).as("__ccid"), col(cvec).as("__ce"))))
+        .withColumn("__cos", cosine(col(vec), col("__ce"))),
+      key, Seq(col("__cos").desc, col("__ccid").asc), probe)
+
+  /** [[nearestCells]] keyed as the persisted index's STRING cell
+    * "c<centroid-id>". Every other column of `src` rides through
+    * unchanged, so index builds can carry filterable metadata beside
+    * the vector. */
   private def ivfCells(src: DataFrame, idAs: String, vecAs: String,
       centroids: DataFrame, cid: String, cvec: String,
-      probe: Int): DataFrame = {
-    graft.plans.CosineSimilarity.register(src.sparkSession)
-    val cent = broadcast(
-      centroids.select(col(cid).as("__ccid"), col(cvec).as("__ce")))
-    val w = Window.partitionBy(col(idAs))
-      .orderBy(col("__cos").desc, col("__ccid").asc)
-    src.crossJoin(cent)
-      .select(src.columns.toIndexedSeq.map(col) :+ col("__ccid") :+
-        round(expr(s"cosine_sim($vecAs, __ce)"), 6).as("__cos"): _*)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= probe)
+      probe: Int): DataFrame =
+    nearestCells(src, idAs, vecAs, centroids, cid, cvec, probe)
       .select(src.columns.toIndexedSeq.map(col) :+
         concat(lit("c"), col("__ccid")).as("cell"): _*)
-  }
 
   /** Build the persisted inverted file: one cell per vector, written
     * partitioned by cell (overwriting any previous index — which also
@@ -1389,7 +1387,6 @@ object Engine {
       candidateFilter: Option[Column] = None): DataFrame = {
     require(nprobe >= 1 && k >= 1)
     val spark = queries.sparkSession
-    graft.plans.CosineSimilarity.register(spark)
     val probes = ivfCells(queries.select(col(qid).as("query_id"),
       col(qvec).as("__qe")), "query_id", "__qe", centroids, cid, cvec,
       probe = nprobe)
@@ -1414,11 +1411,9 @@ object Engine {
       }
     val scored = index.join(broadcast(probes), Seq("cell"))
       .select(col("query_id"), col("vec_id"),
-        round(expr("cosine_sim(__qe, embedding)"), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+        cosine(col("__qe"), col("embedding")).as("cos_sim"))
+    topKWithin(scored, "query_id",
+        Seq(col("cos_sim").desc, col("vec_id").asc), k)
       .select("query_id", "rnk", "vec_id", "cos_sim")
   }
 
@@ -2849,34 +2844,49 @@ object Engine {
     require(tables >= 1 && bits >= 1 && 2 * bits <= coordsPerTable,
       s"lshTopK needs 2·bits ≤ coordsPerTable (bits=$bits, " +
         s"coordsPerTable=$coordsPerTable)")
-    graft.plans.CosineSimilarity.register(corpus.sparkSession)
     def codeAt(v: Column, offset: Int): Column = (0 until bits)
       .map(i => when(element_at(v, offset + 2 * i + 1) >
         element_at(v, offset + 2 * i + 2), lit(1 << i)).otherwise(lit(0)))
       .reduce(_ + _)
-    def tabsOf(df: DataFrame, idName: String, vecName: String) =
-      df.select(col(idName), col(vecName), posexplode(
-        array((0 until tables).map(t =>
-          codeAt(col(vecName), coordsPerTable * t)): _*))
-        .as(Seq("tbl", "bucket")))
-    val e = tabsOf(corpus.select(col(id).as("vec_id"),
+    bucketTopK(corpus, id, vec, queries, qid, qvec, k, bits) {
+      (df, idName, vecName) =>
+        df.select(col(idName), col(vecName), posexplode(
+          array((0 until tables).map(t =>
+            codeAt(col(vecName), coordsPerTable * t)): _*))
+          .as(Seq("tbl", "bucket")))
+    }
+  }
+
+  /** The bucket searches' shared candidate-and-rank half: `buckets`
+    * turns an (id, vec) frame into its (id, vec, tbl, bucket) rows;
+    * queries probe their [[hamming1Probes]] against the corpus buckets
+    * (the (tbl, bucket) equi-join is the OR construction's union, the
+    * query side broadcast), candidates dedup on (query, vec) and the
+    * one exact [[cosine]] ranks them. */
+  private def bucketTopK(corpus: DataFrame, id: String, vec: String,
+      queries: DataFrame, qid: String, qvec: String, k: Int, bits: Int)(
+      buckets: (DataFrame, String, String) => DataFrame): DataFrame = {
+    val e = buckets(corpus.select(col(id).as("vec_id"),
       col(vec).as("embedding")), "vec_id", "embedding")
-    val probeXors = 0 +: (0 until bits).map(1 << _)
-    val probes = tabsOf(queries.select(col(qid).as("query_id"),
-        col(qvec).as("qe")), "query_id", "qe")
-      .withColumn("__xor", explode(array(probeXors.map(lit): _*)))
-      .select(col("query_id"), col("qe"), col("tbl"),
-        col("bucket").bitwiseXOR(col("__xor")).as("bucket"))
+    val probes = hamming1Probes(buckets(queries.select(
+      col(qid).as("query_id"), col(qvec).as("qe")), "query_id", "qe"), bits)
     val cands = e.join(broadcast(probes), Seq("tbl", "bucket"))
       .dropDuplicates("query_id", "vec_id")
-    val scored = cands.select(col("query_id"), col("vec_id"),
-      round(expr("cosine_sim(qe, embedding)"), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    topKWithin(cands.select(col("query_id"), col("vec_id"),
+          cosine(col("qe"), col("embedding")).as("cos_sim")),
+        "query_id", Seq(col("cos_sim").desc, col("vec_id").asc), k)
       .select("query_id", "rnk", "vec_id", "cos_sim")
   }
+
+  /** Each row of a `bits`-wide (…, tbl, bucket) table probed at its own
+    * bucket and at every Hamming-1 flip of it: the probe set of the
+    * bucket searches ([[bucketTopK]], [[searchWhitenedHyperIndex]]). */
+  private def hamming1Probes(buckets: DataFrame, bits: Int): DataFrame =
+    buckets
+      .withColumn("__xor",
+        explode(array((0 +: (0 until bits).map(1 << _)).map(lit): _*)))
+      .withColumn("bucket", col("bucket").bitwiseXOR(col("__xor")))
+      .drop("__xor")
 
   /** HYPERPLANE multi-table OR-LSH top-k — [[lshTopK]]'s growth axis
     * past the dimension cap. The coordinate-pair codes of [[lshTopK]]
@@ -2935,28 +2945,9 @@ object Engine {
 
   def lshTopKHyper(corpus: DataFrame, id: String, vec: String,
       queries: DataFrame, qid: String, qvec: String, k: Int,
-      tables: Int = 8, bits: Int = 10, dims: Int = 64): DataFrame = {
-    graft.plans.CosineSimilarity.register(corpus.sparkSession)
-    def tabsOf(df: DataFrame, idName: String, vecName: String) =
-      hyperBuckets(df, idName, vecName, tables, bits, dims)
-    val e = tabsOf(corpus.select(col(id).as("vec_id"),
-      col(vec).as("embedding")), "vec_id", "embedding")
-    val probeXors = 0 +: (0 until bits).map(1 << _)
-    val probes = tabsOf(queries.select(col(qid).as("query_id"),
-        col(qvec).as("qe")), "query_id", "qe")
-      .withColumn("__xor", explode(array(probeXors.map(lit): _*)))
-      .select(col("query_id"), col("qe"), col("tbl"),
-        col("bucket").bitwiseXOR(col("__xor")).as("bucket"))
-    val cands = e.join(broadcast(probes), Seq("tbl", "bucket"))
-      .dropDuplicates("query_id", "vec_id")
-    val scored = cands.select(col("query_id"), col("vec_id"),
-      round(expr("cosine_sim(qe, embedding)"), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "vec_id", "cos_sim")
-  }
+      tables: Int = 8, bits: Int = 10, dims: Int = 64): DataFrame =
+    bucketTopK(corpus, id, vec, queries, qid, qvec, k, bits)(
+      hyperBuckets(_, _, _, tables, bits, dims))
 
   /** Two-stage TRUNCATE-then-RERANK retrieval (the Matryoshka recipe:
     * score the corpus on a dim prefix, rerank a shortlist at full
@@ -2983,27 +2974,22 @@ object Engine {
       queries: DataFrame, qid: String, qvec: String,
       dTrunc: Int, shortlist: Int, k: Int): DataFrame = {
     require(dTrunc >= 1 && shortlist >= k && k >= 1)
-    graft.plans.CosineSimilarity.register(corpus.sparkSession)
     val q = broadcast(queries.select(col(qid).as("query_id"),
       col(qvec).as("__qe"), slice(col(qvec), 1, dTrunc).as("__qt")))
     val lean = corpus
       .select(col(id).as("vec_id"), slice(col(vec), 1, dTrunc).as("__et"))
       .crossJoin(q.select(col("query_id"), col("__qt")))
       .select(col("query_id"), col("vec_id"),
-        round(expr("cosine_sim(__qt, __et)"), 6).as("cos_trunc"))
-    val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_trunc").desc, col("vec_id").asc)
-    val short = lean.withColumn("__s", row_number().over(w1))
-      .filter(col("__s") <= shortlist).drop("__s")
+        cosine(col("__qt"), col("__et")).as("cos_trunc"))
+    val short = topKWithin(lean, "query_id",
+      Seq(col("cos_trunc").desc, col("vec_id").asc), shortlist).drop("rnk")
     val rescored = corpus.select(col(id).as("vec_id"), col(vec).as("__e"))
       .join(broadcast(short), Seq("vec_id"))
       .join(q.select(col("query_id"), col("__qe")), Seq("query_id"))
       .select(col("query_id"), col("vec_id"), col("cos_trunc"),
-        round(expr("cosine_sim(__qe, __e)"), 6).as("cos_sim"))
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    rescored.withColumn("rnk", row_number().over(w2))
-      .filter(col("rnk") <= k)
+        cosine(col("__qe"), col("__e")).as("cos_sim"))
+    topKWithin(rescored, "query_id",
+        Seq(col("cos_sim").desc, col("vec_id").asc), k)
       .select("query_id", "rnk", "vec_id", "cos_trunc", "cos_sim")
   }
 
@@ -3028,16 +3014,13 @@ object Engine {
     * sets use bucketed ANN (see q99) — this is the exact baseline. */
   def cosineTopK(corpus: DataFrame, id: String, vec: String,
       queries: DataFrame, qid: String, qvec: String, k: Int): DataFrame = {
-    graft.plans.CosineSimilarity.register(corpus.sparkSession)
     val scored = corpus.select(col(id).as("vec_id"), col(vec).as("__e"))
       .crossJoin(broadcast(
         queries.select(col(qid).as("query_id"), col(qvec).as("__qe"))))
       .select(col("query_id"), col("vec_id"),
-        round(expr("cosine_sim(__qe, __e)"), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+        cosine(col("__qe"), col("__e")).as("cos_sim"))
+    topKWithin(scored, "query_id",
+        Seq(col("cos_sim").desc, col("vec_id").asc), k)
       .select("query_id", "rnk", "vec_id", "cos_sim")
   }
 
@@ -3074,10 +3057,9 @@ object Engine {
   }
 
   /** SEMANTIC dedup (the SemDeDup recipe): assign every vector to its
-    * nearest centroid (argmax rounded cosine, centroid-id tiebreak),
-    * compare pairs only WITHIN a cell, and drop each vector that has a
-    * smaller-id neighbor at rounded cosine ≥ tau. Returns the survivors
-    * as (id, cell).
+    * nearest centroid ([[nearestCells]]), compare pairs only WITHIN a
+    * cell, and drop each vector that has a smaller-id neighbor at
+    * rounded cosine ≥ tau. Returns the survivors as (id, cell).
     *
     * Scale shape: the centroid table is broadcast (assignment is an
     * O(N·K/parallelism) map), the pair join shuffles once on the cell
@@ -3097,11 +3079,6 @@ object Engine {
       centroids: DataFrame, cid: String, cvec: String,
       tau: Double, slices: Int = semDedupSlices): DataFrame = {
     require(slices >= 1, s"semanticDedup: slices must be >= 1, got $slices")
-    graft.plans.CosineSimilarity.register(vecs.sparkSession)
-    val cent = broadcast(
-      centroids.select(col(cid).as("__cid"), col(cvec).as("__ce")))
-    val w = Window.partitionBy(col("__vid"))
-      .orderBy(col("__cos").desc, col("__cid").asc)
     // NOTE (r17, §1 negative result): spreading the vecs before this
     // crossJoin was A/B-measured at 30× — 22.97 s original vs 27.23 s
     // spread — because the wall is NOT the centroid scoring but the
@@ -3109,13 +3086,9 @@ object Engine {
     // bounded by cell count and skewed by the largest cell), and the
     // extra embedding exchange only added cost. Left as-is; the cell
     // skew is priced in OPTIMIZATION_r17.md's not-optimized list.
-    val cells = vecs.select(col(id).as("__vid"), col(vec).as("__e"))
-      .crossJoin(cent)
-      .select(col("__vid"), col("__e"), col("__cid"),
-        round(expr("cosine_sim(__e, __ce)"), 6).as("__cos"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col("__vid"), col("__e"), col("__cid").as("cell"))
+    val cells = nearestCells(vecs.select(col(id).as("__vid"),
+        col(vec).as("__e")), "__vid", "__e", centroids, cid, cvec, probe = 1)
+      .select(col("__vid"), col("__e"), col("__ccid").as("cell"))
     // GRID-DECOMPOSED within-cell pair join (r17, guide §2 "split hot
     // keys"): keyed on `cell` alone, the pair join's parallelism is
     // bounded by the CELL COUNT (K=8 in the registered query) and
@@ -3145,7 +3118,7 @@ object Engine {
     val dropped = lhs.join(rhs, Seq("cell", "__p", "__q"))
       .filter(col("__va") =!= col("__vb") &&
         ((col("__p") =!= col("__q")) || (col("__va") < col("__vb"))) &&
-        round(expr("cosine_sim(__ea, __eb)"), 6) >= lit(tau))
+        cosine(col("__ea"), col("__eb")) >= lit(tau))
       .select(greatest(col("__va"), col("__vb")).as("__vid")).distinct()
     cells.join(dropped, Seq("__vid"), "left_anti")
       .select(col("__vid").as(id), col("cell"))
@@ -3178,13 +3151,12 @@ object Engine {
     * engine-stable. */
   def semanticDecontaminate(vecs: DataFrame, id: String, vec: String,
       isBenchmark: Column, tau: Double): DataFrame = {
-    graft.plans.CosineSimilarity.register(vecs.sparkSession)
     val bench = broadcast(vecs.filter(isBenchmark)
       .select(col(vec).as("__be")))
     vecs.filter(!isBenchmark)
       .select(col(id).as(id), col(vec).as("__e"))
       .crossJoin(bench)
-      .select(col(id), round(expr("cosine_sim(__e, __be)"), 6).as("__c"))
+      .select(col(id), cosine(col("__e"), col("__be")).as("__c"))
       .filter(col("__c") >= lit(tau))
       .groupBy(col(id))
       .agg(count(lit(1)).cast("int").as("n_bench_hits"),
@@ -3210,33 +3182,22 @@ object Engine {
       seeds: DataFrame, cid: String, cvec: String,
       iters: Int): DataFrame = {
     require(iters >= 1)
-    // assignment cosine rides the codegen kernel (r14, the SURVEY §8
-    // interpreted-HOF audit): the zip_with∘aggregate HOF form ran
-    // INTERPRETED in the |vecs|×K hot loop; ExpressionSpec pins the
-    // kernel bit-identical, so the swap cannot move the oracle
-    graft.plans.CosineSimilarity.register(vecs.sparkSession)
     val e = vecs.select(col(id).as("__vid"), col(vec).as("__e"))
-    var cent = seeds.select(col(cid).as("__cid"), col(cvec).as("__ce"))
+    var cent = seeds.select(col(cid).as("__ccid"), col(cvec).as("__ce"))
     var perDim: DataFrame = null
     for (_ <- 1 to iters) {
-      val w = Window.partitionBy(col("__vid"))
-        .orderBy(col("__cos").desc, col("__cid").asc)
-      val members = e.crossJoin(broadcast(cent))
-        .select(col("__vid"), col("__e"), col("__cid"),
-          round(expr("cosine_sim(__e, __ce)"), 6).as("__cos"))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-      perDim = members
-        .select(col("__cid"), posexplode(col("__e")).as(Seq("__d", "__v")))
-        .groupBy(col("__cid"), (col("__d") + 1).cast("int").as("__dim"))
+      perDim = nearestCells(e, "__vid", "__e", cent, "__ccid", "__ce",
+          probe = 1)
+        .select(col("__ccid"), posexplode(col("__e")).as(Seq("__d", "__v")))
+        .groupBy(col("__ccid"), (col("__d") + 1).cast("int").as("__dim"))
         .agg(graft.Canon.avgDec(col("__v").cast(DoubleType)).as("__c"))
       cent = perDim
-        .groupBy(col("__cid"))
+        .groupBy(col("__ccid"))
         .agg(transform(
           array_sort(collect_list(struct(col("__dim"), col("__c")))),
           x => x.getField("__c")).as("__ce"))
     }
-    perDim.select(col("__cid").as("cell"), col("__dim").as("dim"),
+    perDim.select(col("__ccid").as("cell"), col("__dim").as("dim"),
       col("__c").as("centroid"))
   }
 
@@ -3425,26 +3386,20 @@ object Engine {
       qvec: String, indexPath: String, k: Int, tables: Int = 8,
       bits: Int = 10, dims: Int = 64): DataFrame = {
     val ss = queries.sparkSession
-    graft.plans.CosineSimilarity.register(ss)
     val packed = packStats(ss.read.parquet(s"$indexPath/stats"))
     val zq = zApply(queries, col(qid), qvec, Nil, packed)
       .select(col("vec_id").as("query_id"), col("__z").as("__qz"))
-    val probeXors = 0 +: (0 until bits).map(1 << _)
-    val probes = hyperBuckets(zq, "query_id", "__qz", tables, bits, dims)
-      .withColumn("__xor", explode(array(probeXors.map(lit): _*)))
-      .select(col("query_id"), col("__qz"), col("tbl"),
-        col("bucket").bitwiseXOR(col("__xor")).as("bucket"))
+    val probes = hamming1Probes(
+      hyperBuckets(zq, "query_id", "__qz", tables, bits, dims), bits)
     val cands = ss.read.parquet(s"$indexPath/buckets")
       .join(broadcast(probes), Seq("tbl", "bucket"))
       .dropDuplicates("query_id", "vec_id")
     val scored = cands
       .join(ss.read.parquet(s"$indexPath/vecs"), Seq("vec_id"))
       .select(col("query_id"), col("vec_id"),
-        round(expr("cosine_sim(__qz, z)"), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+        cosine(col("__qz"), col("z")).as("cos_sim"))
+    topKWithin(scored, "query_id",
+        Seq(col("cos_sim").desc, col("vec_id").asc), k)
       .select("query_id", "rnk", "vec_id", "cos_sim")
   }
 
@@ -3597,18 +3552,15 @@ object Engine {
   def hardNegatives(corpus: DataFrame, id: String, vec: String,
       label: String, queries: DataFrame, qid: String, qvec: String,
       qlabel: String, k: Int): DataFrame = {
-    graft.plans.CosineSimilarity.register(corpus.sparkSession)
     val scored = corpus
       .select(col(id).as("vec_id"), col(vec).as("__e"), col(label).as("__l"))
       .crossJoin(broadcast(queries.select(col(qid).as("query_id"),
         col(qvec).as("__qe"), col(qlabel).as("__ql"))))
       .filter(col("__l") =!= col("__ql"))
       .select(col("query_id"), col("vec_id"),
-        round(expr("cosine_sim(__qe, __e)"), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+        cosine(col("__qe"), col("__e")).as("cos_sim"))
+    topKWithin(scored, "query_id",
+        Seq(col("cos_sim").desc, col("vec_id").asc), k)
       .select("query_id", "rnk", "vec_id", "cos_sim")
   }
 
@@ -4619,14 +4571,14 @@ object Engine {
   }
 
   /** Cluster-BALANCED corpus capping: assign every vector to its
-    * nearest centroid (rounded-cosine argmax, the q99b discipline) and
-    * keep at most `cap` members per cell, chosen by the stable md5
-    * rank of the id — the embedding-space counterpart of the q95e
-    * per-source cap. Web-scale corpora are extremely cluster-skewed
-    * (boilerplate templates form giant cells); capping per SEMANTIC
-    * cell flattens that skew where a per-source cap cannot see it
-    * (one domain spans many templates, one template spans many
-    * domains). Returns (cell, vec_id, rnk) for the kept rows.
+    * nearest centroid ([[nearestCells]]) and keep at most `cap` members
+    * per cell, chosen by the stable md5 rank of the id — the
+    * embedding-space counterpart of the q95e per-source cap. Web-scale
+    * corpora are extremely cluster-skewed (boilerplate templates form
+    * giant cells); capping per SEMANTIC cell flattens that skew where a
+    * per-source cap cannot see it (one domain spans many templates, one
+    * template spans many domains). Returns (cell, vec_id, rnk) for the
+    * kept rows.
     *
     * Plan: centroids broadcast (bounded config), assignment is a
     * per-row argmax — no data exchange; the cap is a rank window on
@@ -4638,26 +4590,14 @@ object Engine {
       centroids: DataFrame, cid: String, cvec: String,
       cap: Int): DataFrame = {
     require(cap >= 1)
-    graft.plans.CosineSimilarity.register(vecs.sparkSession)
-    val cent = broadcast(
-      centroids.select(col(cid).as("__cid"), col(cvec).as("__ce")))
-    val aw = Window.partitionBy(col("__vid"))
-      .orderBy(col("__cos").desc, col("__cid").asc)
-    val cells = Spread.roundRobin(vecs)
-      .select(col(id).as("__vid"), col(vec).as("__e"))
-      .crossJoin(cent)
-      .select(col("__vid"), col("__cid"),
-        round(expr("cosine_sim(__e, __ce)"), 6).as("__cos"))
-      .withColumn("__rn", row_number().over(aw))
-      .filter(col("__rn") === 1)
-      .select(col("__vid"), col("__cid").as("cell"))
-    val kw = Window.partitionBy(col("cell"))
-      .orderBy(substring(md5(col("__vid").cast("string")), 1, 8).asc,
-        col("__vid").asc)
-    cells.withColumn("rnk", row_number().over(kw))
-      .filter(col("rnk") <= cap)
-      .select(col("cell"), col("__vid").as("vec_id"),
-        col("rnk").cast("int").as("rnk"))
+    val cells = nearestCells(Spread.roundRobin(vecs)
+        .select(col(id).as("__vid"), col(vec).as("__e")),
+        "__vid", "__e", centroids, cid, cvec, probe = 1)
+      .select(col("__vid"), col("__ccid").as("cell"))
+    topKWithin(cells, "cell", Seq(
+        substring(md5(col("__vid").cast("string")), 1, 8).asc,
+        col("__vid").asc), cap)
+      .select(col("cell"), col("__vid").as("vec_id"), col("rnk"))
   }
 
   /** Text CANONICALIZATION for normalization-aware dedup: lowercase,
@@ -5829,7 +5769,6 @@ object Engine {
     // engines (exact-binary) round apart — integer-scaled decimals
     // make every comparison and the emitted score exact instead
     val dec = org.apache.spark.sql.types.DecimalType(38, 6)
-    graft.plans.CosineSimilarity.register(corpus.sparkSession)
     // q92's scored-cross shape, but self-matches drop BEFORE ranking so
     // every query gets a full n candidates
     val scored = corpus
@@ -5838,16 +5777,15 @@ object Engine {
         col(qvec).as("__qe"))))
       .filter(col("__i") =!= col("__q"))
       .select(col("__q"), col("__i"),
-        round(expr("cosine_sim(__qe, __e)"), 6).as("__rel"))
-    val wRel = Window.partitionBy(col("__q"))
-      .orderBy(col("__rel").desc, col("__i").asc)
+        cosine(col("__qe"), col("__e")).as("__rel"))
     // cand is |Q|·n rows but its SUBTREE is the corpus-wide cosine
     // scan + top-n window: every unrolled step anti-joins against it,
     // so without the persist the greedy loop re-scores the corpus
     // k+1 times (measured 11.4 s -> the persisted plan's ~2 s at
     // sf0.1)
-    val cand = scored.withColumn("__rn", row_number().over(wRel))
-      .filter(col("__rn") <= n).drop("__rn").persistOnce()
+    val cand = topKWithin(scored, "__q",
+        Seq(col("__rel").desc, col("__i").asc), n)
+      .drop("rnk").persistOnce()
     val withVec = cand.join(
       corpus.select(col(id).as("__i"), col(vec).as("__e")), Seq("__i"))
       .persistOnce()
@@ -5856,7 +5794,7 @@ object Engine {
         col("__e").as("__e2")), Seq("__q"))
       .filter(col("__i") =!= col("__j"))
       .select(col("__q"), col("__i"), col("__j"),
-        round(expr("cosine_sim(__e, __e2)"), 6).as("__sim"))
+        cosine(col("__e"), col("__e2")).as("__sim"))
       .persistOnce()
     val w = Window.partitionBy(col("__q"))
       .orderBy(col("__s100").desc, col("__i").asc)
@@ -6575,21 +6513,18 @@ object Engine {
     * sides) are excluded. Returns (query_doc, rnk, doc, maxsim). */
   def maxSimRetrieve(tokens: DataFrame, doc: String, tokId: String,
       vec: String, queryTokens: DataFrame, k: Int): DataFrame = {
-    graft.plans.CosineSimilarity.register(tokens.sparkSession)
     val q = queryTokens.select(col(doc).as("query_doc"),
       col(tokId).as("__qt"), col(vec).as("__qe"))
     val t = tokens.select(col(doc).as("doc"), col(vec).as("__e"))
     val perTok = t.crossJoin(broadcast(q))
       .filter(col("doc") =!= col("query_doc"))
       .groupBy(col("query_doc"), col("__qt"), col("doc"))
-      .agg(max(round(expr("cosine_sim(__qe, __e)"), 6)).as("__m"))
+      .agg(max(cosine(col("__qe"), col("__e"))).as("__m"))
     val scored = perTok.groupBy(col("query_doc"), col("doc"))
       .agg(sum(col("__m").cast(org.apache.spark.sql.types
           .DecimalType(38, 6))).cast(DoubleType).as("maxsim"))
-    val w = Window.partitionBy(col("query_doc"))
-      .orderBy(col("maxsim").desc, col("doc").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    topKWithin(scored, "query_doc",
+        Seq(col("maxsim").desc, col("doc").asc), k)
       .select(col("query_doc"), col("rnk"), col("doc"),
         round(col("maxsim"), 6).as("maxsim"))
   }

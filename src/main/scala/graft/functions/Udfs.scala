@@ -86,7 +86,6 @@ object Udfs {
          |FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
          |ORDER BY vec_a NULLS FIRST, vec_b NULLS FIRST, cos_sim NULLS FIRST""".stripMargin) {
       (s, dir) =>
-        graft.plans.CosineSimilarity.register(s)
         val e = Tables.t(s, dir, "embeddings")
         val a = e.select(col("vec_id").as("vec_a"),
           col("embedding").as("ea"))
@@ -94,6 +93,6 @@ object Udfs {
           col("embedding").as("eb"))
         orderAll(a.join(b, col("vec_b") === col("vec_a") + 1)
           .select(col("vec_a"), col("vec_b"),
-            round(expr("cosine_sim(ea, eb)"), 6).as("cos_sim")))
+            graft.Engine.cosine(col("ea"), col("eb")).as("cos_sim")))
     })
 }

@@ -324,7 +324,6 @@ object LlmPipeline {
     // cosine ≥ 0.3. The bucket approximation is part of the operator's
     // contract and the oracle applies it identically.
     Q("q92b_cosine_neardup", cosineNeardupOracleSql) { (s, dir) =>
-      graft.plans.CosineSimilarity.register(s)
       val e = Tables.t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), bucketCode.as("bucket"))
       val pairs = e.select(col("bucket"), col("vec_id").as("vec_a"),
@@ -333,7 +332,7 @@ object LlmPipeline {
           col("embedding").as("eb")), Seq("bucket"))
         .filter(col("vec_a") < col("vec_b"))
         .select(col("vec_a"), col("vec_b"),
-          round(expr("cosine_sim(ea, eb)"), 6).as("cos_sim"))
+          graft.Engine.cosine(col("ea"), col("eb")).as("cos_sim"))
       orderAll(pairs.filter(col("cos_sim") >= 0.3))
     },
 
@@ -669,31 +668,22 @@ object LlmPipeline {
     // (cos DESC, id ASC) and assignment ties on (cos DESC, cid ASC) —
     // over ROUNDED cosines, so both engines argmax identical values.
     Q("q99b_ivf_ann", ivfAnnOracleSql) { (s, dir) =>
-      graft.plans.CosineSimilarity.register(s)
       val e = Tables.t(s, dir, "embeddings")
       val cent = e.filter(col("vec_id").isin(ivfCentroidIds: _*))
-        .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      def nearestCells(src: org.apache.spark.sql.DataFrame, idAs: String,
-          vecAs: String, nprobe: Int) = {
-        val w = Window.partitionBy(col(idAs))
-          .orderBy(col("__cos").desc, col("cid").asc)
-        src.crossJoin(broadcast(cent))
+      def cells(src: org.apache.spark.sql.DataFrame, idAs: String,
+          vecAs: String, nprobe: Int) =
+        graft.Engine.nearestCells(src, "vec_id", "embedding",
+            cent, "vec_id", "embedding", nprobe)
           .select(col("vec_id").as(idAs), col("embedding").as(vecAs),
-            col("cid"), round(expr(s"cosine_sim($vecAs, ce)"), 6).as("__cos"))
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= nprobe)
-          .select(col(idAs), col(vecAs), col("cid").as("cell"))
-      }
-      val cells = nearestCells(e, "vec_id", "embedding", nprobe = 1)
-      val probes = nearestCells(e.filter(col("vec_id") < 20),
+            col("__ccid").as("cell"))
+      val probes = cells(e.filter(col("vec_id") < 20),
         "query_id", "qe", nprobe = 2)
-      val scored = cells.join(broadcast(probes), Seq("cell"))
+      val scored = cells(e, "vec_id", "embedding", nprobe = 1)
+        .join(broadcast(probes), Seq("cell"))
         .select(col("query_id"), col("vec_id"),
-          round(expr("cosine_sim(qe, embedding)"), 6).as("cos_sim"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      orderAll(scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3)
+          graft.Engine.cosine(col("qe"), col("embedding")).as("cos_sim"))
+      orderAll(graft.Engine.topKWithin(scored, "query_id",
+          Seq(col("cos_sim").desc, col("vec_id").asc), 3)
         .select("query_id", "rnk", "vec_id", "cos_sim"))
     },
 
@@ -810,23 +800,19 @@ object LlmPipeline {
     // integer grid pos+1 ≤ 11 where engines agree, MRR is one IEEE
     // divide.
     Q("q99l_ranking_metrics", rankingMetricsOracleSql) { (s, dir) =>
-      graft.plans.CosineSimilarity.register(s)
       val e = Tables.t(s, dir, "embeddings")
       val qs = e.filter(col("vec_id") < 8)
       def ranked(dims: Option[Int]) = {
         val ec = dims.map(d => slice(col("embedding"), 1, d))
           .getOrElse(col("embedding"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__q"))
-          .orderBy(col("__s").desc, col("__i").asc)
-        e.select(col("vec_id").as("__i"), ec.as("__e"))
+        val scored = e.select(col("vec_id").as("__i"), ec.as("__e"))
           .crossJoin(broadcast(
             qs.select(col("vec_id").as("__q"), ec.as("__qe"))))
           .filter(col("__i") =!= col("__q"))
           .select(col("__q"), col("__i"),
-            round(expr("cosine_sim(__qe, __e)"), 6).as("__s"))
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 10)
+            graft.Engine.cosine(col("__qe"), col("__e")).as("__s"))
+        graft.Engine.topKWithin(scored, "__q",
+            Seq(col("__s").desc, col("__i").asc), 10)
           .select(col("__q").as("qid"), col("__i").as("item"),
             col("rnk"))
       }

@@ -1719,6 +1719,67 @@ class EngineSpec extends AnyFunSuite {
     assert(cap(e.repartition(7)).toSet == got.toSet)
   }
 
+  test("topKWithin: ties break by the next order key, rnk is a dense INT " +
+      "from 1, and a key with fewer than k rows keeps them all") {
+    import spark.implicits._
+    val df = Seq((1L, 5L, 0.5), (1L, 3L, 0.9), (1L, 4L, 0.5), (1L, 2L, 0.5),
+      (2L, 7L, 0.1)).toDF("key", "id", "score")
+    val top = Engine.topKWithin(df, "key",
+      Seq(col("score").desc, col("id").asc), 3)
+    assert(top.schema("rnk").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    val got = top.select("key", "rnk", "id").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    // key 1: 0.9 first, then the 0.5 tie in ascending id, id 5 cut at k
+    assert(got == Set((1L, 1, 3L), (1L, 2, 2L), (1L, 3, 4L), (2L, 1, 7L)))
+  }
+
+  test("nearestCells: probe = 2 keeps the two nearest centroids, a rounded " +
+      "cosine tie goes to the smaller centroid id, other columns ride through") {
+    import spark.implicits._
+    // centroids 30 and 10 are parallel, so every row scores them equal
+    val rows = Seq((1L, "a", Array(1.0f, 0.1f, 0.0f)),
+      (2L, "b", Array(0.1f, 1.0f, 0.0f))).toDF("vec_id", "tag", "embedding")
+    val cents = Seq((30L, Array(1.0f, 0.0f, 0.0f)),
+      (10L, Array(2.0f, 0.0f, 0.0f)),
+      (20L, Array(0.0f, 1.0f, 0.0f))).toDF("cid", "ce")
+    def cells(probe: Int) = Engine.nearestCells(rows, "vec_id", "embedding",
+        cents, "cid", "ce", probe)
+      .select("vec_id", "tag", "__ccid", "__ce").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+        r.getSeq[Float](3))).toSet
+    assert(cells(1) == Set((1L, "a", 10L, Seq(2.0f, 0.0f, 0.0f)),
+      (2L, "b", 20L, Seq(0.0f, 1.0f, 0.0f))))
+    assert(cells(2).map(c => (c._1, c._2, c._3)) == Set((1L, "a", 10L),
+      (1L, "a", 30L), (2L, "b", 20L), (2L, "b", 10L)))
+  }
+
+  test("nearestCells: ivfResiduals, buildIvfIndex, semanticDedup and " +
+      "clusterCap assign every fixture vector the same cell") {
+    val e = Tables.t(spark, TestSpark.sfDir, "embeddings")
+    val cents = e.filter(col("vec_id")
+      .isin(Seq(3L, 67L, 131L, 195L, 259L, 323L, 387L, 451L): _*))
+    def cellOf(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("vec_id"), col("cell").cast("string")).collect()
+        .map(r => r.getLong(0) -> r.getString(1).stripPrefix("c")).toMap
+    val residual = cellOf(Engine.ivfResiduals(e, "vec_id", "embedding",
+      cents, "vec_id", "embedding"))
+    val index = graft.sources.IO.scratch("enginespec-ivf-assign",
+      TestSpark.sfDir)
+    Engine.buildIvfIndex(e, "vec_id", "embedding", cents, "vec_id",
+      "embedding", index)
+    // a rounded cosine never exceeds 1, so tau 2 drops no vector and
+    // clusterCap's cap is the corpus size
+    val dedup = cellOf(Engine.semanticDedup(e, "vec_id", "embedding",
+      cents, "vec_id", "embedding", tau = 2.0))
+    val capped = cellOf(Engine.clusterCap(e, "vec_id", "embedding",
+      cents, "vec_id", "embedding", cap = e.count().toInt))
+    assert(residual.size == e.count())
+    assert(cellOf(spark.read.parquet(index)) == residual)
+    assert(dedup == residual)
+    assert(capped == residual)
+  }
+
   test("vacuumPartitions: drops exactly the pre-cutoff slots, keeps the rest intact") {
     import spark.implicits._
     val dir = graft.sources.IO.scratch("enginespec-vacuum", TestSpark.sfDir)

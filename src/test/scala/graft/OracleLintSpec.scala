@@ -180,6 +180,41 @@ class OracleLintSpec extends AnyFunSuite {
       .foreach(l => assert(kernel.findFirstIn(l).isEmpty, l))
   }
 
+  test("vector scoring: the cosine kernel is invoked in exactly one place under src/main/scala") {
+    // the vector family shares one rounded scorer (Engine.cosine); a
+    // second invocation is a copied scorer whose rounding can drift from
+    // the ranks, thresholds and argmaxes the oracles replay. The kernel is
+    // built directly, so no operator registers it on a session either
+    val kernel =
+      """\bcosine_sim\s*\(|\bCosineSimilarity\s*\(|\bCosineSimilarity\.name\b""".r
+    val register = """\bCosineSimilarity\.register\s*\(""".r
+    def outsideKernel(pattern: scala.util.matching.Regex) =
+      scalaLines("src/main/scala") { (f, line) =>
+        f != "CosineSimilarity.scala" && pattern.findFirstIn(line).isDefined
+      }
+    val found = outsideKernel(kernel)
+    assert(found.size == 1, found.mkString("\n"))
+    val registered = outsideKernel(register)
+    assert(registered.isEmpty, registered.mkString("\n"))
+    // the detectors fire on every invocation spelling and pass the
+    // shared helper, the bare name and prose
+    Seq("""round(expr("cosine_sim(ea, eb)"), 6)""",
+      """expr(s"cosine_sim($vecAs, ce)")""", "cosine_sim (a, b)",
+      "call_function(CosineSimilarity.name, a, b)",
+      "graft.plans.CosineSimilarity(a.expr, b.expr)")
+      .foreach(l => assert(kernel.findFirstIn(l).isDefined, l))
+    Seq("val name = \"cosine_sim\"", """Engine.cosine(col("ea"), col("eb"))""",
+      "my_cosine_sim(a)", "the codegen CosineSimilarity expression",
+      "[[graft.plans.CosineSimilarity]] kernel")
+      .foreach(l => assert(kernel.findFirstIn(l).isEmpty, l))
+    Seq("graft.plans.CosineSimilarity.register(s)",
+      "CosineSimilarity.register (spark)")
+      .foreach(l => assert(register.findFirstIn(l).isDefined, l))
+    Seq("graft.plans.SignProject.register(df.sparkSession)",
+      "the [[CosineSimilarity.register]] pattern")
+      .foreach(l => assert(register.findFirstIn(l).isEmpty, l))
+  }
+
   test("concurrency: no file under src/main/scala names a Scala Future or the global pool") {
     // a pool thread carries the Spark local properties it inherited when
     // it was created, so an action submitted there can be filed under a

@@ -1020,6 +1020,38 @@ class PlanSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("q90h: building the banded containment plan runs at most 2 actions") {
+    // the asymmetry audit and the verify gate's doc count are the only
+    // actions before the query's own write; the two doc tables are
+    // counted by one action, not one each. Adaptive execution splits an
+    // action into one job per query stage (and the first action also
+    // fills the persisted doc tables), so the count is of the distinct
+    // SQL executions the plan build's jobs ran under
+    val sc = spark.sparkContext
+    val group = "q90h-plan-build"
+    val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .filter(_.getProperty("spark.jobGroup.id") == group)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.root.id"))
+            .orElse(Option(p.getProperty("spark.sql.execution.id"))))
+          .foreach(execs.add(_): Unit)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "q90h plan build")
+    try {
+      SparkEntry.queries("q90h_containment_join")(spark, TestSpark.sfDir)
+      org.apache.spark.ListenerBusDrain.drain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(execs.size <= 2,
+      s"${execs.size} actions ran while q90h's plan was built")
+  }
+
   test("entry() returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
