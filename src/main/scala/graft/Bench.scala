@@ -365,8 +365,6 @@ object Bench {
     val tasks = new java.util.concurrent.atomic.AtomicLong()
     val taskRunMs = new java.util.concurrent.atomic.AtomicLong()
     val jobCoveredMs = new java.util.concurrent.atomic.AtomicLong()
-    val lastTaskEvent =
-      new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         // events reach one listener in order on the bus thread, so the
@@ -378,18 +376,15 @@ object Bench {
           jobs.incrementAndGet()
           if (activeJobs == 0) activeSince = e.time
           activeJobs += 1
-          lastTaskEvent.set(System.nanoTime())
         }
         override def onJobEnd(
             e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
           activeJobs -= 1
           if (activeJobs == 0) jobCoveredMs.addAndGet(e.time - activeSince)
-          lastTaskEvent.set(System.nanoTime())
         }
         override def onStageCompleted(
             e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
           stages.incrementAndGet()
-          lastTaskEvent.set(System.nanoTime())
         }
         override def onTaskEnd(
             e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -402,18 +397,8 @@ object Bench {
             taskRunMs.addAndGet(m.executorRunTime)
             ()
           }
-          lastTaskEvent.set(System.nanoTime())
         }
       })
-    // Listener events are async; wait for a quiet window so a query's
-    // last job/stage/task-end deltas land in ITS snapshot (bounded — the
-    // wait sits outside every timed region, so totals are unaffected).
-    def drainTaskEvents(): Unit = {
-      val deadline = System.nanoTime() + 1_000_000_000L
-      while (System.nanoTime() < deadline &&
-          System.nanoTime() - lastTaskEvent.get() < 50_000_000L)
-        Thread.sleep(10)
-    }
     val triggers = new java.util.concurrent.atomic.AtomicLong()
     // SPARK_GRAFT_STREAM_PROFILE=1: per-trigger cost DECOMPOSITION to
     // stderr — durationMs (addBatch / queryPlanning / walCommit /
@@ -587,7 +572,12 @@ object Bench {
       val jobs0 = (jobs.get(), stages.get(), tasks.get(), taskRunMs.get(),
         jobCoveredMs.get())
       val w = once(fn) // warm-up: JIT, codegen cache, file listing, page cache
-      drainTaskEvents()
+      // listener events are async: drain the bus so the query's last
+      // job/stage/task-end deltas land in ITS snapshot (bounded, and
+      // outside every timed region, so totals are unaffected)
+      try org.apache.spark.ListenerBusDrain.drain(spark.sparkContext, 10000L)
+      catch { case e: java.util.concurrent.TimeoutException =>
+        System.err.println(s"[bench] $name: listener bus not drained: $e") }
       val io = (ioRead.get() - io0._1, ioWrite.get() - io0._2,
         ioSpill.get() - io0._3)
       val qjobs = Option.when(w >= 0) {

@@ -119,47 +119,37 @@ object SnapshotFixture {
   * row-group start reads nothing — and the driver fixtures are
   * single-file single-row-group tables, so every fixture scan runs as
   * effectively ONE task and all per-row work fused into the scan stage
-  * (decimal casts, Expand fan-out, percentile buffers, format_string)
-  * serializes on it at ANY core count (measured r17: q46_stats 2.25 s
-  * wall with 1.95 s summed task time — ~zero overlap on local[32]).
-  * [[Spread.byKey]] hash-repartitions on a caller-chosen
-  * high-cardinality key to the session default parallelism, moving the
-  * per-row work onto all cores for one narrow exchange of the projected
-  * columns; keyed hashing (vs keyless round-robin) avoids the
-  * sort-before-repartition pass AND stays deterministic under task
-  * retry. The guard is conditional: any input that already scans wider
-  * (every production-scale table) passes through untouched, so this is
-  * the small-input-regime floor, not a local[32] constant — same
-  * discipline as [[Spread.roundRobin]] on the shingling and decode
-  * paths. */
+  * (decimal casts, Expand fan-out, percentile buffers, shingling,
+  * hashing, media decode) serializes on it at ANY core count (measured
+  * r17: q46_stats 2.25 s wall with 1.95 s summed task time — ~zero
+  * overlap on local[32]; q90d 33 s single-threaded vs 5 s spread).
+  * When every downstream join broadcasts, or a decode pipeline has no
+  * exchange of its own, Catalyst has no reason to add the exchange the
+  * CPU profile needs, so `Spread(ds, keys*)` adds it: to the session
+  * default parallelism, moving the per-row work onto all cores for one
+  * narrow exchange of the projected columns.
+  *
+  * With `keys` it hash-repartitions on them — a caller's
+  * high-cardinality key avoids the sort-before-repartition pass AND
+  * stays deterministic under task retry; with none it round-robins.
+  * One threshold decides both: spread only on MATERIALLY deficient
+  * parallelism (under half the cores) — a scan already within 2× of
+  * the core count gains less from the extra exchange than the exchange
+  * costs (measured on the 10× fixture, whose ~27 row-group splits at
+  * 32 cores must pass through untouched). Any input that already scans
+  * wider (every production-scale table) comes back as the same Dataset,
+  * so this is the small-input-regime floor, not a local[32] constant. */
 object Spread {
-  def byKey(df: DataFrame, key: Column): DataFrame = {
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    // trigger only on MATERIALLY deficient parallelism (< half the
-    // cores): a scan already within 2× of core count gains less from
-    // the extra exchange than the exchange costs (measured on the 10×
-    // fixture, whose ~27 row-group splits at 32 cores must pass through
-    // untouched)
-    if (df.rdd.getNumPartitions * 2 < want) df.repartition(want, key)
-    else df
+  def apply[T](ds: Dataset[T], keys: Column*): Dataset[T] = {
+    val want = ds.sparkSession.sparkContext.defaultParallelism
+    if (width(ds) * 2 >= want) ds
+    else if (keys.isEmpty) ds.repartition(want)
+    else ds.repartition(want, keys: _*)
   }
 
-  /** Raise a Dataset to at least the session's default parallelism
-    * before a CPU-heavy per-row stage (shingling, hashing, media
-    * decode). A small parquet input arrives as one or two scan
-    * partitions, and when every downstream join broadcasts (or, for a
-    * decode pipeline, there is no exchange of its own) the whole
-    * pipeline runs at scan parallelism, i.e. serially (q90d measured
-    * 33 s single-threaded vs 5 s spread; the bimodality was AQE
-    * flapping between all-broadcast and sort-merge plans, the LATTER
-    * accidentally re-parallelizing). At production scale the scan has
-    * thousands of partitions and this is a no-op — the guard exists for
-    * the tiny-file regime where Catalyst has no reason to add the
-    * exchange the CPU profile needs. */
-  def roundRobin[T](ds: Dataset[T]): Dataset[T] = {
-    val want = ds.sparkSession.sparkContext.defaultParallelism
-    if (ds.rdd.getNumPartitions < want) ds.repartition(want) else ds
-  }
+  /** The input's partition count — the one place `src/main` reads it
+    * (physically planning `ds`; a file scan fires no job). */
+  def width(ds: Dataset[_]): Int = ds.rdd.getNumPartitions
 }
 
 /** Overlap two INDEPENDENT Spark actions (guide §2.6 — overlap

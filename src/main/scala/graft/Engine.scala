@@ -346,7 +346,7 @@ object Engine {
       outCol: String = "global_id"): DataFrame = {
     // repartitionByRange IS the spread: it redistributes any input
     // layout across shuffle-partition count ranges, so a
-    // Spread.roundRobin here would only stack a second exchange under it.
+    // Spread here would only stack a second exchange under it.
     val sorted = df.repartitionByRange(col(orderCol))
       .sortWithinPartitions(col(orderCol))
     val schema = sorted.schema.add(outCol, LongType, nullable = false)
@@ -528,7 +528,7 @@ object Engine {
   def minHashNearDups(df: DataFrame, id: String, text: String,
       threshold: Double = 0.8, numHashes: Int = 64,
       bands: Int = 16, shingleWords: Int = 3): DataFrame = {
-    val docs = Spread.roundRobin(df)
+    val docs = Spread(df)
       .withColumn("__words", split(col(text), " "))
       .withColumn("__sv", wordNgrams(col("__words"), shingleWords))
       .select(col(id).as("__id"), col("__sv"))
@@ -1881,7 +1881,7 @@ object Engine {
   /** Internal: (__id, __text, __sv) — EVERY row of `df`, spread, with its
     * sorted distinct word n-gram set (empty below `ngramWords` words). */
   private def shingleFrame(df: DataFrame, id: String, text: String,
-      ngramWords: Int): DataFrame = Spread.roundRobin(df)
+      ngramWords: Int): DataFrame = Spread(df)
     .select(col(id).as("__id"), col(text).as("__text"), sort_array(
       wordNgrams(split(col(text), " "), ngramWords)).as("__sv"))
 
@@ -2395,7 +2395,7 @@ object Engine {
       // the writes undo the spread: the batch's own scan partitioning is
       // sized to its bytes, so a small batch lands one file per table
       // instead of one per spread partition
-      val width = batch.rdd.getNumPartitions
+      val width = Spread.width(batch)
       val dl = withShingles(sh)
       // NOTE (A/B, `dedup_ingest` benchmark: 20-doc batches at local[3]
       // on a 4-core host, 10 seed pairs alternating with the previous
@@ -2621,7 +2621,7 @@ object Engine {
     // per-token md5 + base-conv + 64 bit-sums otherwise run inside the
     // (row-group-bounded) scan stage — serial on the fixture inputs at
     // any core count (Spread scaladoc; guide §2.5). No-op at real scale.
-    val tok = Spread.byKey(df.select(id.as("doc_id"), text.as("__txt")),
+    val tok = Spread(df.select(id.as("doc_id"), text.as("__txt")),
         col("doc_id"))
       .select(col("doc_id"), explode(split(col("__txt"), " ")).as("__t"))
       .select(col("doc_id"), md5(col("__t")).as("__m"))
@@ -4421,7 +4421,7 @@ object Engine {
     // no codes, no error — distinct from the all-zero vector, which
     // quantizes to zero codes); emitting an all-NULL row instead would
     // just defer the malformed input to the consumer
-    val base = Spread.roundRobin(vecs).filter(size(col(vec)) >= 1)
+    val base = Spread(vecs).filter(size(col(vec)) >= 1)
       .select(col(id).as("vec_id"), col(vec).as("__v"))
       .withColumn("__scale",
         expr("array_max(transform(__v, x -> abs(CAST(x AS DOUBLE))))")
@@ -4449,7 +4449,7 @@ object Engine {
     * partitioning. */
   private def dsirBuckets(docs: DataFrame, id: Column, text: Column,
       isTarget: Column, buckets: Int): DataFrame = {
-    val d = Spread.roundRobin(docs.select(id.as("__id"),
+    val d = Spread(docs.select(id.as("__id"),
       isTarget.as("__tgt"), split(text, " ").as("__w")))
     d.select(col("__id"), col("__tgt"),
         explode(concat(col("__w"), positionalNgrams(col("__w"), 2)))
@@ -4590,7 +4590,7 @@ object Engine {
       centroids: DataFrame, cid: String, cvec: String,
       cap: Int): DataFrame = {
     require(cap >= 1)
-    val cells = nearestCells(Spread.roundRobin(vecs)
+    val cells = nearestCells(Spread(vecs)
         .select(col(id).as("__vid"), col(vec).as("__e")),
         "__vid", "__e", centroids, cid, cvec, probe = 1)
       .select(col("__vid"), col("__ccid").as("cell"))
@@ -6280,7 +6280,7 @@ object Engine {
     // group scan would otherwise build every basket's set serially in
     // the map-side partial, and hashing on __b lets the groupBy reuse
     // this same exchange instead of adding one.
-    val baskets = Spread.byKey(
+    val baskets = Spread(
         df.filter(basket.isNotNull && item.isNotNull)
           .select(basket.as("__b"), item.as("__i")), col("__b"))
       .groupBy(col("__b"))

@@ -287,7 +287,7 @@ object Scalars {
       val k = get_json_object(col("props"), "$.k").cast("int")
       // three per-row JSON parses otherwise run inside the single-row-
       // group scan task (Spread scaladoc; guide §2.5)
-      graft.Spread.byKey(Tables.t(s, dir, "events"), col("event_id"))
+      graft.Spread(Tables.t(s, dir, "events"), col("event_id"))
         .select(
         col("event_id"),
         k.as("k"),

@@ -37,7 +37,7 @@ object Aggregates {
         val li = Tables.t(s, dir, "lineitem")
         // spread the single-row-group scan before the 7-measure decimal
         // partial aggregate (Spread scaladoc; guide §2.5)
-        orderAll(Spread.byKey(li
+        orderAll(Spread(li
           .filter(col("l_shipdate") <= lit("1998-09-02 00:00:00").cast("timestamp")),
             col("l_orderkey"))
           .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -149,7 +149,7 @@ object Aggregates {
          |GROUP BY ROLLUP(l_returnflag, l_linestatus)
          |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST, gid NULLS FIRST""".stripMargin) {
       (s, dir) =>
-        orderAll(Spread.byKey(Tables.t(s, dir, "lineitem"),
+        orderAll(Spread(Tables.t(s, dir, "lineitem"),
             col("l_orderkey"))
           .rollup(col("l_returnflag"), col("l_linestatus"))
           .agg(
@@ -174,7 +174,7 @@ object Aggregates {
          |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST,
          |  gid NULLS FIRST""".stripMargin) {
       (s, dir) =>
-        orderAll(Spread.byKey(Tables.t(s, dir, "lineitem"),
+        orderAll(Spread(Tables.t(s, dir, "lineitem"),
             col("l_orderkey"))
           .cube(col("l_returnflag"), col("l_linestatus"))
           .agg(
@@ -200,7 +200,7 @@ object Aggregates {
          |  (l_linestatus), ())
          |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST, gid NULLS FIRST""".stripMargin) {
       (s, dir) =>
-        orderAll(Spread.byKey(Tables.t(s, dir, "lineitem"),
+        orderAll(Spread(Tables.t(s, dir, "lineitem"),
             col("l_orderkey"))
           .groupingSets(
             Seq(Seq(col("l_returnflag"), col("l_linestatus")),
@@ -237,7 +237,7 @@ object Aggregates {
       // the oracle hashes.
       val ord = struct(unix_timestamp(col("l_shipdate")).as("e"),
         col("l_orderkey").as("k"))
-      orderAll(Spread.byKey(Tables.t(s, dir, "lineitem"),
+      orderAll(Spread(Tables.t(s, dir, "lineitem"),
           col("l_orderkey"))
         .groupBy(col("l_returnflag"))
         .agg(
@@ -302,7 +302,7 @@ object Aggregates {
       """SELECT l_returnflag, true AS within_tol
         |FROM lineitem GROUP BY l_returnflag
         |ORDER BY l_returnflag NULLS FIRST""".stripMargin) { (s, dir) =>
-      orderAll(Spread.byKey(Tables.t(s, dir, "lineitem"),
+      orderAll(Spread(Tables.t(s, dir, "lineitem"),
           col("l_orderkey"))
         .groupBy(col("l_returnflag"))
         .agg(expr("approx_percentile(l_extendedprice, 0.5D)").as("ap"),
@@ -463,7 +463,7 @@ object Aggregates {
     }) { (s, dir) =>
       val x = col("l_quantity")
       val y = col("l_extendedprice")
-      val mo = Spread.byKey(Tables.t(s, dir, "lineitem"),
+      val mo = Spread(Tables.t(s, dir, "lineitem"),
           col("l_orderkey"))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).cast("double").as("n"),

@@ -2205,7 +2205,7 @@ object LlmPipeline {
         // four per-row regex passes over the full text otherwise run
         // inside the single-row-group scan task (Spread scaladoc;
         // measured 25.6 s wall / 29.5 s task-time at 30× — serial)
-        orderAll(graft.Spread.byKey(Tables.t(s, dir, "documents"),
+        orderAll(graft.Spread(Tables.t(s, dir, "documents"),
             col("doc_id"))
           .select(col("doc_id"), raw.as("raw"))
           .select(col("doc_id"),

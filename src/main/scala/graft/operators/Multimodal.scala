@@ -438,7 +438,7 @@ object Multimodal {
   def extractFeatures(blobs: Dataset[MediaBlob], decoder: MediaDecoder)(
       implicit s: SparkSession): Dataset[MediaFeatures] = {
     import s.implicits._
-    Spread.roundRobin(blobs).mapPartitions { it =>
+    Spread(blobs).mapPartitions { it =>
       decoder.open()
       it.map(decoder.decode)
     }
@@ -487,7 +487,7 @@ object Multimodal {
       implicit s: SparkSession): Dataset[ThumbFeatures] = {
     require(side >= 1)
     import s.implicits._
-    Spread.roundRobin(blobs).mapPartitions { it =>
+    Spread(blobs).mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false)
       it.map { b =>
         val img = javax.imageio.ImageIO.read(
@@ -532,7 +532,7 @@ object Multimodal {
     require(side >= 1 && side <= 8, "aHash packs side*side bits into i64")
     import s.implicits._
     val n = side * side
-    Spread.roundRobin(blobs).mapPartitions { it =>
+    Spread(blobs).mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false)
       it.map { b =>
         val img = javax.imageio.ImageIO.read(
@@ -573,7 +573,7 @@ object Multimodal {
   def sampleFrames(blobs: Dataset[MediaBlob], stride: Int)(
       implicit s: SparkSession): Dataset[FrameSample] = {
     import s.implicits._
-    Spread.roundRobin(blobs).mapPartitions { it =>
+    Spread(blobs).mapPartitions { it =>
       it.flatMap { b =>
         AviDecoder.frameMeans(b, stride).map { case (idx, mean) =>
           FrameSample(b.doc_id, idx, mean)
@@ -594,7 +594,7 @@ object Multimodal {
   def clipShingles(blobs: Dataset[MediaBlob])(
       implicit s: SparkSession): Dataset[ClipShingle] = {
     import s.implicits._
-    Spread.roundRobin(blobs).mapPartitions { it =>
+    Spread(blobs).mapPartitions { it =>
       it.flatMap { b =>
         AviDecoder.frameMeans(b, stride = 1).map(_._2)
           .sliding(3).filter(_.size == 3).zipWithIndex.map {
@@ -635,7 +635,7 @@ object Multimodal {
       implicit s: SparkSession): Dataset[AudioSample] = {
     require(factor >= 1)
     import s.implicits._
-    Spread.roundRobin(blobs).mapPartitions { it =>
+    Spread(blobs).mapPartitions { it =>
       val reader = WavCodec.open() // one provider walk per partition
       it.map { b =>
         val (pcm, _) = WavCodec.pcm(reader, b)
@@ -670,7 +670,7 @@ object Multimodal {
       threshold: Long)(implicit s: SparkSession): Dataset[VadStats] = {
     require(window >= 1 && threshold >= 0)
     import s.implicits._
-    Spread.roundRobin(blobs).mapPartitions { it =>
+    Spread(blobs).mapPartitions { it =>
       val reader = WavCodec.open() // one provider walk per partition
       it.map { b =>
         val (pcm, _) = WavCodec.pcm(reader, b)
@@ -714,7 +714,7 @@ object Multimodal {
       implicit s: SparkSession): Dataset[SceneStats] = {
     require(threshold > 0)
     import s.implicits._
-    Spread.roundRobin(blobs).mapPartitions { it =>
+    Spread(blobs).mapPartitions { it =>
       it.map { b =>
         val means = AviDecoder.frameMeans(b, stride = 1).toArray
         var changes = 0
@@ -776,7 +776,7 @@ object Multimodal {
   def extractWavFeatures(blobs: Dataset[MediaBlob])(
       implicit s: SparkSession): Dataset[MediaFeatures] = {
     import s.implicits._
-    Spread.roundRobin(blobs).mapPartitions { it =>
+    Spread(blobs).mapPartitions { it =>
       val reader = WavCodec.open()
       it.map(b => WavDecoder.decodeWith(reader, b))
     }
@@ -787,7 +787,7 @@ object Multimodal {
   def extractGeoFeatures(blobs: Dataset[MediaBlob])(
       implicit s: SparkSession): Dataset[GeoRasterFeatures] = {
     import s.implicits._
-    Spread.roundRobin(blobs).mapPartitions { it =>
+    Spread(blobs).mapPartitions { it =>
       val reader = GeoTiffDecoder.open()
       withDispose(it.map(b => GeoTiffDecoder.decode(reader, b)), reader)
     }
@@ -921,7 +921,7 @@ object Multimodal {
   def extractGeoTiles(blobs: Dataset[MediaBlob])(
       implicit s: SparkSession): Dataset[GeoRasterTile] = {
     import s.implicits._
-    Spread.roundRobin(blobs).mapPartitions { it =>
+    Spread(blobs).mapPartitions { it =>
       val reader = GeoTiffDecoder.open()
       withDispose(it.map(b => GeoTiffTileDecoder.decodeTile(reader, b)),
         reader)

@@ -304,7 +304,7 @@ object Sources {
         // spread the write side so the fs.create/write/close round-trips
         // run on all cores (Spread scaladoc; guide §2.5). Read side and
         // the returned plan are untouched.
-        graft.Spread.byKey(Tables.t(s, dir, "documents")
+        graft.Spread(Tables.t(s, dir, "documents")
           .filter(col("doc_id") < 200).select("doc_id", "text"),
             col("doc_id"))
           .foreachPartition { (it: Iterator[Row]) =>

@@ -58,26 +58,18 @@ class IoEnvelopeSpec extends AnyFunSuite {
 
   test("hotspot queries' cold shuffle volume stays inside the envelope") {
     val written = new java.util.concurrent.atomic.AtomicLong()
-    val lastEvent =
-      new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(
           e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         val m = e.taskMetrics
         if (m != null) written.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
-        lastEvent.set(System.nanoTime())
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    def drain(): Unit = {
-      // listener events are async (the Bench.drainTaskEvents rationale):
-      // wait for a quiet window so a query's last deltas land in ITS
-      // snapshot
-      val deadline = System.nanoTime() + 2_000_000_000L
-      while (System.nanoTime() < deadline &&
-          System.nanoTime() - lastEvent.get() < 100_000_000L)
-        Thread.sleep(10)
-    }
+    // listener events are async: drain the bus so a query's last deltas
+    // land in ITS snapshot
+    def drain(): Unit =
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
     try {
       // measure ALL queries before judging any: one run yields the full
       // set of current values even when several envelopes move at once

@@ -180,6 +180,23 @@ class OracleLintSpec extends AnyFunSuite {
       .foreach(l => assert(kernel.findFirstIn(l).isEmpty, l))
   }
 
+  test("input spread: getNumPartitions is spelled in exactly one place under src/main/scala") {
+    // one guard decides whether an input spreads (Spread), and it and the
+    // ingest write width read the input's width through Spread.width; a
+    // second read is a copied guard whose threshold can drift
+    val read = """\bgetNumPartitions\b""".r
+    val found = scalaLines("src/main/scala")((_, line) =>
+      read.findFirstIn(line).isDefined)
+    assert(found.size == 1, found.mkString("\n"))
+    // the detector fires on the read spellings and passes the helper
+    Seq("ds.rdd.getNumPartitions", "batch.rdd.getNumPartitions * 2 < want",
+      "df.rdd.getNumPartitions()", "scan.inputRDD.getNumPartitions == 1")
+      .foreach(l => assert(read.findFirstIn(l).isDefined, l))
+    Seq("val width = Spread.width(batch)", "Spread(df, col(\"k\"))",
+      "rdd.partitions.length", "my_getNumPartitions(x)")
+      .foreach(l => assert(read.findFirstIn(l).isEmpty, l))
+  }
+
   test("vector scoring: the cosine kernel is invoked in exactly one place under src/main/scala") {
     // the vector family shares one rounded scorer (Engine.cosine); a
     // second invocation is a copied scorer whose rounding can drift from

@@ -336,9 +336,10 @@ class PlanSpec extends AnyFunSuite {
     val p = graft.operators.Multimodal.sceneChanges(blobs, 100.0)
       .queryExecution.executedPlan.toString
     // frame adjacency lives inside the blob: no keyed shuffle anywhere
-    // (the one RoundRobin exchange is Spread.roundRobin's decode
-    // balancer over BLOB rows; the registered query's orderAll sort is
-    // the driver-compare determinism wrapper — neither moves a frame).
+    // (a RoundRobin exchange is the keyless Spread's decode balancer
+    // over BLOB rows, absent here: 2 blobs are within 2× of local[4]; the
+    // registered query's orderAll sort is the driver-compare determinism
+    // wrapper — neither moves a frame).
     assert(!p.contains("hashpartitioning"), p)
     assert(!p.contains("rangepartitioning"), p)
     assert(!p.contains("SinglePartition"), p)
@@ -385,7 +386,7 @@ class PlanSpec extends AnyFunSuite {
   test("q92c/q95b: per-row quantize/redact plans carry no data shuffle") {
     // the ONLY exchanges allowed are the oracle-canonicalization range
     // sort and (q95b, r17) the REPARTITION_BY_NUM input spread directly
-    // above the scan — the Spread.byKey guard that parallelizes the
+    // above the scan — the keyed Spread guard that parallelizes the
     // row-group-bounded fixture scan before the per-row regex work (a
     // no-op at production split counts). A hashpartitioning exchange
     // ANYWHERE ELSE would mean the projection itself shuffled data —
@@ -397,6 +398,61 @@ class PlanSpec extends AnyFunSuite {
       assert(hashEx == spreadEx,
         s"$n: ${hashEx - spreadEx} non-spread hash exchange(s):\n$p")
     }
+  }
+
+  test("Spread: a 1-split scan spreads keyed or keyless, a 2-partition input passes through, and the width read fires no job") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
+      RoundRobinPartitioning}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+      ShuffleExchangeExec}
+    def exchanges(ds: org.apache.spark.sql.Dataset[_]) =
+      ds.queryExecution.executedPlan.collect {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.initialPlan.collect { case e: ShuffleExchangeExec => e }
+        case e: ShuffleExchangeExec => Seq(e)
+      }.flatten
+    val sc = spark.sparkContext
+    val scan = spark.read.parquet(s"${TestSpark.sfDir}/documents.parquet")
+    // the width read physically plans the scan: a file listing and split
+    // computation on the driver, no job
+    val group = "spread-width-read"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "Spread.width on a parquet scan")
+    val width = try {
+      val w = Spread.width(scan)
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      w
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0, s"${jobs.get} job(s) ran to read the scan's width")
+    assert(width == 1 && sc.defaultParallelism == 4)
+    // keyed: one hash exchange on the key, to the session parallelism
+    val keyed = exchanges(Spread(scan, col("doc_id")))
+    assert(keyed.size == 1 && keyed.head.shuffleOrigin == REPARTITION_BY_NUM,
+      keyed.mkString("\n"))
+    keyed.head.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), 4) => assert(a.name == "doc_id")
+      case other => fail(s"keyed spread partitions as $other")
+    }
+    // keyless: one round-robin exchange
+    val keyless = exchanges(Spread(scan))
+    assert(keyless.size == 1 &&
+      keyless.head.shuffleOrigin == REPARTITION_BY_NUM, keyless.mkString("\n"))
+    assert(keyless.head.outputPartitioning == RoundRobinPartitioning(4))
+    // within 2× of the cores: the same Dataset back, keyed or keyless
+    val two = spark.range(0, 8, 1, 2).toDF()
+    assert(Spread(two) eq two)
+    assert(Spread(two, col("id")) eq two)
   }
 
   test("q94g: the re-grid is one hash exchange on the target cell key") {
