@@ -1897,39 +1897,62 @@ object Engine {
     * and its shingle arrays `docs` (doc_id, grams — the exact-verify
     * side) are written once, appended per ingest slot WITHOUT touching
     * existing rows, probed with a new batch and compacted in place.
-    * Build, append, probe, compaction and the ingest loop are written
-    * ONCE over this type; a case decides only storage:
+    * Build, append, probe, compaction, its cadence ([[maybeCompact]])
+    * and the ingest loop are written ONCE over this type; a case decides
+    * only where a table lives, how it is read and its sink ([[save]]):
     *
-    *  - [[PathIndex]] — path parquet under `path/bands`, `path/docs`,
-    *    appends sorted within files on the probe key (row-group min/max
-    *    skipping), no maintenance after an append.
+    *  - [[PathIndex]] — path parquet under `path/bands`, `path/docs`.
     *  - [[BucketedIndex]] — catalog tables `<table>_bands` /
     *    `<table>_docs` written by an aligned `bucketBy`, so a probe's
-    *    history side is exchange-free by PLAN, with the
-    *    [[bucketCompactMaxFiles]] compaction cadence after each append.
+    *    history side is exchange-free by PLAN.
     *
     * Compaction temps are named by `at(sub, "compact")` /
     * `at(sub, "trash")` — `__compact_<sub>` / `__trash_<sub>` beside
     * the live table. */
   private[graft] sealed trait DedupIndex {
     def spark: org.apache.spark.sql.SparkSession
+    /** the standing parallelism of the history side: the bucket count,
+      * and the file count of each table after a compaction */
+    def numBuckets: Int
     /** live name of table `sub`, or of its compaction `stage` temp */
     def at(sub: String, stage: String = ""): String
+    /** the directory holding table `name`'s files */
+    def location(name: String): org.apache.hadoop.fs.Path
     def read(sub: String): DataFrame
     /** whether the probe pins its ids-only candidate broadcast (see
       * [[probeIndex]]) */
     def pinsProbe: Boolean
-    /** build (`overwrite`) or append both tables */
-    def write(bandRows: => DataFrame, docRows: => DataFrame,
-        overwrite: Boolean): Unit
-    /** maintenance the ingest loop runs after each append */
-    def afterAppend(): Unit
+    /** the sink: write `df` as table `name` clustered on `keys` */
+    def save(df: DataFrame, name: String, keys: Seq[String],
+        mode: String): Unit
     // compaction-swap primitives over a named table
     def exists(name: String): Boolean
-    def rewrite(from: String, to: String, keys: Seq[String]): Unit
     def rename(from: String, to: String): Unit
     def remove(name: String): Unit
     def refresh(name: String): Unit
+    final def fs: org.apache.hadoop.fs.FileSystem = location(at("bands"))
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    /** build or append both tables. A build drops the tables AND their
+      * locations first — an in-memory catalog forgets a table between
+      * JVMs but its location survives, and CREATE then fails with
+      * LOCATION_ALREADY_EXISTS. */
+    final def write(bandRows: => DataFrame, docRows: => DataFrame,
+        overwrite: Boolean): Unit = {
+      val mode = if (overwrite) "overwrite" else "append"
+      if (overwrite) Seq("bands", "docs").foreach(t => remove(at(t)))
+      Overlap.both(spark)(save(bandRows, at("bands"), BandKeys, mode),
+        save(docRows, at("docs"), DocKeys, mode)): Unit
+    }
+    /** the compaction rewrite: `numBuckets` files hash-clustered on
+      * `keys`, the placement a bucket spec uses. It reads the table's
+      * FILES as plain parquet, not the table: a bucketed scan
+      * advertises HashPartitioning(keys, numBuckets), so the planner
+      * would ELIDE the repartition while the scan runs one partition
+      * per FILE, and the rewrite would compact nothing. */
+    final def rewrite(from: String, to: String, keys: Seq[String]): Unit =
+      save(spark.read.parquet(location(from).toString)
+        .repartition(numBuckets, keys.map(col): _*), to, keys,
+        "errorifexists")
   }
 
   /** clustering key of each index table — the key it is probed,
@@ -1938,18 +1961,17 @@ object Engine {
   private val DocKeys = Seq("doc_id")
 
   /** Path-parquet dedup index. Path-based parquet cannot carry bucket
-    * metadata (a catalog property, not an engine limit), so the probe
-    * table is only sorted within files; compaction rewrites each table
-    * range-clustered on its key into `compactFiles` files. */
+    * metadata (a catalog property, not an engine limit), so an append
+    * is only sorted within its files; a compaction clusters the table. */
   private[graft] final case class PathIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, compactFiles: Int = 8,
+      path: String, numBuckets: Int = 8,
       idType: Option[org.apache.spark.sql.types.DataType] = None)
       extends DedupIndex {
-    require(compactFiles >= 1)
-    private def fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(numBuckets >= 1)
     def at(sub: String, stage: String = ""): String =
       if (stage.isEmpty) s"$path/$sub" else s"$path/__${stage}_$sub"
+    def location(name: String): org.apache.hadoop.fs.Path =
+      new org.apache.hadoop.fs.Path(name)
     // with the doc id type known (the ingest loop wrote every row) the
     // read skips parquet schema inference, which is a job per read
     def read(sub: String): DataFrame = idType.fold(spark.read) { t =>
@@ -1960,29 +1982,20 @@ object Engine {
         else Seq(StructField("grams", ArrayType(StringType))))))
     }.parquet(at(sub))
     def pinsProbe: Boolean = true
-    def write(bandRows: => DataFrame, docRows: => DataFrame,
-        overwrite: Boolean): Unit = {
-      val mode = if (overwrite) "overwrite" else "append"
-      Overlap.both(spark)(
-        // file-local sort on the probe key: row-group min/max skipping
-        bandRows.sortWithinPartitions(BandKeys.map(col): _*)
-          .write.mode(mode).parquet(at("bands")),
-        docRows.write.mode(mode).parquet(at("docs"))): Unit
-    }
-    def afterAppend(): Unit = ()
-    def exists(name: String): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(name))
-    def rewrite(from: String, to: String, keys: Seq[String]): Unit =
-      spark.read.parquet(from)
-        .repartitionByRange(compactFiles, keys.map(col): _*)
-        .sortWithinPartitions(keys.map(col): _*)
-        .write.mode("overwrite").parquet(to)
+    // the probe pushes no filter into the scan, so the sort skips no row
+    // group; it is kept for size: a compacted bands table, most of a
+    // long-lived index, is 3.6 % smaller sorted at sf0.01 (3.8 % at
+    // sf0.1), while an append's file is 7–12 % larger until compacted
+    def save(df: DataFrame, name: String, keys: Seq[String],
+        mode: String): Unit =
+      df.sortWithinPartitions(keys.map(col): _*)
+        .write.mode(mode).parquet(name)
+    def exists(name: String): Boolean = fs.exists(location(name))
     def rename(from: String, to: String): Unit =
-      require(fs.rename(new org.apache.hadoop.fs.Path(from),
-        new org.apache.hadoop.fs.Path(to)), s"rename $from -> $to failed")
+      require(fs.rename(location(from), location(to)),
+        s"rename $from -> $to failed")
     def remove(name: String): Unit =
-      if (exists(name))
-        fs.delete(new org.apache.hadoop.fs.Path(name), true): Unit
+      if (exists(name)) fs.delete(location(name), true): Unit
     // a rename is not a writer, so nothing else invalidates the
     // session's cached listings for this path — a persisted plan over
     // the pre-swap read can later recompute against files the swap
@@ -2003,6 +2016,11 @@ object Engine {
     require(numBuckets >= 1)
     def at(sub: String, stage: String = ""): String =
       if (stage.isEmpty) s"${table}_$sub" else s"${table}__${stage}_$sub"
+    // the one place a catalog table's location is resolved: the table
+    // is managed, so it lives at the default path of its name
+    def location(name: String): org.apache.hadoop.fs.Path =
+      new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+        .defaultTablePath(org.apache.spark.sql.catalyst.TableIdentifier(name)))
     def read(sub: String): DataFrame = spark.table(at(sub))
     // an explicit broadcast hint would mask the structural SMJ
     def pinsProbe: Boolean = false
@@ -2012,53 +2030,22 @@ object Engine {
       * uses, so every write task holds one bucket and emits ONE file.
       * Without it a 32-partition append landed up to 32 files in EVERY
       * bucket (INGEST_PROFILE.json's 1.3→4.3 s probe curve was mostly
-      * this). A build drops the tables AND their managed locations
-      * first — an in-memory catalog forgets a table between JVMs but
-      * its location survives, and CREATE then fails with
-      * LOCATION_ALREADY_EXISTS. */
-    def write(bandRows: => DataFrame, docRows: => DataFrame,
-        overwrite: Boolean): Unit = {
-      val mode = if (overwrite) "overwrite" else "append"
-      if (overwrite) Seq("bands", "docs").foreach(t => remove(at(t)))
-      Overlap.both(spark)(save(bandRows, at("bands"), BandKeys, mode),
-        save(docRows, at("docs"), DocKeys, mode)): Unit
-    }
-    private def save(df: DataFrame, name: String, keys: Seq[String],
+      * this). */
+    def save(df: DataFrame, name: String, keys: Seq[String],
         mode: String): Unit =
       df.repartition(numBuckets, keys.map(col): _*)
         .write.mode(mode)
         .bucketBy(numBuckets, keys.head, keys.tail: _*)
         .sortBy(keys.head, keys.tail: _*)
         .format("parquet").saveAsTable(name)
-    // each append adds one file per bucket, and the probe's listing +
-    // file-open cost grows with that count; folding each bucket back to
-    // one sorted file every [[bucketCompactMaxFiles]] appends holds the
-    // probe flat (INGEST_PROFILE.json: ~0.95 s/slot over 31 appends)
-    def afterAppend(): Unit =
-      maybeCompactBucketedIndex(spark, table, numBuckets): Unit
     def exists(name: String): Boolean = spark.catalog.tableExists(name)
-    // read the table's FILES as plain parquet, not spark.table: the
-    // bucketed scan advertises HashPartitioning(keys, numBuckets), so
-    // the planner ELIDES the aligning repartition while the scan runs
-    // one partition per FILE — the rewrite would then compact nothing
-    def rewrite(from: String, to: String, keys: Seq[String]): Unit =
-      save(spark.read.parquet(spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(from)).location
-        .toString), to, keys, "errorifexists")
     def rename(from: String, to: String): Unit =
       spark.sql(s"ALTER TABLE `$from` RENAME TO `$to`"): Unit
-    def remove(name: String): Unit = dropManagedTable(spark, name)
+    def remove(name: String): Unit = {
+      spark.sql(s"DROP TABLE IF EXISTS `$name`")
+      if (fs.exists(location(name))) fs.delete(location(name), true): Unit
+    }
     def refresh(name: String): Unit = spark.catalog.refreshTable(name)
-  }
-
-  private def dropManagedTable(
-      spark: org.apache.spark.sql.SparkSession, t: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$t`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(t)))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true): Unit
   }
 
   /** Build or append an index from a raw (id, text) frame. Appends are
@@ -2121,6 +2108,24 @@ object Engine {
     // §2.6); each swap's internal order is unchanged
     Overlap.both(ix.spark)(swap("bands", BandKeys),
       swap("docs", DocKeys)): Unit
+  }
+
+  /** Compaction CADENCE gate, run by the ingest loop after each append:
+    * count the bands table's data files (cheap — one listStatus, and
+    * the file count IS the cost being bounded) and compact when the
+    * average per-bucket file count exceeds `maxFilesPerBucket`. Returns
+    * whether it compacted, so a caller can mark the sawtooth teeth. */
+  private def maybeCompact(ix: DedupIndex,
+      maxFilesPerBucket: Int = bucketCompactMaxFiles): Boolean = {
+    require(maxFilesPerBucket >= 1)
+    val loc = ix.location(ix.at("bands"))
+    val nFiles =
+      if (!ix.fs.exists(loc)) 0
+      else ix.fs.listStatus(loc).count(s => s.isFile &&
+        !s.getPath.getName.startsWith("_"))
+    val due = nFiles > ix.numBuckets.toLong * maxFilesPerBucket
+    if (due) compactIndex(ix)
+    due
   }
 
   /** Probe an index with a new batch: (left_id = batch doc, right_id =
@@ -2223,10 +2228,10 @@ object Engine {
 
   /** COMPACT a [[buildMinHashIndex]] index in place through the shared
     * crash-recoverable swap ([[compactIndex]]): each table is rewritten
-    * RANGE-CLUSTERED on its key (bands on (__band, __bh), docs on
-    * doc_id) into `files` sorted files — strictly better layout than
-    * the original build. Size `files` to table volume /
-    * healthy-scan-partition at deployment. */
+    * HASH-CLUSTERED on its key (bands on (__band, __bh), docs on
+    * doc_id) into `files` files, the placement the bucketed index
+    * uses. Size `files` to table volume / healthy-scan-partition at
+    * deployment. */
   def compactMinHashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, files: Int = 8): Unit =
     compactIndex(PathIndex(spark, path, files))
@@ -2260,35 +2265,21 @@ object Engine {
       table: String, numBuckets: Int = 8): Unit =
     compactIndex(BucketedIndex(spark, table, numBuckets))
 
-  /** Compaction CADENCE gate for the bucketed-index ingest loop: count
-    * the bands table's data files on the filesystem (cheap — one
-    * listStatus of ≤ buckets × appends entries, and the file count IS
-    * the cost being bounded) and compact when the average per-bucket
-    * file count exceeds `maxFilesPerBucket`. Returns whether it
-    * compacted, so a caller can mark the sawtooth teeth. */
+  /** [[maybeCompact]] over a [[buildMinHashIndexBucketed]] index. */
   def maybeCompactBucketedIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, numBuckets: Int = 8,
-      maxFilesPerBucket: Int = bucketCompactMaxFiles): Boolean = {
-    require(maxFilesPerBucket >= 1)
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(s"${table}_bands")))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nFiles =
-      if (!fs.exists(loc)) 0
-      else fs.listStatus(loc).count(s => s.isFile &&
-        !s.getPath.getName.startsWith("_"))
-    val due = nFiles > numBuckets.toLong * maxFilesPerBucket
-    if (due) compactBucketedIndex(spark, table, numBuckets)
-    due
-  }
+      maxFilesPerBucket: Int = bucketCompactMaxFiles): Boolean =
+    maybeCompact(BucketedIndex(spark, table, numBuckets), maxFilesPerBucket)
 
-  /** Default files-per-bucket compaction threshold for
-    * [[maybeCompactBucketedIndex]] (`-Dgraft.bucketCompactMaxFiles`
-    * overrides, ≥ 1). Deployment sizing: each append adds one file per
-    * bucket, so the threshold is the append count between compactions —
-    * pay one in-bucket rewrite every K appends to keep probe listing +
-    * file-open cost bounded at K files/bucket instead of unbounded. */
+  /** Default files-per-bucket threshold of [[maybeCompact]] on both
+    * index backends (`-Dgraft.bucketCompactMaxFiles` overrides, ≥ 1).
+    * Deployment sizing: a bucketed append adds one file per bucket, so
+    * the threshold is the append count between compactions — pay one
+    * in-bucket rewrite every K appends to keep probe listing +
+    * file-open cost bounded at K files/bucket instead of unbounded
+    * (INGEST_PROFILE.json: ~0.95 s/slot over 31 appends). A path index
+    * counts its `numBuckets` post-compaction files as buckets, so
+    * one-file appends compact every `numBuckets × K` appends. */
   def bucketCompactMaxFiles: Int = BucketCompactMaxFiles.value.toInt
   private[graft] val BucketCompactMaxFiles =
     Knob("bucketCompactMaxFiles", 8, min = 1)
@@ -2364,7 +2355,7 @@ object Engine {
       text, batchOf, indexPath, thresholdPct, numHashes, bands, ngramWords)
 
   /** The one ingest loop behind [[dedupIngest]] / [[dedupIngestBucketed]]. */
-  private def ingest(ix: DedupIndex, docs: DataFrame, id: String,
+  private[graft] def ingest(ix: DedupIndex, docs: DataFrame, id: String,
       text: String, batchOf: Column, indexPath: String, thresholdPct: Int,
       numHashes: Int, bands: Int, ngramWords: Int): DataFrame = {
     val spark = docs.sparkSession
@@ -2439,7 +2430,7 @@ object Engine {
         Seq("__id"), "left_semi"))
       writeDocTable(ix, survivors.coalesce(width), numHashes, bands,
         overwrite = i == 0)
-      if (i > 0) ix.afterAppend()
+      if (i > 0) maybeCompact(ix): Unit
       // release this batch's caches: a long-running loop must not pin
       // one set of blocks per batch for the session's life
       // (dependents first, or uncaching `sh` would re-plan them)

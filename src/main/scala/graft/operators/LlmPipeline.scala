@@ -1231,9 +1231,9 @@ object LlmPipeline {
     // Q90t (beyond-survey) — dedup-index COMPACTION
     // ([[graft.Engine.compactMinHashIndex]]): the maintenance half of
     // the q90m lifecycle — every append lands a small-file wave, so a
-    // long-lived index accumulates files and loses in-file probe-key
-    // clustering; compaction rewrites both tables RANGE-CLUSTERED on
-    // their keys behind a two-rename swap that the next compaction
+    // long-lived index accumulates files; compaction rewrites both
+    // tables HASH-CLUSTERED on their keys (the bucketed index's
+    // placement) behind a two-rename swap that the next compaction
     // rolls forward or back after a crash (the A16 discipline). Rows are
     // untouched, so the oracle is q90m's probe VERBATIM — the hash
     // match proves compaction is invisible to results while the spec
@@ -1267,7 +1267,7 @@ object LlmPipeline {
       val batch = docs.filter(col("doc_id") % 5 === 0)
       val hist = docs.filter(col("doc_id") % 5 =!= 0)
       val path = IO.scratch("q90t_index_compaction", dir)
-      // FOUR append waves on top of the build — the small-file
+      // one append wave on top of the build — the small-file
       // accumulation compaction exists for
       graft.Engine.buildMinHashIndex(
         hist.filter(col("doc_id") % 10 =!= 4), "doc_id", "text", path)

@@ -798,6 +798,54 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  test("dedupIngest: the ingest loop compacts a path index on the " +
+      "bucketed cadence, and its survivors equal the bucketed loop's") {
+    val batches = 31
+    // the fixture is one parquet file, so every batch is one scan
+    // partition and each append lands one bands file
+    val docs = Tables.t(spark, TestSpark.sfDir, "documents")
+      .withColumn("slot", col("doc_id") % batches)
+    val path = java.nio.file.Files
+      .createTempDirectory("ingest_cadence").toString
+    def bandFiles(): Int = Option(new java.io.File(s"$path/bands")
+      .listFiles()).fold(0)(_.count(_.getName.startsWith("part-")))
+    // one bucket: the cadence compacts past bucketCompactMaxFiles files.
+    // The count is sampled at every job end; each sample is a state the
+    // directory really had while the loop ran
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val sampler = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        seen.add(bandFiles())
+    }
+    def survivors(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    spark.sparkContext.addSparkListener(sampler)
+    try {
+      val viaPath = survivors(Engine.ingest(
+        Engine.PathIndex(spark, path, numBuckets = 1,
+          idType = Some(docs.schema("doc_id").dataType)),
+        docs, "doc_id", "text", col("slot"), path, thresholdPct = 60,
+        numHashes = 64, bands = 16, ngramWords = 2))
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+      val bound = Engine.bucketCompactMaxFiles + 1
+      val counts = seen.asScala.map(_.intValue).toSeq :+ bandFiles()
+      assert(counts.max <= bound,
+        s"bands files exceeded $bound: ${counts.mkString(",")}")
+      // an append never deletes a file, so a drop is a compaction
+      assert(counts.zip(counts.tail).exists { case (a, b) => b < a },
+        s"no compaction: ${counts.mkString(",")}")
+      assert(viaPath.nonEmpty)
+      withIngest("bucketed") { ingest =>
+        assert(survivors(ingest(docs, 16)) == viaPath)
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(sampler)
+      graft.sources.IO.deleteRec(new java.io.File(path))
+    }
+  }
+
   test("dedupIngest: a doc too short to shingle in a later batch is " +
       "accepted but never enters the index (both backends)") {
     import spark.implicits._

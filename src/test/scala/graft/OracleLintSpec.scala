@@ -197,6 +197,33 @@ class OracleLintSpec extends AnyFunSuite {
       .foreach(l => assert(read.findFirstIn(l).isEmpty, l))
   }
 
+  test("catalog tables: a table's location is resolved in exactly one place under src/main/scala") {
+    // the bucketed dedup index resolves its tables' directories in one
+    // place (BucketedIndex.location), which its drop, its compaction
+    // cadence and its compaction rewrite all read; a second lookup is a
+    // copy that can drift from it
+    val default = """\bdefaultTablePath\s*\(""".r
+    val metadata = """\bgetTableMetadata\s*\(""".r
+    def lookups(pattern: scala.util.matching.Regex) =
+      scalaLines("src/main/scala")((_, line) =>
+        pattern.findFirstIn(line).isDefined)
+    val found = lookups(default)
+    assert(found.size == 1, found.mkString("\n"))
+    val read = lookups(metadata)
+    assert(read.isEmpty, read.mkString("\n"))
+    // the detectors fire on the call spellings and pass the name alone
+    Seq("spark.sessionState.catalog.defaultTablePath(",
+      "catalog.defaultTablePath (TableIdentifier(t))")
+      .foreach(l => assert(default.findFirstIn(l).isDefined, l))
+    Seq("catalog.getTableMetadata(TableIdentifier(from)).location",
+      "getTableMetadata (id)")
+      .foreach(l => assert(metadata.findFirstIn(l).isDefined, l))
+    Seq("def location(name: String): Path", "the defaultTablePath rule",
+      "my_defaultTablePath(x)", "getTableMetadataOption(id)")
+      .foreach(l => assert(default.findFirstIn(l).isEmpty &&
+        metadata.findFirstIn(l).isEmpty, l))
+  }
+
   test("vector scoring: the cosine kernel is invoked in exactly one place under src/main/scala") {
     // the vector family shares one rounded scorer (Engine.cosine); a
     // second invocation is a copied scorer whose rounding can drift from
